@@ -1864,7 +1864,8 @@ object Curation extends QueryModule {
           graft.streaming.StreamingCalibration.fold(s, base,
             scored.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "margin", "is_pos", binWidth = 1024L, clamp = 64L)
+            "margin", "is_pos", batchId = i, binWidth = 1024L,
+            clamp = 64L)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingCalibration.compactBins(s, base)
         }
@@ -1903,7 +1904,8 @@ object Curation extends QueryModule {
         for (i <- 0L until 3L) {
           graft.streaming.StreamingEval.fold(s, base,
             rows.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3), "y", "pred")
+              col("doc_id") < (i + 1) * maxId / 3), "y", "pred",
+            batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingEval.compact(s, base)
         }
@@ -1969,7 +1971,7 @@ object Curation extends QueryModule {
           graft.streaming.StreamingConformal.fold(s, base,
             rows.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "nonconf", "is_cal")
+            "nonconf", "is_cal", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingConformal.compact(s, base)
         }
@@ -2026,7 +2028,7 @@ object Curation extends QueryModule {
           graft.streaming.StreamingConformal.foldByGroup(s, base,
             rows.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "lang", "nonconf", "is_cal", batchTag = Some(i))
+            "lang", "nonconf", "is_cal", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingConformal.compactByGroup(s, base)
         }
@@ -2082,7 +2084,7 @@ object Curation extends QueryModule {
           graft.streaming.StreamingEcdf.fold(s, base,
             docs.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "source", "n_chars", binWidth = 8L, batchTag = Some(i))
+            "source", "n_chars", binWidth = 8L, batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingEcdf.compact(s, base)
         }
@@ -2175,7 +2177,7 @@ object Curation extends QueryModule {
           graft.streaming.StreamingDsir.fold(s, base,
             docs.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "doc_id", "text", buckets = 1024, batchTag = Some(i))
+            "doc_id", "text", batchId = i, buckets = 1024)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingDsir.compact(s, base)
         }

@@ -283,7 +283,7 @@ object Mining extends QueryModule {
           graft.streaming.StreamingMixing.fold(s, base,
             docs.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "lang", batchTag = Some(i))
+            "lang", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingMixing.compact(s, base)
         }

@@ -536,7 +536,7 @@ object Pipeline extends QueryModule {
           graft.streaming.StreamingWinsorize.fold(s, base,
             ev.where(col("event_id") >= i * maxId / 3 &&
               col("event_id") < (i + 1) * maxId / 3),
-            "value", batchTag = Some(i))
+            "value", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingWinsorize.compact(s, base)
         }
@@ -579,7 +579,7 @@ object Pipeline extends QueryModule {
           graft.streaming.StreamingWinsorize.foldByGroup(s, base,
             ev.where(col("event_id") >= i * maxId / 3 &&
               col("event_id") < (i + 1) * maxId / 3),
-            "event_type", "value", batchTag = Some(i))
+            "event_type", "value", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingWinsorize.compactByGroup(s, base)
         }

@@ -346,7 +346,7 @@ object Warehouse extends QueryModule {
           graft.streaming.StreamingDrift.fold(s, base,
             live.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "source", batchTag = Some(i))
+            "source", batchId = i)
         graft.streaming.StreamingDrift.reportPsi(s, base,
           docs.where(col("doc_id") % 2 === 0), "source")
       },
@@ -370,7 +370,7 @@ object Warehouse extends QueryModule {
           graft.streaming.StreamingDrift.fold(s, base,
             live.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "source", batchTag = Some(i))
+            "source", batchId = i)
           if (i == 1L) // mid-run compaction is answer-preserving
             graft.streaming.StreamingDrift.compact(s, base)
         }
@@ -410,7 +410,7 @@ object Warehouse extends QueryModule {
           graft.streaming.StreamingDrift.foldNumeric(s, base,
             live.where(col("doc_id") >= i * maxId / 3 &&
               col("doc_id") < (i + 1) * maxId / 3),
-            "n_chars", binWidth = 64L, batchTag = Some(i))
+            "n_chars", binWidth = 64L, batchId = i)
         graft.streaming.StreamingDrift.reportNumeric(s, base,
           docs.where(col("doc_id") % 2 === 0), "n_chars", binWidth = 64L)
       },

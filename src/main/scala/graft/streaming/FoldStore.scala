@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Crash-safe stage-and-swap for the package's append-only fold-delta
   * artifacts (r13 ADVICE): the old idiom staged the merged state into a
@@ -28,6 +29,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * contract) make the heal race-free. */
 object FoldStore {
 
+  /** The Hadoop filesystem that holds `path`, under the session's
+    * Hadoop configuration. */
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def asidePath(root: Path) = new Path(root.toString + "_old")
   private def stagePath(root: Path) = new Path(root.toString + "_c")
 
@@ -42,6 +48,10 @@ object FoldStore {
     if (live && fs.exists(aside)) fs.delete(aside, true)
     live
   }
+
+  /** Delete `root` and any swap leftovers beside it (fresh run). */
+  def clear(fs: FileSystem, root: Path): Unit =
+    for (p <- Seq(root, asidePath(root), stagePath(root))) fs.delete(p, true)
 
   /** [[recover]], then the existence answer read sides branch on. */
   def exists(fs: FileSystem, root: Path): Boolean = recover(fs, root)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Streamed isotonic calibration — the incremental half of
@@ -18,83 +17,33 @@ import org.apache.spark.sql.types._
   * calibrated view after any prefix of folds therefore equals the
   * batch `isotonicBins` over everything seen VERBATIM, for any batch
   * split and any arrival order (q_isotonic_stream shares the batch
-  * oracle).
-  *
-  * Replay/crash contract: a fold's delta directory name derives from
-  * the batch's CONTENT (count, bin/pos aggregates) and is written with
-  * overwrite — a crash-replayed fold rewrites the same directory
-  * instead of double-counting (the [[StreamingCleanPack]] pending
-  * idiom). [[compactBins]] merges the accumulated tiny dirs into one
-  * (stage-and-swap, single-writer folds — the
-  * [[StreamingCdc.compactFirsts]] idiom); it narrows replay
-  * idempotence to folds staged SINCE the compaction, which is the
-  * foreachBatch at-least-once window (only the last uncommitted batch
-  * ever replays).
+  * oracle). The deltas live in one [[AdditiveFold]].
   */
 object StreamingCalibration {
 
-  private val binSchema = StructType(Seq(
-    StructField("bin", LongType), StructField("tot", LongType),
-    StructField("pos", LongType)))
+  private val bins = AdditiveFold("bins",
+    Seq("bin" -> LongType), Seq("tot", "pos"))
 
-  private def binsRoot(base: String) = s"$base/bins"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    bins.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
-  /** Fold one micro-batch of scored rows: bin + count (the batch
-    * stage), stage the delta under a content-derived directory. */
+  /** Fold micro-batch `batchId` of scored rows: bin + count (the batch
+    * stage) and stage the additive delta. */
   def fold(spark: SparkSession, base: String, scored: DataFrame,
-      scoreCol: String, posCol: String, binWidth: Long = 16L,
-      clamp: Long = 64L): Unit = {
-    val delta = graft.operators.Calibration
-      .binCounts(scored, scoreCol, posCol, binWidth, clamp)
-    val row = delta.agg(count(lit(1)), sum(col("tot")), sum(col("pos")),
-      min(col("bin")), max(col("bin")),
-      sum(expr("bin * tot % 1000000007L"))).head
-    if (row.getLong(0) > 0L) {
-      val tag = s"d_${row.getLong(1)}_${row.getLong(2)}_" +
-        s"${row.getLong(3)}_${row.getLong(4)}_${row.getLong(5)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${binsRoot(base)}/$tag")
-    }
-  }
+      scoreCol: String, posCol: String, batchId: Long,
+      binWidth: Long = 16L, clamp: Long = 64L): Unit =
+    bins.fold(spark, base, graft.operators.Calibration
+      .binCounts(scored, scoreCol, posCol, binWidth, clamp), batchId)
 
-  /** Merge the accumulated per-fold delta dirs into one (stage-and-swap;
-    * call from a single-writer fold loop every N folds). */
-  def compactBins(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(binsRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  /** The merged `(bin, tot, pos)` counts over everything seen. Reads
-    * committed delta dirs (and, post-compaction, the merged files). */
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(binsRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], binSchema)
-    spark.read.schema(binSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy("bin")
-      .agg(sum(col("tot")).cast("long").as("tot"),
-        sum(col("pos")).cast("long").as("pos"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]; call
+    * from a single-writer fold loop every N folds). */
+  def compactBins(spark: SparkSession, base: String): Unit =
+    bins.compact(spark, base)
 
   /** The always-current calibration map — the batch
     * [[graft.operators.Calibration.isotonicBins]] output shape
     * `(bin, n, pos, praw_ppb, iso_ppb)` over everything seen. */
   def calibrated(spark: SparkSession, base: String): DataFrame =
-    graft.operators.Calibration.isotonicFit(merged(spark, base))
+    graft.operators.Calibration.isotonicFit(bins.merged(spark, base))
 }

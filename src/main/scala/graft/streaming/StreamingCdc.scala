@@ -44,19 +44,15 @@ object StreamingCdc {
   private def instPath(base: String) = s"$base/inst"
   private def firstsPath(base: String) = s"$base/firsts"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Wipe the artifact directory (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
+    FoldStore.fs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
     ()
   }
 
   private def readOr(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val fs = hadoopFs(spark, path)
+    val fs = FoldStore.fs(spark, path)
     if (FoldStore.exists(fs, new org.apache.hadoop.fs.Path(path)))
       spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
@@ -92,7 +88,7 @@ object StreamingCdc {
     * rewrite stages to a sibling directory and swaps, so a crash
     * leaves either the old or the new artifact, never a torn one. */
   def compactFirsts(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
+    val fs = FoldStore.fs(spark, base)
     val cur = new org.apache.hadoop.fs.Path(firstsPath(base))
     FoldStore.swap(fs, cur) { tmp =>
       readOr(spark, firstsPath(base), firstSchema)

@@ -68,7 +68,7 @@ object StreamingCleanPack {
   /** Wipe all artifacts (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    FoldStore.fs(spark, base).delete(p, true)
     ()
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,89 +18,34 @@ import org.apache.spark.sql.types._
   * value-range-sized histogram, never the corpus). The gate after any
   * prefix of folds therefore equals the batch `conformalGate` over
   * everything seen VERBATIM, for any batch split and arrival order
-  * (q_conformal_stream shares the batch oracle).
-  *
-  * Replay/crash contract: delta directory names derive from the
-  * batch's CONTENT and are written with overwrite — a crash-replayed
-  * fold rewrites the same directory instead of double-counting;
-  * [[compact]] merges the tiny dirs stage-and-swap (the
-  * [[StreamingCalibration]] idiom, single-writer folds).
-  *
-  * The idiom's inherent trade (shared by every content-addressed fold
-  * in this package, and MORE likely to bite here than in
-  * [[StreamingEval]]: calibration batches are small histograms that
-  * can genuinely repeat verbatim — e.g. repeated single-value
-  * batches): two DIFFERENT batches whose delta content is
-  * byte-identical alias as a crash replay and are counted ONCE,
-  * silently biasing the threshold. Callers whose batches can repeat
-  * must salt the directory tag with [[fold]]'s `batchTag` (the
-  * micro-batch id Structured Streaming hands foreachBatch is the
-  * natural value) — replays of the same batch id still overwrite
-  * idempotently, while distinct identical-content batches stay
-  * distinct. */
+  * (q_conformal_stream shares the batch oracle). The deltas live in
+  * one [[AdditiveFold]] per fold kind. */
 object StreamingConformal {
 
-  private val histSchema = StructType(Seq(
-    StructField("nonconf", LongType), StructField("cnt", LongType)))
+  private val hist = AdditiveFold("hist",
+    Seq("nonconf" -> LongType), Seq("cnt"))
+  private val ghist = AdditiveFold("ghist",
+    Seq("group" -> StringType, "nonconf" -> LongType), Seq("cnt"))
 
-  private def histRoot(base: String) = s"$base/hist"
-
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
+  /** Wipe the global and per-group fold state (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
+    hist.init(spark, base)
+    ghist.init(spark, base)
   }
 
-  /** Fold one micro-batch: histogram its CALIBRATION rows and stage
-    * the additive delta under a content-derived directory — salted
-    * with `batchTag` when supplied (see the object doc: REQUIRED for
-    * callers whose batches can repeat byte-identically; pass the
-    * foreachBatch micro-batch id). */
+  /** Fold micro-batch `batchId`: histogram its CALIBRATION rows and
+    * stage the additive delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
-      nonconfCol: String, calCol: String,
-      batchTag: Option[Long] = None): Unit = {
-    val delta = rows
+      nonconfCol: String, calCol: String, batchId: Long): Unit =
+    hist.fold(spark, base, rows
       .where(col(calCol).cast("boolean"))
       .select(col(nonconfCol).cast("long").as("nonconf"))
       .groupBy(col("nonconf"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      min(col("nonconf")), max(col("nonconf")),
-      sum(expr("nonconf * cnt % 1000000007L"))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(1)}_${row.getLong(2)}_" +
-        s"${row.getLong(3)}_${row.getLong(4)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${histRoot(base)}/$tag")
-    }
-  }
+      .agg(count(lit(1)).cast("long").as("cnt")), batchId)
 
-  /** Merge accumulated delta dirs into one ([[FoldStore.swap]] — the
-    * r14 crash-safe rename-aside protocol). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    spark.read.schema(histSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy("nonconf")
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    hist.compact(spark, base)
 
   /** The always-current `(thr, n_cal)` — exact order statistic over
     * the merged histogram; `+∞` (fail-open) when
@@ -113,8 +57,8 @@ object StreamingConformal {
     // two-phase cumulation (r14): nonconformities are raw BIGINTs, so
     // a continuous-valued score makes the histogram corpus-sized and
     // an unpartitioned Window.orderBy would funnel it into ONE task
-    val hist = merged(spark, base)
-    val cum = graft.operators.Packing.cumSumOrdered(hist,
+    val cum = graft.operators.Packing.cumSumOrdered(
+      hist.merged(spark, base),
       "nonconf", "cnt", cumCol = "cum", totalCol = Some("n_cal"))
     val keepPpm = 1000000L - alphaPpm
     // one aggregate: thr = first value whose running count reaches k
@@ -153,59 +97,20 @@ object StreamingConformal {
   // no folded calibration rows FAIL OPEN exactly like the batch left
   // join.
 
-  private val ghistSchema = StructType(Seq(
-    StructField("group", StringType), StructField("nonconf", LongType),
-    StructField("cnt", LongType)))
-
-  private def ghistRoot(base: String) = s"$base/ghist"
-
   /** [[fold]] with one calibration histogram per group. */
   def foldByGroup(spark: SparkSession, base: String, rows: DataFrame,
       groupCol: String, nonconfCol: String, calCol: String,
-      batchTag: Option[Long] = None): Unit = {
-    val delta = rows
+      batchId: Long): Unit =
+    ghist.fold(spark, base, rows
       .where(col(calCol).cast("boolean"))
       .select(col(groupCol).cast("string").as("group"),
         col(nonconfCol).cast("long").as("nonconf"))
       .groupBy(col("group"), col("nonconf"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    // every factor reduced below 2^31 before multiplying (no overflow)
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      sum(pmod((pmod(xxhash64(col("group")), lit(1000000007L)) +
-        pmod(col("nonconf"), lit(1000000007L))) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${ghistRoot(base)}/$tag")
-    }
-  }
+      .agg(count(lit(1)).cast("long").as("cnt")), batchId)
 
-  /** Merge the grouped delta dirs ([[FoldStore.swap]]). */
-  def compactByGroup(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(ghistRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      mergedByGroup(spark, base).write.mode("overwrite")
-        .parquet(tmp.toString)
-    }
-  }
-
-  private def mergedByGroup(spark: SparkSession,
-      base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(ghistRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ghistSchema)
-    spark.read.schema(ghistSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("group"), col("nonconf"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the grouped deltas ([[AdditiveFold.compact]]). */
+  def compactByGroup(spark: SparkSession, base: String): Unit =
+    ghist.compact(spark, base)
 
   /** The always-current per-group `(group, thr, n_cal)` — the batch
     * `k = ceil((n+1)(1−α))` rule per group over the merged grouped
@@ -217,7 +122,7 @@ object StreamingConformal {
       s"alphaPpm must be in [0, 1e6) (got $alphaPpm)")
     val keepPpm = 1000000L - alphaPpm
     graft.operators.Packing.cumSumWithinGroups(
-        mergedByGroup(spark, base), "group", "nonconf", "cnt",
+        ghist.merged(spark, base), "group", "nonconf", "cnt",
         cumCol = "__cum", totalCol = Some("n_cal"))
       .withColumn("__k", expr(
         s"((n_cal + 1L) * ${keepPpm}L + 999999L) div 1000000L"))

@@ -80,19 +80,15 @@ object StreamingCorpusClean {
   private def bandsPath(base: String) = s"$base/bands"
   private def dropsPath(base: String) = s"$base/drops"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Wipe the artifact directory (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
+    FoldStore.fs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
     ()
   }
 
   private def readOr(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val fs = hadoopFs(spark, path)
+    val fs = FoldStore.fs(spark, path)
     if (FoldStore.exists(fs, new org.apache.hadoop.fs.Path(path)))
       spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
@@ -291,9 +287,9 @@ object StreamingCorpusClean {
         "left_anti")
 
   /** Compact the three append-only artifacts (stage-and-swap, the
-    * [[StreamingEval]]/[[StreamingCalibration]] idiom — single-writer
-    * folds). Every `foldDocs` append adds up to a shuffle-width of
-    * part files per artifact, so a LONG fold sequence accumulates
+    * [[AdditiveFold.compact]] idiom — single-writer folds). Every
+    * `foldDocs` append adds up to a shuffle-width of part files per
+    * artifact, so a LONG fold sequence accumulates
     * thousands of small files whose per-file listing/open cost grows
     * linearly in FOLD COUNT even though the data is batch-sized — the
     * r13 60-fold soak measured the clean fold drifting 6.5 → 13 s
@@ -301,7 +297,7 @@ object StreamingCorpusClean {
     * into a bounded file count ∝ artifact bytes), so any fold/read
     * sequence around a compaction is answer-preserving. */
   def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
+    val fs = FoldStore.fs(spark, base)
     for ((path, schema) <- Seq(
         (textsPath(base), textSchema),
         (bandsPath(base), bandSchema),

@@ -19,86 +19,36 @@ import org.apache.spark.sql.types._
   * after any prefix of folds equals the batch operator over everything
   * seen VERBATIM, for any split and arrival order
   * (q_category_drift_stream / q_numeric_drift_stream share the batch
-  * oracles).
-  *
-  * Replay/crash contract: content-derived delta dir names + overwrite
-  * (replays rewrite, never double-count); [[compact]] merges dirs
-  * stage-and-swap — the [[StreamingCalibration]] idiom. The idiom's
-  * trade (documented there and in [[StreamingEval]]): two DIFFERENT
-  * batches with byte-identical histograms alias as a replay — callers
-  * whose batches can repeat verbatim pass [[fold]]'s `batchTag` (the
-  * foreachBatch micro-batch id). */
+  * oracles). The deltas live in one [[AdditiveFold]]. */
 object StreamingDrift {
 
-  private val histSchema = StructType(Seq(
-    StructField("category", StringType), StructField("cnt", LongType)))
+  private val cats = AdditiveFold("cats",
+    Seq("category" -> StringType), Seq("cnt"))
 
-  private def histRoot(base: String) = s"$base/cats"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    cats.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
-  /** Fold one micro-batch of the LIVE side: category-count it (the
-    * batch stage) and stage the additive delta under a content-derived
-    * directory (salted with `batchTag` when batches can repeat
-    * byte-identically). */
+  /** Fold micro-batch `batchId` of the LIVE side: category-count it
+    * (the batch stage) and stage the additive delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
-      catCol: String, batchTag: Option[Long] = None): Unit = {
-    val delta = graft.operators.Profiler.categoryCounts(rows, catCol)
-    // both product factors bounded below 2^30 before multiplying so
-    // the weighted tag term can never overflow under ANSI arithmetic
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      sum(pmod(xxhash64(col("category")), lit(1000000007L))),
-      sum(pmod(pmod(xxhash64(col("category")), lit(1000000007L)) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}_${row.getLong(3)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${histRoot(base)}/$tag")
-    }
-  }
+      catCol: String, batchId: Long): Unit =
+    cats.fold(spark, base,
+      graft.operators.Profiler.categoryCounts(rows, catCol), batchId)
 
   /** [[fold]] for the NUMERIC monitor: sign-safe-bin the value column
     * first (the batch `numericDrift` binning, bin id stringified into
     * the shared category artifact). */
   def foldNumeric(spark: SparkSession, base: String, rows: DataFrame,
-      valueCol: String, binWidth: Long,
-      batchTag: Option[Long] = None): Unit =
+      valueCol: String, binWidth: Long, batchId: Long): Unit =
     fold(spark, base,
       rows.select(expr(graft.operators.Profiler
         .driftBinExpr(valueCol, binWidth)).as("category")),
-      "category", batchTag)
+      "category", batchId)
 
-  /** Merge accumulated delta dirs into one ([[FoldStore.swap]] — the
-    * r14 crash-safe rename-aside protocol). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    spark.read.schema(histSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("category"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    cats.compact(spark, base)
 
   /** The always-current categorical report: the batch
     * [[graft.operators.Profiler.categoryDrift]] output shape with
@@ -107,7 +57,7 @@ object StreamingDrift {
       catCol: String): DataFrame =
     graft.operators.Profiler.categoryDriftFromCounts(
       graft.operators.Profiler.categoryCounts(reference, catCol),
-      merged(spark, base))
+      cats.merged(spark, base))
 
   /** The PSI sibling — the batch
     * [[graft.operators.Profiler.psiDrift]] output shape against the
@@ -117,7 +67,7 @@ object StreamingDrift {
       catCol: String): DataFrame =
     graft.operators.Profiler.psiFromCounts(
       graft.operators.Profiler.categoryCounts(reference, catCol),
-      merged(spark, base))
+      cats.merged(spark, base))
 
   /** The numeric sibling — the batch `numericDrift` output shape
     * (`bin` BIGINT) against the folded live histogram. */
@@ -129,7 +79,7 @@ object StreamingDrift {
         reference.select(expr(graft.operators.Profiler
           .driftBinExpr(valueCol, binWidth)).as("category")),
         "category"),
-      merged(spark, base))
+      cats.merged(spark, base))
       .withColumnRenamed("category", "bin")
       .withColumn("bin", col("bin").cast("long"))
 }

@@ -19,76 +19,30 @@ import org.apache.spark.sql.types._
   * fixed target counts, and scoring any slice is one broadcast join.
   * Scoring the union of everything folded therefore equals the batch
   * `dsirWeights` VERBATIM for any split and arrival order
-  * (q_dsir_weights_stream shares the batch oracle).
-  *
-  * Replay/crash contract: content-derived delta dir names (cell
-  * count, total, count-weighted checksum) + overwrite; [[compact]]
-  * merges via the crash-safe [[FoldStore.swap]]; callers whose
-  * batches can repeat byte-identically salt with `batchTag` (the
-  * package-wide caveat). */
+  * (q_dsir_weights_stream shares the batch oracle). The deltas live
+  * in one [[AdditiveFold]]. */
 object StreamingDsir {
 
-  private val histSchema = StructType(Seq(
-    StructField("b", LongType), StructField("cnt", LongType)))
+  private val cells = AdditiveFold("cells",
+    Seq("b" -> LongType), Seq("cnt"))
 
-  private def histRoot(base: String) = s"$base/cells"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    cells.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
-  /** Fold one micro-batch of raw documents: hashed-feature counts
+  /** Fold micro-batch `batchId` of raw documents: hashed-feature counts
     * (the batch stage) staged as an additive ≤ m-row delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
-      idCol: String, textCol: String, buckets: Int = 1024,
-      batchTag: Option[Long] = None): Unit = {
-    // r15: eager checkpoint — the content-tag agg and the write would
-    // otherwise EACH run the full n-gram explode + hash over the batch
-    // (two corpus-slice passes per fold); the checkpointed delta is
-    // <= buckets rows
-    val delta = graft.operators.Dsir
+      idCol: String, textCol: String, batchId: Long,
+      buckets: Int = 1024): Unit =
+    cells.fold(spark, base, graft.operators.Dsir
       .featureCells(rows, idCol, textCol, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).cast("long").as("cnt"))
-      .localCheckpoint(true)
-    // factors reduced below 2^31 before multiplying (no overflow)
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      sum(pmod(pmod(col("b"), lit(1000000007L)) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${histRoot(base)}/$tag")
-    }
-  }
+      .groupBy(col("b")).agg(count(lit(1)).cast("long").as("cnt")),
+      batchId)
 
-  /** Merge accumulated delta dirs ([[FoldStore.swap]]). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    spark.read.schema(histSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("b"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    cells.compact(spark, base)
 
   /** Score `rows` against everything folded so far — the batch
     * [[graft.operators.Dsir.dsirWeights]] output shape
@@ -99,6 +53,6 @@ object StreamingDsir {
       buckets: Int = 1024): DataFrame =
     graft.operators.Dsir.scoreAgainstCounts(
       rows, target,
-      merged(spark, base).select(col("b"), col("cnt").as("cq")),
+      cells.merged(spark, base).select(col("b"), col("cnt").as("cq")),
       idCol, textCol, buckets)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,86 +17,39 @@ import org.apache.spark.sql.types._
   * merged (groups × bins)-sized relation. Normalizing the union of
   * everything folded therefore equals the batch `ecdfNormalize`
   * VERBATIM for any split and arrival order (q_quantile_norm_stream
-  * shares the batch oracle).
-  *
-  * Replay/crash contract: content-derived delta dir names +
-  * overwrite; [[compact]] merges stage-and-swap; `batchTag` salts
-  * verbatim-repeating batches ([[StreamingConformal]]'s caveat). */
+  * shares the batch oracle). The deltas live in one [[AdditiveFold]]. */
 object StreamingEcdf {
 
-  private val histSchema = StructType(Seq(
-    StructField("group", StringType), StructField("bin", LongType),
-    StructField("cnt", LongType)))
+  private val gbins = AdditiveFold("gbins",
+    Seq("group" -> StringType, "bin" -> LongType), Seq("cnt"))
 
-  private def histRoot(base: String) = s"$base/gbins"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    gbins.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
+  /** `(extra…, group, score, bin)` under the batch sign-safe binning. */
   private def binned(rows: DataFrame, groupCol: String,
-      scoreCol: String, binWidth: Long): DataFrame = {
+      scoreCol: String, binWidth: Long, extra: Column*): DataFrame = {
     require(binWidth >= 1, s"binWidth must be positive (got $binWidth)")
-    rows.select(col(groupCol).cast("string").as("group"),
-      col(scoreCol).cast("long").as("score"))
+    rows.select(extra :+ col(groupCol).cast("string").as("group") :+
+        col(scoreCol).cast("long").as("score"): _*)
       .withColumn("bin", expr(
         s"""(CASE WHEN score < 0 THEN -1L ELSE 1L END)
            | * (abs(score) div ${binWidth}L)""".stripMargin))
   }
 
-  /** Fold one micro-batch: (group, bin)-count it (the batch stage),
-    * stage the additive delta under a content-derived directory. */
+  /** Fold micro-batch `batchId`: (group, bin)-count it (the batch
+    * stage) and stage the additive delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
       groupCol: String, scoreCol: String, binWidth: Long,
-      batchTag: Option[Long] = None): Unit = {
-    val delta = binned(rows, groupCol, scoreCol, binWidth)
+      batchId: Long): Unit =
+    gbins.fold(spark, base, binned(rows, groupCol, scoreCol, binWidth)
       .groupBy(col("group"), col("bin"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    // checksum WEIGHTED by per-bin count (r13 ADVICE: the unweighted
-    // key-set sum aliased {b0:2,b1:1} with {b0:1,b1:2}); every factor
-    // is reduced below 2^31 before multiplying, so the product stays
-    // ≤ ~2e18 < Long.MaxValue
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      sum(pmod((pmod(xxhash64(col("group")), lit(1000000007L)) +
-        pmod(col("bin"), lit(1000000007L))) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L))),
-      min(col("bin"))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = (s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}_${row.getLong(3)}").replace('-', 'm')
-      delta.write.mode("overwrite")
-        .parquet(s"${histRoot(base)}/$tag")
-    }
-  }
+      .agg(count(lit(1)).cast("long").as("cnt")), batchId)
 
-  /** Merge accumulated delta dirs into one ([[FoldStore.swap]] — the
-    * r14 crash-safe rename-aside protocol). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    spark.read.schema(histSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("group"), col("bin"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    gbins.compact(spark, base)
 
   /** Map `rows` onto the CURRENT within-group quantile scale — the
     * batch [[graft.operators.Calibration.ecdfNormalize]] output shape
@@ -110,18 +62,13 @@ object StreamingEcdf {
     // two-phase per-group cumulation (r14, the batch ecdfNormalize
     // fix): Window.partitionBy(group) sorts each whole group's bins
     // in ONE task — a straggler for any high-cardinality group
-    val hist = merged(spark, base)
+    val hist = gbins.merged(spark, base)
     val cum = graft.operators.Packing.cumSumWithinGroups(hist,
         "group", "bin", "cnt", cumCol = "__cum", totalCol = Some("n_grp"))
       .select(col("group"), col("bin"), col("n_grp"),
         expr("__cum * 1000000L div n_grp").as("ecdf_ppm"))
-    require(binWidth >= 1, s"binWidth must be positive (got $binWidth)")
-    rows.select(col(idCol).cast("long").as("id"),
-        col(groupCol).cast("string").as("group"),
-        col(scoreCol).cast("long").as("score"))
-      .withColumn("bin", expr(
-        s"""(CASE WHEN score < 0 THEN -1L ELSE 1L END)
-           | * (abs(score) div ${binWidth}L)""".stripMargin))
+    binned(rows, groupCol, scoreCol, binWidth,
+        col(idCol).cast("long").as("id"))
       .join(cum, Seq("group", "bin"))
       .select(col("id"), col("group"), col("score"), col("bin"),
         col("n_grp"), col("ecdf_ppm"))

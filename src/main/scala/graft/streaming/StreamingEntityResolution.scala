@@ -69,14 +69,10 @@ object StreamingEntityResolution {
   private def variantsPath(base: String) = s"$base/variants"
   private def clustersRoot(base: String) = s"$base/clusters"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Wipe the artifact directory (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(base)
-    hadoopFs(spark, base).delete(p, true)
+    FoldStore.fs(spark, base).delete(p, true)
     ()
   }
 
@@ -85,7 +81,7 @@ object StreamingEntityResolution {
     * failing parquet schema inference. */
   private def readOr(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val fs = hadoopFs(spark, path)
+    val fs = FoldStore.fs(spark, path)
     if (fs.exists(new org.apache.hadoop.fs.Path(path)))
       spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
@@ -116,7 +112,7 @@ object StreamingEntityResolution {
     * and overwrites the dir. */
   private def deltaSeqs(spark: SparkSession, base: String): Seq[Int] = {
     val root = new org.apache.hadoop.fs.Path(deltaRoot(base))
-    val fs = hadoopFs(spark, deltaRoot(base))
+    val fs = FoldStore.fs(spark, deltaRoot(base))
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("d=") => s.drop(2).toInt }
@@ -128,7 +124,7 @@ object StreamingEntityResolution {
   /** Highest COMMITTED (_SUCCESS present) compacted epoch, 0 = none. */
   private def latestCompactedSeq(spark: SparkSession, base: String): Int = {
     val root = new org.apache.hadoop.fs.Path(clustersRoot(base))
-    val fs = hadoopFs(spark, clustersRoot(base))
+    val fs = FoldStore.fs(spark, clustersRoot(base))
     if (!fs.exists(root)) return 0
     fs.listStatus(root).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("c=") => s.drop(2).toInt }
@@ -160,7 +156,7 @@ object StreamingEntityResolution {
       else emptyDf
     val seqs = deltaSeqs(spark, base).filter(_ > cseq)
     if (seqs.isEmpty) return baseDf
-    val fs = hadoopFs(spark, deltaRoot(base))
+    val fs = FoldStore.fs(spark, deltaRoot(base))
     val deltaBytes = seqs.map(d => fs.getContentSummary(
       new org.apache.hadoop.fs.Path(deltaPath(base, d))).getLength).sum
     val deltas = seqs.map { d =>
@@ -188,7 +184,7 @@ object StreamingEntityResolution {
     * already excludes (deltas ≤ N) and the next compaction re-retires.
     */
   def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, clustersRoot(base))
+    val fs = FoldStore.fs(spark, clustersRoot(base))
     val prev = latestCompactedSeq(spark, base)
     val seqs = deltaSeqs(spark, base).filter(_ > prev)
     if (seqs.isEmpty) return

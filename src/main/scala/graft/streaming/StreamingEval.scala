@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Streamed classifier scorecard — the incremental half of
@@ -16,76 +15,31 @@ import org.apache.spark.sql.types._
   * the merged tiny relation. The scorecard after any prefix of folds
   * equals the batch operator over everything seen VERBATIM, for any
   * split and arrival order (q_classifier_eval_stream shares the batch
-  * oracle).
-  *
-  * Replay/crash contract: content-derived delta dir names + overwrite
-  * (replays rewrite, never double-count); [[compact]] merges dirs
-  * stage-and-swap — the [[StreamingCalibration]] idiom throughout.
-  * The idiom's inherent trade (shared by every content-addressed fold
-  * in this package): two DIFFERENT batches whose delta content is
-  * byte-identical alias as a replay and count once — callers whose
-  * batches can genuinely repeat verbatim should salt the batch (e.g.
-  * keep an id column in the fold slice) rather than rely on chance
-  * distinctness. */
+  * oracle). The deltas live in one [[AdditiveFold]]. */
 object StreamingEval {
 
-  private val cmSchema = StructType(Seq(
-    StructField("y", LongType), StructField("p", LongType),
-    StructField("n", LongType)))
+  private val confusion = AdditiveFold("confusion",
+    Seq("y" -> LongType, "p" -> LongType), Seq("n"))
 
-  private def cmRoot(base: String) = s"$base/confusion"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    confusion.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
-  /** Fold one micro-batch of predictions: confusion-count (the batch
-    * stage), stage the additive delta under a content-derived dir. */
+  /** Fold micro-batch `batchId` of predictions: confusion-count it (the
+    * batch stage) and stage the additive delta. */
   def fold(spark: SparkSession, base: String, pred: DataFrame,
-      labelCol: String, predCol: String): Unit = {
-    val delta = graft.operators.Perceptron
-      .confusion(pred, labelCol, predCol)
-    val row = delta.agg(count(lit(1)), sum(col("n")),
-      min(col("y")), max(col("p")),
-      sum(expr("(y * 31 + p) * n % 1000000007L"))).head
-    if (row.getLong(0) > 0L) {
-      val tag = s"d_${row.getLong(1)}_${row.getLong(2)}_" +
-        s"${row.getLong(3)}_${row.getLong(4)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${cmRoot(base)}/$tag")
-    }
-  }
+      labelCol: String, predCol: String, batchId: Long): Unit =
+    confusion.fold(spark, base, graft.operators.Perceptron
+      .confusion(pred, labelCol, predCol), batchId)
 
-  /** Merge accumulated delta dirs into one (stage-and-swap). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(cmRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(cmRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cmSchema)
-    spark.read.schema(cmSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("y"), col("p"))
-      .agg(sum(col("n")).cast("long").as("n"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    confusion.compact(spark, base)
 
   /** The always-current scorecard — the batch
     * [[graft.operators.Perceptron.classifierEval]] output shape over
     * everything seen. */
   def scorecard(spark: SparkSession, base: String): DataFrame =
-    graft.operators.Perceptron.evalFromConfusion(merged(spark, base))
+    graft.operators.Perceptron.evalFromConfusion(
+      confusion.merged(spark, base))
 }

@@ -18,70 +18,27 @@ import org.apache.spark.sql.types._
   * the md5-uniform draw rerun READ-side against the merged counts.
   * Sampling the union of everything folded therefore equals the batch
   * `temperatureSample` VERBATIM for any split and arrival order
-  * (q_temperature_mix_stream shares the batch oracle).
-  *
-  * Replay/crash contract: content-derived delta dir names (row count,
-  * count sum, domain-hash count-weighted checksum — two different
-  * batches with equal count profiles but different domains produce
-  * different tags) + overwrite; [[compact]] merges via the crash-safe
-  * [[FoldStore.swap]]; callers whose batches can repeat
-  * byte-identically salt with `batchTag` (the package-wide caveat). */
+  * (q_temperature_mix_stream shares the batch oracle). The deltas
+  * live in one [[AdditiveFold]]. */
 object StreamingMixing {
 
-  private val cntSchema = StructType(Seq(
-    StructField("domain", StringType), StructField("n", LongType)))
+  private val domains = AdditiveFold("domains",
+    Seq("domain" -> StringType), Seq("n"))
 
-  private def cntRoot(base: String) = s"$base/domains"
+  /** Wipe the fold state (fresh run). */
+  def init(spark: SparkSession, base: String): Unit =
+    domains.init(spark, base)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
-  def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
-  }
-
-  /** Fold one micro-batch: per-domain counts staged as an additive
-    * ≤ |domains|-row delta. */
+  /** Fold micro-batch `batchId`: per-domain counts staged as an
+    * additive ≤ |domains|-row delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
-      domainCol: String, batchTag: Option[Long] = None): Unit = {
-    val delta = rows.groupBy(col(domainCol).as("domain"))
-      .agg(count(lit(1)).cast("long").as("n"))
-    // factors reduced below 2^31 before multiplying (no overflow)
-    val row = delta.agg(count(lit(1)), sum(col("n")),
-      sum(pmod(pmod(xxhash64(col("domain")), lit(1000000007L)) *
-        pmod(col("n"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${cntRoot(base)}/$tag")
-    }
-  }
+      domainCol: String, batchId: Long): Unit =
+    domains.fold(spark, base, rows.groupBy(col(domainCol).as("domain"))
+      .agg(count(lit(1)).cast("long").as("n")), batchId)
 
-  /** Merge accumulated delta dirs ([[FoldStore.swap]]). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(cntRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(cntRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cntSchema)
-    spark.read.schema(cntSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("domain"))
-      .agg(sum(col("n")).cast("long").as("n"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    domains.compact(spark, base)
 
   /** Sample `rows` against everything folded so far — the batch
     * [[graft.operators.Mixing.temperatureSample]] output shape
@@ -89,5 +46,5 @@ object StreamingMixing {
   def sample(spark: SparkSession, base: String, rows: DataFrame,
       idCol: String, domainCol: String): DataFrame =
     graft.operators.Mixing.sampleAgainstCounts(
-      rows, merged(spark, base), idCol, domainCol)
+      rows, domains.merged(spark, base), idCol, domainCol)
 }

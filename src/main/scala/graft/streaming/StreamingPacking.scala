@@ -78,7 +78,7 @@ object StreamingPacking {
   def foldPending(spark: org.apache.spark.sql.SparkSession, base: String,
       pendingRoot: String, countFn: DataFrame => DataFrame,
       packSize: Int): Unit = {
-    val fs = hadoopFs(spark, base)
+    val fs = FoldStore.fs(spark, base)
     val pendDirs = committedSubdirs(fs, pendingRoot)
     if (pendDirs.isEmpty) return
     val packedRoot = s"$base/packed"
@@ -131,11 +131,6 @@ object StreamingPacking {
   /** Compact the zero-byte watermark markers once more than this many
     * accumulate (all but the max are dropped — max-wins semantics). */
   val MarkerCompactAt = 8
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-      path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Child directories carrying a `_SUCCESS` marker — committed writes
     * only (a crashed overwrite leaves `_temporary`, never the marker). */
@@ -199,7 +194,7 @@ object StreamingPacking {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("last_pack",
         org.apache.spark.sql.types.LongType)))
-    val dirs = committedSubdirs(hadoopFs(spark, path), path)
+    val dirs = committedSubdirs(FoldStore.fs(spark, path), path)
       .filter(p => parseW(p.getName).isDefined)
     if (dirs.nonEmpty)
       spark.read.schema(schema).parquet(dirs.map(_.toString): _*)

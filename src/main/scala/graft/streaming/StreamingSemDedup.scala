@@ -61,19 +61,15 @@ object StreamingSemDedup {
   private def membersPath(base: String) = s"$base/members"
   private def dropsPath(base: String) = s"$base/drops"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Wipe the artifact directory (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
+    FoldStore.fs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
     ()
   }
 
   private def readOr(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val fs = hadoopFs(spark, path)
+    val fs = FoldStore.fs(spark, path)
     if (fs.exists(new org.apache.hadoop.fs.Path(path)))
       spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,80 +25,33 @@ import org.apache.spark.sql.types._
   * Values may be any numeric type (stored as DOUBLE — grouping on
   * exact value equality, the source values being what they are; NaN
   * is out of contract, as in the batch operator's non-null rule).
-  *
-  * Replay/crash contract: content-derived delta dir names +
-  * overwrite; [[compact]] merges via the crash-safe
-  * [[FoldStore.swap]]. The delta tag folds a value-weighted content
-  * checksum (r14, the [[StreamingDrift]] term) alongside (distinct
-  * values, total count, min, max), so two different batches alias
-  * only on a checksum collision — callers whose batches can repeat
-  * BYTE-IDENTICALLY must still salt with `batchTag` (the
-  * [[StreamingConformal]] caveat verbatim). */
+  * The deltas live in one [[AdditiveFold]] per fold kind. */
 object StreamingWinsorize {
 
-  private val histSchema = StructType(Seq(
-    StructField("v", DoubleType), StructField("cnt", LongType)))
+  private val vhist = AdditiveFold("vhist",
+    Seq("v" -> DoubleType), Seq("cnt"))
+  private val gvhist = AdditiveFold("gvhist",
+    Seq("group" -> StringType, "v" -> DoubleType), Seq("cnt"))
 
-  private def histRoot(base: String) = s"$base/vhist"
-
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Wipe the artifact directory (fresh run). */
+  /** Wipe the global and per-group fold state (fresh run). */
   def init(spark: SparkSession, base: String): Unit = {
-    hadoopFs(spark, base).delete(new org.apache.hadoop.fs.Path(base), true)
-    ()
+    vhist.init(spark, base)
+    gvhist.init(spark, base)
   }
 
-  /** Fold one micro-batch: histogram its non-null values and stage
-    * the additive delta under a content-derived directory. */
+  /** Fold micro-batch `batchId`: histogram its non-null values and
+    * stage the additive delta. */
   def fold(spark: SparkSession, base: String, rows: DataFrame,
-      valueCol: String, batchTag: Option[Long] = None): Unit = {
-    val delta = rows
+      valueCol: String, batchId: Long): Unit =
+    vhist.fold(spark, base, rows
       .select(col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull)
       .groupBy(col("v"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    // both checksum factors bounded below 2^30 before multiplying so
-    // the count-weighted term can never overflow (the StreamingDrift
-    // tag discipline; r13 ADVICE — (n, min, max) alone aliased
-    // different batches like {1,2,4} vs {1,3,4})
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      min(col("v")), max(col("v")),
-      sum(pmod(pmod(xxhash64(col("v")), lit(1000000007L)) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = (s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getDouble(2)}_${row.getDouble(3)}_${row.getLong(4)}")
-        .replace('.', 'p').replace('-', 'm')
-      delta.write.mode("overwrite")
-        .parquet(s"${histRoot(base)}/$tag")
-    }
-  }
+      .agg(count(lit(1)).cast("long").as("cnt")), batchId)
 
-  /** Merge accumulated delta dirs into one ([[FoldStore.swap]] — the
-    * r14 crash-safe rename-aside protocol). */
-  def compact(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      merged(spark, base).write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
-
-  private def merged(spark: SparkSession, base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(histRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    spark.read.schema(histSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("v"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the staged deltas into one ([[AdditiveFold.compact]]). */
+  def compact(spark: SparkSession, base: String): Unit =
+    vhist.compact(spark, base)
 
   /** The always-current `(lo_cut, hi_cut, n)` — exact order
     * statistics over the merged histogram (batch k rule:
@@ -112,8 +64,8 @@ object StreamingWinsorize {
     // two-phase cumulation (r14): values are raw DOUBLES, so the
     // histogram of a continuous column approximates the corpus and
     // an unpartitioned Window.orderBy would funnel it into ONE task
-    val hist = merged(spark, base)
-    val cum = graft.operators.Packing.cumSumOrdered(hist,
+    val cum = graft.operators.Packing.cumSumOrdered(
+      vhist.merged(spark, base),
       "v", "cnt", cumCol = "cum", totalCol = Some("n"))
     cum
       .where(col("n") > 0L)
@@ -151,61 +103,19 @@ object StreamingWinsorize {
   // the read side is the batch per-group construction verbatim over
   // the merged (group, v, cnt) relation.
 
-  private val ghistSchema = StructType(Seq(
-    StructField("group", StringType), StructField("v", DoubleType),
-    StructField("cnt", LongType)))
-
-  private def ghistRoot(base: String) = s"$base/gvhist"
-
-  /** [[fold]] with one histogram per group. Tag folds a
-    * (group, value, count)-weighted checksum (the r14 tag
-    * discipline); salt repeating batches with `batchTag` as ever. */
+  /** [[fold]] with one histogram per group. */
   def foldByGroup(spark: SparkSession, base: String, rows: DataFrame,
-      groupCol: String, valueCol: String,
-      batchTag: Option[Long] = None): Unit = {
-    val delta = rows
+      groupCol: String, valueCol: String, batchId: Long): Unit =
+    gvhist.fold(spark, base, rows
       .select(col(groupCol).cast("string").as("group"),
         col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull)
       .groupBy(col("group"), col("v"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-    // every factor reduced below 2^31 before multiplying (no overflow)
-    val row = delta.agg(count(lit(1)), sum(col("cnt")),
-      sum(pmod((pmod(xxhash64(col("group")), lit(1000000007L)) +
-        pmod(xxhash64(col("v")), lit(1000000007L))) *
-        pmod(col("cnt"), lit(1000000007L)), lit(1000000007L)))).head
-    if (row.getLong(0) > 0L) {
-      val salt = batchTag.map(b => s"b${b}_").getOrElse("")
-      val tag = s"d_$salt${row.getLong(0)}_${row.getLong(1)}_" +
-        s"${row.getLong(2)}"
-      delta.write.mode("overwrite")
-        .parquet(s"${ghistRoot(base)}/$tag")
-    }
-  }
+      .agg(count(lit(1)).cast("long").as("cnt")), batchId)
 
-  /** Merge the grouped delta dirs ([[FoldStore.swap]]). */
-  def compactByGroup(spark: SparkSession, base: String): Unit = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(ghistRoot(base))
-    FoldStore.swap(fs, root) { tmp =>
-      mergedByGroup(spark, base).write.mode("overwrite")
-        .parquet(tmp.toString)
-    }
-  }
-
-  private def mergedByGroup(spark: SparkSession,
-      base: String): DataFrame = {
-    val fs = hadoopFs(spark, base)
-    val root = new org.apache.hadoop.fs.Path(ghistRoot(base))
-    if (!FoldStore.exists(fs, root))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ghistSchema)
-    spark.read.schema(ghistSchema)
-      .option("recursiveFileLookup", "true").parquet(root.toString)
-      .groupBy(col("group"), col("v"))
-      .agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
+  /** Merge the grouped deltas ([[AdditiveFold.compact]]). */
+  def compactByGroup(spark: SparkSession, base: String): Unit =
+    gvhist.compact(spark, base)
 
   /** The always-current per-group `(group, lo_cut, hi_cut)` — the
     * batch per-group k rule over the merged grouped histogram,
@@ -218,7 +128,7 @@ object StreamingWinsorize {
     require(loPpm >= 0 && hiPpm <= 1000000L && loPpm <= hiPpm,
       s"need 0 <= loPpm <= hiPpm <= 1e6 (got $loPpm, $hiPpm)")
     graft.operators.Packing.cumSumWithinGroups(
-        mergedByGroup(spark, base), "group", "v", "cnt",
+        gvhist.merged(spark, base), "group", "v", "cnt",
         cumCol = "__cum", totalCol = Some("__n"))
       .withColumn("__klo", expr(
         s"greatest(least((__n * ${loPpm}L + 999999L) div 1000000L, __n), 1L)"))

@@ -29,13 +29,13 @@ class StreamingCalibrationSpec extends SparkSpec {
     def df(xs: Seq[(Long, Long)]) = xs.toDF("score", "is_pos")
 
     StreamingCalibration.fold(spark, base, df(a), "score", "is_pos",
-      binWidth = 8L, clamp = 16L)
-    // crash-replayed fold: identical content-tagged dir, overwritten —
-    // counts must NOT double
+      batchId = 0L, binWidth = 8L, clamp = 16L)
+    // crash-replayed fold: same batch id, its dir overwritten — counts
+    // must NOT double
     StreamingCalibration.fold(spark, base, df(a), "score", "is_pos",
-      binWidth = 8L, clamp = 16L)
+      batchId = 0L, binWidth = 8L, clamp = 16L)
     StreamingCalibration.fold(spark, base, df(b), "score", "is_pos",
-      binWidth = 8L, clamp = 16L)
+      batchId = 1L, binWidth = 8L, clamp = 16L)
     val beforeCompact = StreamingCalibration.calibrated(spark, base)
       .as[Bin].collect().sortBy(_._1).toSeq
     StreamingCalibration.compactBins(spark, base)
@@ -43,7 +43,7 @@ class StreamingCalibrationSpec extends SparkSpec {
       .as[Bin].collect().sortBy(_._1).toSeq
     assert(afterCompact === beforeCompact)
     StreamingCalibration.fold(spark, base, df(c), "score", "is_pos",
-      binWidth = 8L, clamp = 16L)
+      batchId = 2L, binWidth = 8L, clamp = 16L)
 
     val streamed = StreamingCalibration.calibrated(spark, base)
       .as[Bin].collect().sortBy(_._1).toSeq

@@ -29,10 +29,11 @@ class StreamingConformalSpec extends SparkSpec {
     StreamingConformal.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
       StreamingConformal.fold(spark, b,
-        f.toDF("id", "nonconf", "is_cal"), "nonconf", "is_cal")
-      if (i == replayFold) // crash-replay: same content, same dir
+        f.toDF("id", "nonconf", "is_cal"), "nonconf", "is_cal", i.toLong)
+      if (i == replayFold) // crash replay: same batch id, same dir
         StreamingConformal.fold(spark, b,
-          f.toDF("id", "nonconf", "is_cal"), "nonconf", "is_cal")
+          f.toDF("id", "nonconf", "is_cal"), "nonconf", "is_cal",
+          i.toLong)
       if (i == compactAfter) StreamingConformal.compact(spark, b)
     }
     StreamingConformal.gate(spark, b,
@@ -71,7 +72,7 @@ class StreamingConformalSpec extends SparkSpec {
     StreamingConformal.init(spark, b)
     StreamingConformal.fold(spark, b,
       Seq((1L, 5L, false)).toDF("id", "nonconf", "is_cal"),
-      "nonconf", "is_cal")
+      "nonconf", "is_cal", 0L)
     val got = StreamingConformal.gate(spark, b,
         Seq((1L, 5L, false)).toDF("id", "nonconf", "is_cal"),
         "id", "nonconf", "is_cal", 100000L)
@@ -108,11 +109,11 @@ class StreamingConformalSpec extends SparkSpec {
     folds.zipWithIndex.foreach { case (f, i) =>
       StreamingConformal.foldByGroup(spark, b,
         f.toDF("id", "grp", "nonconf", "is_cal"),
-        "grp", "nonconf", "is_cal", batchTag = Some(i.toLong))
-      if (i == replayFold) // crash replay: same content AND same tag
+        "grp", "nonconf", "is_cal", batchId = i.toLong)
+      if (i == replayFold) // crash replay: same batch id
         StreamingConformal.foldByGroup(spark, b,
           f.toDF("id", "grp", "nonconf", "is_cal"),
-          "grp", "nonconf", "is_cal", batchTag = Some(i.toLong))
+          "grp", "nonconf", "is_cal", batchId = i.toLong)
       if (i == compactAfter) StreamingConformal.compactByGroup(spark, b)
     }
     StreamingConformal.gateByGroup(spark, b,

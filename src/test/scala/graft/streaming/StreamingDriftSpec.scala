@@ -9,8 +9,6 @@ class StreamingDriftSpec extends SparkSpec {
 
   private def base(tag: String) = s"/tmp/graft_drift_spec/$tag"
 
-  // aperiodic category mix so fold slices are content-DISTINCT (the
-  // content-addressed fold idiom aliases byte-identical batches)
   private val live: Seq[(Long, String)] =
     (1L to 60L).map(i => (i, s"s${(i * i + i / 7) % 4}"))
   private val ref: Seq[(Long, String)] =
@@ -32,9 +30,10 @@ class StreamingDriftSpec extends SparkSpec {
     val b = base(tag)
     StreamingDrift.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
-      StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat")
-      if (i == replayFold)
-        StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat")
+      StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat", i.toLong)
+      if (i == replayFold) // crash replay: same batch id
+        StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat",
+          i.toLong)
       if (i == compactAfter) StreamingDrift.compact(spark, b)
     }
     StreamingDrift.report(spark, b, ref.toDF("id", "cat"), "cat")
@@ -74,13 +73,10 @@ class StreamingDriftSpec extends SparkSpec {
     import spark.implicits._
     val b = base("psi")
     StreamingDrift.init(spark, b)
-    // deliberately salted: the 25-row chunks of this fixture have
-    // IDENTICAL category histograms, so unsalted content tags would
-    // alias them as a replay — the exact trap the object doc warns
-    // about, and the batchTag remedy demonstrated
+    // the 25-row chunks of this fixture have IDENTICAL category
+    // histograms: distinct batch ids must both count
     live.grouped(25).zipWithIndex.foreach { case (f, i) =>
-      StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat",
-        batchTag = Some(i.toLong))
+      StreamingDrift.fold(spark, b, f.toDF("id", "cat"), "cat", i.toLong)
     }
     val got = StreamingDrift.reportPsi(spark, b, ref.toDF("id", "cat"),
         "cat")
@@ -111,7 +107,7 @@ class StreamingDriftSpec extends SparkSpec {
     val b = base("num")
     StreamingDrift.init(spark, b)
     StreamingDrift.foldNumeric(spark, b, liveN.toDF("id", "v"), "v",
-      binWidth = 64L)
+      binWidth = 64L, batchId = 0L)
     val got = StreamingDrift.reportNumeric(spark, b,
         refN.toDF("id", "v"), "v", binWidth = 64L)
       .selectExpr("bin", "n_a", "n_b")

@@ -40,10 +40,10 @@ class StreamingDsirSpec extends SparkSpec {
     StreamingDsir.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
       StreamingDsir.fold(spark, b, f.toDF("doc_id", "text"),
-        "doc_id", "text", 64, batchTag = Some(i.toLong))
-      if (i == replayFold) // crash replay: same content AND tag
+        "doc_id", "text", batchId = i.toLong, buckets = 64)
+      if (i == replayFold) // crash replay: same batch id
         StreamingDsir.fold(spark, b, f.toDF("doc_id", "text"),
-          "doc_id", "text", 64, batchTag = Some(i.toLong))
+          "doc_id", "text", batchId = i.toLong, buckets = 64)
       if (i == compactAfter) StreamingDsir.compact(spark, b)
     }
     StreamingDsir.weights(spark, b, rawDocs.toDF("doc_id", "text"),

@@ -31,10 +31,10 @@ class StreamingEcdfSpec extends SparkSpec {
     StreamingEcdf.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
       StreamingEcdf.fold(spark, b, f.toDF("id", "grp", "score"),
-        "grp", "score", binWidth = 4L)
-      if (i == replayFold)
+        "grp", "score", binWidth = 4L, batchId = i.toLong)
+      if (i == replayFold) // crash replay: same batch id
         StreamingEcdf.fold(spark, b, f.toDF("id", "grp", "score"),
-          "grp", "score", binWidth = 4L)
+          "grp", "score", binWidth = 4L, batchId = i.toLong)
       if (i == compactAfter) StreamingEcdf.compact(spark, b)
     }
     StreamingEcdf.normalize(spark, b, rows.toDF("id", "grp", "score"),
@@ -62,26 +62,18 @@ class StreamingEcdfSpec extends SparkSpec {
       === want)
   }
 
-  test("two DIFFERENT batches with the same (group, bin) key set and " +
-      "total count do not alias (r13 ADVICE: cnt-weighted checksum)") {
+  test("two byte-identical batches with distinct ids both count") {
     import spark.implicits._
     val b = base("alias")
     StreamingEcdf.init(spark, b)
-    // {bin0: 2, bin1: 1} vs {bin0: 1, bin1: 2} — same keys, same total,
-    // different per-bin distribution; the old unweighted key-set
-    // checksum collided and the second fold's overwrite dropped the
-    // first batch's delta
-    StreamingEcdf.fold(spark, b,
-      Seq((1L, "g", 0L), (2L, "g", 0L), (3L, "g", 1L))
-        .toDF("id", "grp", "score"), "grp", "score", binWidth = 1L)
-    StreamingEcdf.fold(spark, b,
-      Seq((4L, "g", 0L), (5L, "g", 1L), (6L, "g", 1L))
-        .toDF("id", "grp", "score"), "grp", "score", binWidth = 1L)
+    val f = Seq((1L, "g", 0L), (2L, "g", 0L), (3L, "g", 1L))
+      .toDF("id", "grp", "score")
+    StreamingEcdf.fold(spark, b, f, "grp", "score", 1L, batchId = 0L)
+    StreamingEcdf.fold(spark, b, f, "grp", "score", 1L, batchId = 1L)
     val n = StreamingEcdf.normalize(spark, b,
         Seq((9L, "g", 0L)).toDF("id", "grp", "score"),
         "id", "grp", "score", binWidth = 1L)
       .select("n_grp").as[Long].head()
-    assert(n === 6L,
-      s"both 3-row batches must count (n_grp=6), got $n — tags aliased")
+    assert(n === 6L, s"both 3-row batches must count (n_grp=6), got $n")
   }
 }

@@ -8,8 +8,6 @@ class StreamingEvalSpec extends SparkSpec {
 
   private def base(tag: String) = s"/tmp/graft_eval_spec/$tag"
 
-  // aperiodic so fold slices are content-DISTINCT (the content-
-  // addressed fold idiom aliases byte-identical batches by design)
   private val rows: Seq[(Long, Long)] =
     (1L to 50L).map(i => ((i % 5) - 2, ((i * i + i / 7) % 5) - 2)) ++
       Seq((7L, 1L), (7L, 7L)) // a rare class, once self-predicted
@@ -30,9 +28,9 @@ class StreamingEvalSpec extends SparkSpec {
     val b = base(tag)
     StreamingEval.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
-      StreamingEval.fold(spark, b, f.toDF("y", "p"), "y", "p")
-      if (i == replayFold)
-        StreamingEval.fold(spark, b, f.toDF("y", "p"), "y", "p")
+      StreamingEval.fold(spark, b, f.toDF("y", "p"), "y", "p", i.toLong)
+      if (i == replayFold) // crash replay: same batch id
+        StreamingEval.fold(spark, b, f.toDF("y", "p"), "y", "p", i.toLong)
       if (i == compactAfter) StreamingEval.compact(spark, b)
     }
     StreamingEval.scorecard(spark, b)

@@ -20,7 +20,7 @@ class StreamingMixingSpec extends SparkSpec {
       StreamingMixing.fold(spark, base,
         docs.where(col("doc_id") >= i * maxId / 3 &&
           col("doc_id") < (i + 1) * maxId / 3),
-        "lang", batchTag = Some(i))
+        "lang", batchId = i)
     val streamed = StreamingMixing.sample(spark, base, docs,
       "doc_id", "lang").collect().map(_.toSeq).toSet
     val batch = graft.operators.Mixing.temperatureSample(
@@ -37,7 +37,7 @@ class StreamingMixingSpec extends SparkSpec {
       StreamingMixing.fold(spark, base,
         docs.where(col("doc_id") >= i * maxId / 3 &&
           col("doc_id") < (i + 1) * maxId / 3),
-        "lang", batchTag = Some(i))
+        "lang", batchId = i)
       if (i == 1L) StreamingMixing.compact(spark, base)
     }
     val streamed = StreamingMixing.sample(spark, base, docs,
@@ -47,21 +47,20 @@ class StreamingMixingSpec extends SparkSpec {
     assert(streamed === batch)
   }
 
-  test("content checksum separates count-profile-identical batches") {
+  test("two byte-identical batches with distinct ids both count") {
     import spark.implicits._
     val base = freshBase("alias")
-    // same row count (2) and count sum (2), DIFFERENT domains — the
-    // domain-hash checksum must keep both deltas alive
+    val f = Seq((1L, "aa"), (2L, "bb")).toDF("doc_id", "lang")
+    StreamingMixing.fold(spark, base, f, "lang", 0L)
+    StreamingMixing.fold(spark, base, f, "lang", 1L)
     StreamingMixing.fold(spark, base,
-      Seq((1L, "aa"), (2L, "bb")).toDF("doc_id", "lang"), "lang")
-    StreamingMixing.fold(spark, base,
-      Seq((3L, "cc"), (4L, "dd")).toDF("doc_id", "lang"), "lang")
-    val sampled = StreamingMixing.sample(spark, base,
-      Seq((1L, "aa"), (2L, "bb"), (3L, "cc"), (4L, "dd"))
-        .toDF("doc_id", "lang"), "doc_id", "lang")
-    // all four domains have count 1 -> every rate is 1e6 -> all kept
-    assert(sampled.count() === 4L)
-    assert(sampled.select("rate_ppm").distinct().collect()
-      .map(_.getLong(0)).toSeq === Seq(1000000L))
+      Seq((3L, "cc")).toDF("doc_id", "lang"), "lang", 2L)
+    // folded counts aa=2, cc=1 -> aa keeps sqrt(1/2) = 707106 ppm; had
+    // id 1 aliased id 0, every count would be 1 and every rate 1e6
+    val rates = StreamingMixing.sample(spark, base,
+        (1L to 200L).map(i => (i, "aa")).toDF("doc_id", "lang"),
+        "doc_id", "lang")
+      .select("rate_ppm").as[Long].collect().toSet
+    assert(rates === Set(707106L))
   }
 }

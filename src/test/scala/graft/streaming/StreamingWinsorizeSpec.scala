@@ -29,9 +29,10 @@ class StreamingWinsorizeSpec extends SparkSpec {
     val b = base(tag)
     StreamingWinsorize.init(spark, b)
     folds.zipWithIndex.foreach { case (f, i) =>
-      StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v")
-      if (i == replayFold)
-        StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v")
+      StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v", i.toLong)
+      if (i == replayFold) // crash replay: same batch id
+        StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v",
+          i.toLong)
       if (i == compactAfter) StreamingWinsorize.compact(spark, b)
     }
     StreamingWinsorize.winsorized(spark, b, rows.toDF("id", "v"),
@@ -91,11 +92,10 @@ class StreamingWinsorizeSpec extends SparkSpec {
     val folds = Seq(grows.drop(55), grows.take(28), grows.slice(28, 55))
     folds.zipWithIndex.foreach { case (f, i) =>
       StreamingWinsorize.foldByGroup(spark, b, f.toDF("id", "grp", "v"),
-        "grp", "v", batchTag = Some(i.toLong))
-      if (i == 0) // crash replay: same content and tag — counts once
+        "grp", "v", batchId = i.toLong)
+      if (i == 0) // crash replay: same batch id — counts once
         StreamingWinsorize.foldByGroup(spark, b,
-          f.toDF("id", "grp", "v"), "grp", "v",
-          batchTag = Some(i.toLong))
+          f.toDF("id", "grp", "v"), "grp", "v", batchId = i.toLong)
       if (i == 1) StreamingWinsorize.compactByGroup(spark, b)
     }
     val got = StreamingWinsorize.winsorizedByGroup(spark, b,
@@ -108,21 +108,15 @@ class StreamingWinsorizeSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("two DIFFERENT batches sharing (n, min, max) do not alias even " +
-      "without batchTag (r13 ADVICE: the content-checksum tag term)") {
+  test("two byte-identical batches with distinct ids both count") {
     import spark.implicits._
     val b = base("alias")
     StreamingWinsorize.init(spark, b)
-    // {1,2,4} vs {1,3,4}: same row count, same min, same max — the old
-    // (count, min, max) tag collided and the second fold silently
-    // REPLACED the first batch's histogram
-    StreamingWinsorize.fold(spark, b,
-      Seq((1L, 1.0), (2L, 2.0), (3L, 4.0)).toDF("id", "v"), "v")
-    StreamingWinsorize.fold(spark, b,
-      Seq((4L, 1.0), (5L, 3.0), (6L, 4.0)).toDF("id", "v"), "v")
-    val cut = StreamingWinsorize.cuts(spark, b, 0L, 1000000L)
+    val f = Seq((1L, 1.0), (2L, 2.0), (3L, 4.0))
+    StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v", 0L)
+    StreamingWinsorize.fold(spark, b, f.toDF("id", "v"), "v", 1L)
+    val n = StreamingWinsorize.cuts(spark, b, 0L, 1000000L)
       .select("n").as[Long].head()
-    assert(cut === 6L,
-      s"both 3-row batches must count (n=6), got n=$cut — tags aliased")
+    assert(n === 6L, s"both 3-row batches must count (n=6), got n=$n")
   }
 }
