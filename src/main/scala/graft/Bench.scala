@@ -142,17 +142,26 @@ object Bench {
       }
     }
 
-    def timeOne(fn: QFn): Double = {
+    // Queries that threw in any pass. A failed run is never a sample, and
+    // a failed query gets no median at all: a query that breaks at 0.1 s
+    // must not read as a speedup.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+
+    def timeOne(name: String, fn: QFn): Option[Double] = {
       val s0 = System.nanoTime()
-      try run(fn) catch { case _: Throwable => () }
+      val status = attempt(run(fn))
       val dt = (System.nanoTime() - s0) / 1e9
+      status.left.foreach { e =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+      }
       // Isolation (untimed): drop blocks a query left persisted so no
       // query's residue contaminates the next timing, then collect this
       // query's garbage NOW instead of letting it surface as a GC pause
       // inside the next query's timed region.
       spark.catalog.clearCache()
       gcFence(dt)
-      dt
+      status.toOption
     }
 
     case class PassMeta(kind: String, wallSec: Double, gcSec: Double,
@@ -162,7 +171,7 @@ object Bench {
     /** Run `queries` as one metered pass, abandoning the remainder if the
       * deadline strikes mid-pass (samples already taken are kept — each
       * is a real measurement). Returns the partial-or-complete sample
-      * map. */
+      * map of the queries that ran without throwing. */
     def timedPass(kind: String, queries: Seq[(String, QFn)],
         stopAt: Double): Map[String, Double] = {
       val (w0, g0) = (System.nanoTime(), gcSeconds())
@@ -171,12 +180,13 @@ object Bench {
       val it = queries.iterator
       while (it.hasNext && !cut) {
         val (name, fn) = it.next()
-        out(name) = timeOne(fn)
+        timeOne(name, fn).foreach(out(name) = _)
         if (elapsedSec > stopAt) cut = true
       }
+      val complete = !it.hasNext
       passMetas += PassMeta(kind, (System.nanoTime() - w0) / 1e9,
-        gcSeconds() - g0, loadAvg1m(), memAvailableGiB(), complete = !cut)
-      if (cut) System.err.println(
+        gcSeconds() - g0, loadAvg1m(), memAvailableGiB(), complete)
+      if (!complete) System.err.println(
         s"[bench] deadline (${deadlineSec}s) struck inside pass '$kind' " +
           s"after ${out.size}/${queries.size} queries — pass abandoned, " +
           "samples kept")
@@ -202,10 +212,10 @@ object Bench {
     def emitCumulative(repsDone: Int): Unit = {
       val stats = registry.flatMap { case (name, _) =>
         val ss = samplesOf(name)
-        if (ss.isEmpty) None
+        if (ss.isEmpty || failed.contains(name)) None
         else Some((name, median(ss), ss.min, ss.max, ss.size))
       }
-      if (stats.isEmpty) return
+      if (stats.isEmpty && failed.isEmpty) return
       val qs = stats.map { case (k, med, _, _, _) => s"\"" + k + "\":" + fmt(med) }
         .mkString("{", ",", "}")
       val total = stats.map(_._2).sum
@@ -213,9 +223,13 @@ object Bench {
       // prior round's record uses, so round-over-round diffs keep working).
       // Printed cumulatively per pass; the driver's tail keeps the LAST
       // (most complete) line, so any timeout preserves the newest state.
-      println(
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$repsDone,"queries":$qs,"sf":"$sfDir"}""")
-      Console.flush()
+      // With every query failed there is no line: a total of 0 s would
+      // read as the fastest run ever.
+      if (stats.nonEmpty) {
+        println(
+          s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$repsDone,"queries":$qs,"sf":"$sfDir"}""")
+        Console.flush()
+      }
       // full per-query detail (median + min/max spread) plus per-pass box
       // metadata for the side file — rewritten per pass for the same
       // survivability reason
@@ -225,8 +239,9 @@ object Bench {
       val passes = passMetas.map { m =>
         s"""{"pass":"${m.kind}","wallSec":${fmt(m.wallSec)},"gcSec":${fmt(m.gcSec)},"load1m":${fmt(m.load1m)},"memAvailGiB":${fmt(m.memAvailGiB)},"complete":${m.complete}}"""
       }.mkString("[", ",", "]")
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val detailLine =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$repsDone,"passes":$passes,"queries":$detail,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$repsDone,"passes":$passes,"queries":$detail,"failed":$failedJson,"sf":"$sfDir"}"""
       // The driver captures stdout with a tail that can truncate the
       // alphabetical head of the per-query map; persist the full line so
       // round-over-round comparisons never lose queries. SUBSET runs skip
@@ -276,7 +291,7 @@ object Bench {
         elapsedSec + lastPassWall * 1.05 <= deadlineSec)) {
       val s = timedPass(s"rep$i", rotated(i), stopAt = deadlineSec)
       timedSamples += s
-      if (s.size == registry.size) repsDone += 1
+      if (passMetas.last.complete) repsDone += 1
       lastPassWall = passMetas.last.wallSec
       emitCumulative(repsDone)
       i += 1
@@ -284,6 +299,9 @@ object Bench {
     if (repsDone < reps) System.err.println(
       s"[bench] degraded to $repsDone/$reps complete reps under the " +
         s"${deadlineSec}s deadline")
+    if (failed.nonEmpty) System.err.println(
+      s"[bench] ${failed.size} queries failed and have no median: " +
+        failed.mkString(" "))
 
     // Adaptive reps: a query whose spread (max−min) exceeds its own
     // median caught a GC/JIT episode in at least one sample (r6 bench:
@@ -307,5 +325,12 @@ object Bench {
       }
     }
     spark.stop()
+  }
+
+  /** Runs `body` once: its wall seconds, or the error it threw. */
+  private[graft] def attempt(body: => Unit): Either[Throwable, Double] = {
+    val s0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - s0) / 1e9) }
+    catch { case e: Throwable => Left(e) }
   }
 }

@@ -45,7 +45,6 @@ object Tables {
     * so PushedFilters/ReadSchema at the scan are unchanged. The check
     * inspects the pre-AQE physical plan only — nothing executes. */
   def spreadScan(df: DataFrame): DataFrame = {
-    if (sys.env.getOrElse("SPARK_GRAFT_SPREAD", "1") == "0") return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     val plan = df.queryExecution.sparkPlan
     if (plan.exists(

@@ -25,6 +25,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()
       else {
@@ -32,6 +33,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed += name
         }
         // same isolation as Bench: several operators persist a shared
         // intermediate (tokenized corpus, shingle index) with a
@@ -62,5 +64,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every result that could be written is on disk; now fail loudly
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(" "))
+      sys.exit(1)
+    }
   }
 }

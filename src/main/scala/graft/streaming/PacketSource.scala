@@ -16,12 +16,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * (/root/reference/src/main/java/org/test/pcap4j/CaptureNetworkReceiver.java:23-128,
   * SURVEY.md §2.1 S1). Where the reference spawns one capture thread per
   * network interface inside a single receiver JVM, this source plans one
-  * INPUT PARTITION per NIF per micro-batch — so on a real cluster each
-  * interface's stream is read by its own task, and adding NIFs scales out
-  * instead of up. No libpcap in this container: packets are synthesized
-  * deterministically (seeded by (nif, index)), which is also what makes
-  * the source unit-testable at all — the reference's pcap coupling left it
-  * untestable (SURVEY.md §5.1).
+  * INPUT PARTITION per NIF per micro-batch, so adding NIFs scales out
+  * instead of up. [[TrafficMonitor]] reads those partitions in
+  * `min(NIFs, defaultParallelism)` tasks (coalesced in
+  * `TrafficMonitor.packetSizes`): a task has a fixed scheduling and
+  * launch cost that one NIF's share of a micro-batch does not repay, and
+  * a task per core keeps every core busy. Caveat: NIFs of uneven volume
+  * that share a task are not rebalanced, so one busy NIF can make its task
+  * the batch's straggler.
+  *
+  * No libpcap here: packets are synthesized deterministically (seeded by
+  * (nif, index)), which is also what makes the source unit-testable at
+  * all — the reference's pcap coupling left it untestable (SURVEY.md §5.1).
   *
   * Usage:
   * {{{

@@ -34,8 +34,11 @@ final case class Alert(
   * over/under-limit state flips; first observation always emits —
   * /root/reference/src/main/java/org/test/pcap4j/KafkaProducer.java:34-41).
   *
-  * Scale design: the windowed sum is a streaming HashAggregate (partial on
-  * the map side, final after one hash exchange on (window, nif)); the
+  * Scale design: the scan stage reads the source's per-NIF partitions in
+  * at most `defaultParallelism` tasks ([[packetSizes]] coalesces them, no
+  * shuffle), so a micro-batch pays per-task fixed cost per core, not per
+  * NIF. The windowed sum is a streaming HashAggregate (partial in the scan
+  * tasks, final after one hash exchange on (window, nif)); the
   * edge-trigger keeps ONE Boolean per NIF in the checkpointed state store —
   * upgraded from the reference's lossy per-executor-JVM static map
   * (SURVEY.md §2.9 T4). At 1000 executors state is hash-partitioned by nif;
@@ -45,10 +48,20 @@ object TrafficMonitor {
 
   /** P1 projection (MainApp.java:41-42): packet → byte count. Sums are
     * LONG, not the reference's int (overflows at 2 GiB/window — SURVEY.md
-    * §7.0 delta 3). */
+    * §7.0 delta 3).
+    *
+    * The input is first coalesced to the session's `defaultParallelism`:
+    * [[PacketSource]] plans one partition per NIF, and at 64 NIFs × 125
+    * packets a scan task carries ~0.2 ms of payload work against several ms
+    * of scheduling and launch cost. `coalesce` never raises a partition
+    * count and adds no exchange, so a source that already plans at most
+    * that many partitions is unchanged. It is the streaming counterpart of
+    * [[graft.Tables.spreadScan]]: batch scans are sized by AQE and split
+    * packing, a micro-batch scan by nothing else. */
   def packetSizes(packets: DataFrame): DataFrame =
-    packets.select(col("nif"), octet_length(col("raw")).cast("long").as("bytes"),
-      col("ts"))
+    packets.coalesce(packets.sparkSession.sparkContext.defaultParallelism)
+      .select(col("nif"), octet_length(col("raw")).cast("long").as("bytes"),
+        col("ts"))
 
   /** A1+T1/T2: event-time 5-minute tumbling window sum per NIF, with a
     * watermark so state is bounded and late packets beyond `lateness` drop. */
@@ -209,11 +222,14 @@ object TrafficMonitor {
   /** S3: the limits lookup (MainApp.java:44-49), generalized: read the
     * `max` threshold from a limits DataFrame with (limit_name, limit_value)
     * — explicit name selection instead of the reference's brittle
-    * sort-position indexing (SURVEY.md §7.0 delta 4). */
+    * sort-position indexing (SURVEY.md §7.0 delta 4). A table without a
+    * `max` row fails here, naming the missing row. */
   def maxLimit(limits: DataFrame): Long = {
     import limits.sparkSession.implicits._
     limits.where($"limit_name" === "max")
-      .select($"limit_value".cast("long")).as[Long].head()
+      .select($"limit_value".cast("long")).as[Long].take(1).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        "limits table has no row with limit_name = 'max'"))
   }
 
   /** The full pipeline as one streaming Dataset: packets in, alert

@@ -302,6 +302,15 @@ class TrafficMonitorSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("maxLimit reads the max row and names it when it is missing") {
+    import spark.implicits._
+    val limits = Seq(("min", 10), ("max", 120)).toDF("limit_name", "limit_value")
+    assert(TrafficMonitor.maxLimit(limits) === 120L)
+    val e = intercept[IllegalArgumentException](
+      TrafficMonitor.maxLimit(limits.where($"limit_name" =!= "max")))
+    assert(e.getMessage.contains("limit_name = 'max'"))
+  }
+
   test("batch analogue matches streaming edge-trigger semantics") {
     import spark.implicits._
     val events = Seq(
