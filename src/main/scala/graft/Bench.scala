@@ -74,6 +74,7 @@ object Bench {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

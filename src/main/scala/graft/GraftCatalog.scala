@@ -78,6 +78,7 @@ object CatalogDemo {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf)
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")

@@ -10,8 +10,28 @@ import org.apache.spark.sql.SparkSession
   * cores (not the 200 default), UTC session time, and the engine's
   * Catalyst functions registered — equivalent to launching with
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
+  *
+  * The local file system is replaced ([[LocalFsConf]]). Without the
+  * native `libhadoop`, Hadoop's `RawLocalFileSystem` forks `chmod` for
+  * every file it creates, `readlink` around every `FileContext` rename and
+  * `ls -ld` for every permission it reports. Each micro-batch commit of
+  * the traffic monitor writes a write-ahead log entry, an offset log entry
+  * and one state-store delta per partition, so these forks were the
+  * larger part of a batch's fixed cost (3,277 process starts in one 20 s
+  * `traffic_paced` benchmark run on 4 cores). [[NioLocalFileSystem]] and
+  * [[NioLocalFs]] answer those calls with `java.nio`. What stays Hadoop's
+  * own code: the `.crc` sidecars (verified on `FileSystem` reads), Spark's
+  * state-store checksum files, atomic rename-with-overwrite, and
+  * umask-applied file modes (0644 for files, 0755 for directories).
   */
 object GraftSession {
+
+  /** The local Hadoop file system, for `FileSystem` and for `FileContext`
+    * (the path of Spark's checkpoint file manager). Every session builder
+    * applies it; the stream benchmark gets it through [[builder]]. */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   /** RocksDB-backed streaming state (SURVEY.md §2.9 scale note): the
     * default HDFS-backed store keeps every key of every stateful operator
@@ -43,6 +63,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "2048")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(LocalFsConf)
     val b1 =
       if (rocksDbState)
         b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)

@@ -20,6 +20,7 @@ object Scratch {
         sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"

@@ -13,6 +13,7 @@ object Smoke {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)

@@ -109,6 +109,18 @@ final case class PacketOffset(index: Long) extends Offset {
   override def json(): String = s"""{"index":$index}"""
 }
 
+object PacketOffset {
+  private val Json = """\{\s*"index"\s*:\s*(\d+)\s*\}""".r
+
+  /** Inverse of [[PacketOffset.json]]. Anything else, such as a corrupt
+    * offset log entry, throws: read as 0, it would silently replay the
+    * stream from its start. */
+  def fromJson(json: String): PacketOffset = json.trim match {
+    case Json(index) => PacketOffset(index.toLong)
+    case _ => throw new IllegalArgumentException(s"not a packet source offset: $json")
+  }
+}
+
 final class PacketMicroBatchStream(nifs: Array[String], packetsPerTrigger: Long,
     baseEpochMicros: Long, microsPerPacket: Long)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
@@ -145,8 +157,7 @@ final class PacketMicroBatchStream(nifs: Array[String], packetsPerTrigger: Long,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead")
 
-  override def deserializeOffset(json: String): Offset =
-    PacketOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))
+  override def deserializeOffset(json: String): Offset = PacketOffset.fromJson(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PacketOffset].index

@@ -20,6 +20,8 @@ object SparkSpec {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the file system the driver surfaces and the stream bench run on
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

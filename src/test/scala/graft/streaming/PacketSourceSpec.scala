@@ -1,16 +1,62 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.util.Properties
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.streaming.Trigger
 
 /** DataSource V2 packet source (SURVEY.md §2.1 S1 replacement). */
 class PacketSourceSpec extends SparkSpec {
+
+  private val nifs16 = (0 until 16).map(i => s"eth$i")
+
+  // 40 packets per NIF, one a minute from the provider's default base
+  // (a window boundary): windows [0,5) .. [35,40). The final watermark is
+  // the last packet's time, 39 min, so windows 0..6 close.
+  private def packets16 = spark.readStream
+    .format("graft.streaming.PacketSourceProvider")
+    .option("nifs", nifs16.mkString(","))
+    .option("packetsPerTrigger", "40")
+    .option("microsPerPacket", "60000000")
+    .load()
+
+  /** A max limit at the median window and the (nif, window start ms,
+    * bytes, alert) rows that [[packets16]] must yield under it, recomputed
+    * in plain Scala. */
+  private lazy val exactAlerts: (Long, Set[(String, Long, Long, Boolean)]) = {
+    val windows = (0 until 7).map { w =>
+      nifs16.map(n => n -> (5L * w until 5L * w + 5)
+        .map(PacketSource.payload(n, _).length.toLong).sum)
+    }
+    val limit = windows.flatten.map(_._2).sorted.apply(nifs16.size * 7 / 2)
+    val expected = nifs16.flatMap { n =>
+      var last = Option.empty[Boolean]
+      windows.zipWithIndex.flatMap { case (ws, w) =>
+        val bytes = ws.toMap.apply(n)
+        val over = bytes > limit
+        if (last.contains(over)) None
+        else {
+          last = Some(over)
+          Some((n, 1704067200000L + w * 300000L, bytes, over))
+        }
+      }
+    }.toSet
+    (limit, expected)
+  }
+
+  private def alertsIn(table: String): Set[(String, Long, Long, Boolean)] = {
+    import spark.implicits._
+    spark.table(table).as[Alert].collect()
+      .map(a => (a.nif, a.windowStart.getTime, a.bytes, a.alert)).toSet
+  }
 
   test("emits packetsPerTrigger rows per nif per micro-batch with stable schema") {
     import spark.implicits._
@@ -66,27 +112,7 @@ class PacketSourceSpec extends SparkSpec {
 
   test("pipeline scans 16 NIFs in at most defaultParallelism tasks per batch, alerts exact") {
     import spark.implicits._
-    val nifs = (0 until 16).map(i => s"eth$i")
-    // 40 packets per NIF, one a minute from the provider's default base
-    // (a window boundary): windows [0,5) .. [35,40). The final watermark
-    // is the last packet's time, 39 min, so windows 0..6 close.
-    val windows = (0 until 7).map { w =>
-      nifs.map(n => n -> (5L * w until 5L * w + 5)
-        .map(PacketSource.payload(n, _).length.toLong).sum)
-    }
-    val limit = windows.flatten.map(_._2).sorted.apply(nifs.size * 7 / 2)
-    val expected = nifs.flatMap { n =>
-      var last = Option.empty[Boolean]
-      windows.zipWithIndex.flatMap { case (ws, w) =>
-        val bytes = ws.toMap.apply(n)
-        val over = bytes > limit
-        if (last.contains(over)) None
-        else {
-          last = Some(over)
-          Some((n, 1704067200000L + w * 300000L, bytes, over))
-        }
-      }
-    }.toSet
+    val (limit, expected) = exactAlerts
 
     // (query id, task count) of every stage that reads the source
     val scans = new ConcurrentLinkedQueue[(String, Int)]
@@ -103,20 +129,12 @@ class PacketSourceSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val packets = spark.readStream
-        .format("graft.streaming.PacketSourceProvider")
-        .option("nifs", nifs.mkString(","))
-        .option("packetsPerTrigger", "40")
-        .option("microsPerPacket", "60000000")
-        .load()
       val limits = Seq(("max", limit)).toDF("limit_name", "limit_value")
-      val q = TrafficMonitor.pipeline(packets, limits, lateness = "0 seconds")
+      val q = TrafficMonitor.pipeline(packets16, limits, lateness = "0 seconds")
         .writeStream.format("memory").queryName("pk16")
         .trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000))
-      val got = spark.table("pk16").as[Alert].collect()
-        .map(a => (a.nif, a.windowStart.getTime, a.bytes, a.alert)).toSet
-      assert(got === expected)
+      assert(alertsIn("pk16") === expected)
 
       val id = q.id.toString
       val deadline = System.currentTimeMillis() + 10000
@@ -127,6 +145,55 @@ class PacketSourceSpec extends SparkSpec {
       assert(spark.sparkContext.defaultParallelism === 4)
       assert(tasks.forall(_ <= 4), s"scan stage task counts: $tasks")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a file: checkpointed pipeline commits every batch without starting a process") {
+    import spark.implicits._
+    val (limit, expected) = exactAlerts
+    val limits = Seq(("max", limit)).toDF("limit_name", "limit_value")
+    val checkpoint = Files.createTempDirectory("pk_commit")
+    val dump = Files.createTempFile("pk_commit", ".jfr")
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart").withStackTrace()
+    try {
+      recording.start()
+      val q = TrafficMonitor.pipeline(packets16, limits, lateness = "0 seconds")
+        .writeStream.format("memory").queryName("pkfile")
+        .option("checkpointLocation", checkpoint.toUri.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000))
+      recording.stop()
+      recording.dump(dump)
+      // (command, stack) of each process start. A reference cleaner may run
+      // at any time the cleanup of an earlier, unreachable session, which
+      // deletes that session's artifact directory with `rm -rf`; that is
+      // garbage collection, not work of this query.
+      val starts = RecordingFile.readAllEvents(dump).asScala.map { e =>
+        (e.getString("command"), Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+      }.filterNot(_._2.exists(_.startsWith("jdk.internal.ref.CleanerImpl")))
+      assert(starts.isEmpty, starts.map { case (command, stack) =>
+        (command +: stack.take(12)).mkString("\n  at ") }.mkString("process starts:\n", "\n", ""))
+      assert(alertsIn("pkfile") === expected)
+      // the batches were committed through the file system, .crc sidecars included
+      assert(Files.exists(checkpoint.resolve("commits/0")))
+      assert(Files.exists(checkpoint.resolve("commits/.0.crc")))
+    } finally {
+      recording.close()
+      Files.deleteIfExists(dump)
+      FileUtils.deleteDirectory(checkpoint.toFile)
+    }
+  }
+
+  test("an offset that is not a packet source offset fails loudly, naming it") {
+    val stream = new PacketMicroBatchStream(Array("eth0"), 10L, 0L, 1L)
+    assert(stream.deserializeOffset(PacketOffset(42L).json()) === PacketOffset(42L))
+    assert(stream.deserializeOffset(""" { "index" : 7 } """) === PacketOffset(7L))
+    for (bad <- Seq("{}", """{"idx":12}""", """{"index":-3}""", """{"index":"5"}""", ""))
+      withClue(bad) {
+        val e = intercept[IllegalArgumentException](stream.deserializeOffset(bad))
+        assert(e.getMessage.contains(bad))
+      }
   }
 
   test("packet source feeds the windowed-traffic pipeline end to end") {
