@@ -50,32 +50,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r15 (guide §2.2 "fewer, larger partitions"): let AQE re-optimize
-      // (coalesce/skew-split) the plan fragment that MATERIALIZES a cached
-      // relation. The default (false) exists only to keep a cached plan's
-      // output partitioning stable for consumers that might reuse it; this
-      // engine persists iteration cuts, fold deltas and shared projections
-      // whose byte size is what should set their partition count — without
-      // AQE every cache materializes at the full shuffle width and every
-      // downstream stage inherits width-many tiny tasks (measured at sf0.1:
-      // q_ndcg 1483→98 tasks, q_kcore 627→65, wall ~-45% each; at scale the
-      // same setting sizes cached partitions to advisory bytes instead of
-      // a constant). Semantics are unchanged — partitioning only.
-      // r15 (verdict item 7): the generated-class cache is a STATIC conf
-      // defaulting to 100 entries — a 389-query registry pass evicts and
-      // re-compiles (Janino + fresh JIT) continuously. Sized to hold the
-      // registry's working set; identical generated code then reuses its
-      // compiled class across passes. Scale-neutral (pure driver memory).
-      .config("spark.sql.codegen.cache.maxEntries", "2048")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.LocalFsConf)
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(fn: QFn): Unit =

@@ -73,12 +73,7 @@ object CatalogDemo {
     val phase = args.headOption.getOrElse("create")
     val base = args.lift(1).getOrElse("/root/repo/target/hive_demo")
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.LocalFsConf)
+    val spark = GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")

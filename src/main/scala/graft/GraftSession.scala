@@ -2,91 +2,67 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Front door for library users: a SparkSession builder pre-loaded with the
-  * engine's recommended configuration and native functions.
+/** The one session builder: Bench, Verify, Smoke, Scratch, CatalogDemo,
+  * the test suites and the stream benchmark all start from [[builder]],
+  * so they plan and run with the same configuration. Callers add only
+  * what is theirs (CatalogDemo its Hive metastore, the stream benchmark
+  * its run directories).
   *
-  * On a real cluster the same settings apply (only master/partitions
-  * change): AQE with skew-join handling on, shuffle partitions sized to
-  * cores (not the 200 default), UTC session time, and the engine's
-  * Catalyst functions registered — equivalent to launching with
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  *
-  * The local file system is replaced ([[LocalFsConf]]). Without the
-  * native `libhadoop`, Hadoop's `RawLocalFileSystem` forks `chmod` for
-  * every file it creates, `readlink` around every `FileContext` rename and
-  * `ls -ld` for every permission it reports. Each micro-batch commit of
-  * the traffic monitor writes a write-ahead log entry, an offset log entry
-  * and one state-store delta per partition, so these forks were the
-  * larger part of a batch's fixed cost (3,277 process starts in one 20 s
-  * `traffic_paced` benchmark run on 4 cores). [[NioLocalFileSystem]] and
-  * [[NioLocalFs]] answer those calls with `java.nio`. What stays Hadoop's
-  * own code: the `.crc` sidecars (verified on `FileSystem` reads), Spark's
-  * state-store checksum files, atomic rename-with-overwrite, and
-  * umask-applied file modes (0644 for files, 0755 for directories).
+  * Why each setting:
+  *   - shuffle partitions follow the cores (the 200 default makes
+  *     thousands of tiny tasks on a local machine);
+  *   - `canChangeCachedPlanOutputPartitioning`: persisted iteration cuts,
+  *     fold deltas and shared projections materialize through AQE, so
+  *     their partition count follows their bytes instead of freezing at
+  *     the shuffle width (q_ndcg 1,483 → 98 tasks at sf0.1). Partitioning
+  *     only; results are unchanged;
+  *   - `codegen.cache.maxEntries`: a static conf, default 100 entries. A
+  *     registry pass of ~390 queries would evict and recompile generated
+  *     classes continuously; 2048 holds its working set (driver memory
+  *     only);
+  *   - UTC session time, so timestamps render the same on every machine
+  *     and in the DuckDB oracle;
+  *   - no UI: nothing reads it, and each driver would bind a port;
+  *   - `spark.sql.extensions`: [[GraftExtensions]] injects the engine's
+  *     native functions and its optimizer rule into every session and
+  *     every `newSession()` of it, so no query registers anything;
+  *   - the local file system. Without the native `libhadoop`, Hadoop's
+  *     `RawLocalFileSystem` forks `chmod` for every file it creates,
+  *     `readlink` around every `FileContext` rename and `ls -ld` for every
+  *     permission it reports. Each micro-batch commit of the traffic
+  *     monitor writes a write-ahead log entry, an offset log entry and
+  *     one state-store delta per partition, so these forks were the
+  *     larger part of a batch's fixed cost (3,277 process starts in one
+  *     20 s `traffic_paced` benchmark run on 4 cores). [[NioLocalFileSystem]]
+  *     (for `FileSystem`) and [[NioLocalFs]] (for `FileContext`, the path
+  *     of Spark's checkpoint file manager) answer those calls with
+  *     `java.nio`. What stays Hadoop's own code: the `.crc` sidecars
+  *     (verified on `FileSystem` reads), Spark's state-store checksum
+  *     files, atomic rename-with-overwrite, and umask-applied file modes
+  *     (0644 for files, 0755 for directories).
   */
 object GraftSession {
 
-  /** The local Hadoop file system, for `FileSystem` and for `FileContext`
-    * (the path of Spark's checkpoint file manager). Every session builder
-    * applies it; the stream benchmark gets it through [[builder]]. */
-  val LocalFsConf: Map[String, String] = Map(
-    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+  /** Local cores for the driver surfaces: `SPARK_GRAFT_CPUS`, default 4. */
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** RocksDB-backed streaming state (SURVEY.md §2.9 scale note): the
-    * default HDFS-backed store keeps every key of every stateful operator
-    * on the executor HEAP — fine for the reference's one-Boolean-per-NIF
-    * state, fatal for 100 TB-scale state like [[streaming.StreamingDedup]]'s
-    * per-bucket claims. RocksDB spills state to local disk with bounded
-    * memory and incremental checkpointing. Session-wide default here;
-    * per-query override via the same key in `writeStream` options'
-    * sibling conf if mixed workloads need it. */
+  /** RocksDB-backed streaming state, for `spark.sql.streaming.stateStore.
+    * providerClass`: the default HDFS-backed store keeps every key of
+    * every stateful operator on the executor heap, while RocksDB spills
+    * to local disk with bounded memory. It measured slower on the traffic
+    * monitor's tiny state, so no session sets it by default. */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  def builder(master: String = "local[*]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
-      rocksDbState: Boolean = false, cbo: Boolean = false): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // cached-plan AQE (r15, guide §2.2): persisted iteration cuts /
-      // fold deltas / shared projections materialize through AQE, so
-      // their partition count follows their BYTES (advisory size)
-      // instead of freezing at the session shuffle width — semantics
-      // unchanged, partitioning only
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // generated-class cache sized for a wide query library (static
-      // conf, default 100 entries; driver-memory-only cost)
       .config("spark.sql.codegen.cache.maxEntries", "2048")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(LocalFsConf)
-    val b1 =
-      if (rocksDbState)
-        b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-      else b
-    // cost-based optimization: meaningful only after `ANALYZE TABLE ...
-    // COMPUTE STATISTICS FOR ALL COLUMNS` on the catalog tables — with
-    // stats, the optimizer reorders multi-way joins from estimated
-    // cardinalities instead of relying on AQE + hints at runtime (the
-    // difference between the right plan and a lucky one on a 6-way join
-    // over 100 TB). Histograms sharpen selectivity on skewed columns.
-    // See CboSpec for the measured effect.
-    if (cbo)
-      b1.config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.sql.statistics.histogram.enabled", "true")
-    else b1
-  }
-
-  def getOrCreate(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
-    // idempotent — covers sessions created before the extensions conf
-    functions.VectorFunctions.register(spark)
-    multimodal.MediaFunctions.register(spark)
-    spark
-  }
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 }

@@ -1,27 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway profiling/plan-audit harness (not part of the driver contract). */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // r15 (verdict item 7): the generated-class cache is a STATIC conf
-      // defaulting to 100 entries — a 389-query registry pass evicts and
-      // re-compiles (Janino + fresh JIT) continuously. Sized to hold the
-      // registry's working set; identical generated code then reuses its
-      // compiled class across passes. Scale-neutral (pure driver memory).
-      .config("spark.sql.codegen.cache.maxEntries", "2048")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.LocalFsConf)
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
 
@@ -223,7 +206,6 @@ object Scratch {
       import org.apache.spark.sql.functions._
       import graft.operators.{CorpusClean, Dedup, TextAnalysis}
       // mirrors CorpusClean.clean stage for stage (same persist points)
-      graft.functions.VectorFunctions.register(spark)
       val docs = Tables.t(spark, dir, "documents")
       val filtered = docs
         .select(col("doc_id").cast("long").as("doc_id"),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,23 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name subset for fast iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r15: cached-plan AQE, same setting (and rationale) as Bench —
-      // Verify must execute the plans the bench times
-      // r15 (verdict item 7): the generated-class cache is a STATIC conf
-      // defaulting to 100 entries — a 389-query registry pass evicts and
-      // re-compiles (Janino + fresh JIT) continuously. Sized to hold the
-      // registry's working set; identical generated code then reuses its
-      // compiled class across passes. Scale-neutral (pure driver memory).
-      .config("spark.sql.codegen.cache.maxEntries", "2048")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.LocalFsConf)
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -3,14 +3,12 @@ package graft.functions
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
@@ -332,19 +330,4 @@ object SketchFunctions {
       "cms_estimate_long(sk, key) - estimated frequency of a long key"),
     ("bloom_might_contain", (e: Seq[Expression]) => BloomMightContain(e(0), e(1)),
       "bloom_might_contain(h, bloom) - BloomFilter membership probe"))
-
-  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    fns.map { case (name, builder, usage) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.SketchExprs", name, usage),
-        builder)
-    }
-
-  /** Idempotent registration (same pattern as [[VectorFunctions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

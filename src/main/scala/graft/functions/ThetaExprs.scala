@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -154,7 +152,7 @@ object ThetaExprs {
       s"$what must be an integer literal, got $other")
   }
 
-  private val fns: Seq[(String, FunctionBuilder, String)] = Seq(
+  val fns: Seq[(String, FunctionBuilder, String)] = Seq(
     ("kmv_agg", (e: Seq[Expression]) => e match {
       case Seq(c) => KmvAgg(c)
       case Seq(c, k) => KmvAgg(c, intArg(k, "kmv_agg k"))
@@ -167,19 +165,4 @@ object ThetaExprs {
       case _ => throw new IllegalArgumentException(
         s"kmv_union_agg takes 1 or 2 arguments, got ${e.length}")
     }, "kmv_union_agg(sk[, k]) - merge array<bigint> KMV sketches"))
-
-  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    fns.map { case (name, builder, usage) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.ThetaExprs", name, usage),
-        builder)
-    }
-
-  /** Idempotent registration (same pattern as [[VectorFunctions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

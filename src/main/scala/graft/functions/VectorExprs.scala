@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -105,8 +103,7 @@ case class VecCosine(left: Expression, right: Expression) extends VectorBinaryEx
 }
 
 object VectorFunctions {
-  /** (name, builder, usage) triples, shared by the extensions injector and
-    * the idempotent in-session registrar. */
+  /** (name, builder, usage) triples, injected by [[graft.GraftExtensions]]. */
   val fns: Seq[(String, FunctionBuilder, String)] = Seq(
     ("vec_dot", (e: Seq[Expression]) => VecDot(e(0), e(1)),
       "vec_dot(a, b) - dot product of two float arrays, double precision"),
@@ -140,20 +137,4 @@ object VectorFunctions {
       case _ => throw new IllegalArgumentException(
         s"shingle_hashes takes 1 or 2 arguments, got ${e.length}")
     }, "shingle_hashes(text[, k]) - distinct 60-bit md5 hashes of word k-shingles"))
-
-  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    fns.map { case (name, builder, usage) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.VectorExprs", name, usage),
-        builder)
-    }
-
-  /** Idempotent registration into an existing session (e.g. one the test
-    * harness or driver built without `spark.sql.extensions`). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** z_interleave(x, y): the Morton (Z-order) code of two keys — the low
@@ -139,18 +137,4 @@ object ZorderFunctions {
       "z_interleave(x, y) - 64-bit Morton code of two 32-bit keys"),
     ("hilbert_index", (e: Seq[Expression]) => HilbertIndex(e(0), e(1)),
       "hilbert_index(x, y) - order-16 Hilbert distance of two 16-bit keys"))
-
-  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    fns.map { case (name, builder, usage) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.ZorderExprs", name, usage),
-        builder)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

@@ -2,13 +2,11 @@ package graft.multimodal
 
 import java.util.zip.CRC32
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -239,18 +237,4 @@ object MediaFunctions {
   val fns: Seq[(String, FunctionBuilder, String)] = Seq(
     ("media_meta", (e: Seq[Expression]) => MediaMeta(e(0)),
       "media_meta(bytes) - container-header metadata (png/bmp/wav/jpeg/gif) as a struct"))
-
-  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
-    fns.map { case (name, builder, usage) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.multimodal.MediaHeader", name, usage),
-        builder)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

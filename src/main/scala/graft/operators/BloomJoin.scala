@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.SketchFunctions
-
 /** Bloom-pruned semi join — the explicit form of the runtime row-level
   * filtering a 100 TB fact⋈dim semi join lives or dies by.
   *
@@ -35,7 +33,6 @@ object BloomJoin {
       smallKey: String, expectedItems: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
     val spark = big.sparkSession
-    SketchFunctions.register(spark)
     val bf = small.select(xxhash64(col(smallKey)).as("__h"))
       .stat.bloomFilter("__h", expectedItems, fpp)
     val bytes = {

@@ -97,7 +97,6 @@ object Boilerplate {
     * (gaps where empties were dropped), so downstream reassembly
     * never needs a second window. */
   def htmlLines(docs: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("doc_id"),
         split(stripMarkup(col(htmlCol)), "\n").as("raw"))

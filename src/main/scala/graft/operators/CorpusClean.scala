@@ -33,7 +33,6 @@ object CorpusClean {
   def clean(docs: DataFrame, idCol: String, textCol: String,
       lang: String = "en", minQuality: Long = 3000L,
       jaccard: Double = 0.8): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     // Native kernels for the scan's inner loop: `norm_ws` replaces the
     // \s+ regex (byte-identical output), and `clean_gate` fuses
     // language-ID + quality scoring into ONE boolean predicate per row.
@@ -96,7 +95,6 @@ object CorpusClean {
   def dropReasons(docs: DataFrame, idCol: String, textCol: String,
       lang: String = "en", minQuality: Long = 3000L,
       jaccard: Double = 0.8): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val base = docs
       .select(col(idCol).cast("long").as("doc_id"),
         call_function("norm_ws", col(textCol)).as("norm_text"))
@@ -137,7 +135,6 @@ object CorpusClean {
       jaccard: Double = 0.8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val n0 = docs.count()
     val filtered = gateFiltered(docs, idCol, textCol, lang, minQuality)
     val n1 = filtered.count()

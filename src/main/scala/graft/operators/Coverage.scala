@@ -49,7 +49,6 @@ object Coverage {
       k: Int): DataFrame = {
     require(k >= 1 && k <= 64, s"need 1 <= k <= 64, got $k")
     val spark = docs.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     var rel = docs
       .where(expr(s"size(${Dedup.wordsExpr(textCol)}) >= ${Dedup.ShingleK}"))
       .select(col(idCol).cast("long").as("doc_id"),

@@ -172,7 +172,6 @@ object Dedup {
     * true Jaccard on the HASHED sets — identical to string-shingle Jaccard
     * up to a 2^-60 collision, and array_intersect on longs beats strings. */
   def signatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       // the ≥ k-words precondition is checked on a cheap split BEFORE the
       // kernel runs: filtering on shingles.isNotNull instead gets pushed
@@ -336,7 +335,6 @@ object Dedup {
   /** Native [[graft.functions.SimHash60]] kernel (bit-identical to
     * [[simhashExpr]], ~10× cheaper per doc). */
   def simhashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).as("doc_id"),
         call_function("simhash60", col(textCol)).as("simhash"))
@@ -657,7 +655,6 @@ object Dedup {
     * `shingle_hashes` kernel), null-filtered: docs with < k words emit no
     * shingles and exactly-match nothing. */
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
         call_function("shingle_hashes", col(textCol)).as("sh"))
       .where(col("sh").isNotNull)

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -89,7 +89,6 @@ object Similarity {
     // corpus scan + signature fold runs once. The default 16×64 geometry
     // uses the native SrpSig16 kernel; other geometries fall back to the
     // (bit-identical) SQL-expression fold.
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val sigCol =
       if (nPlanes == 16 && dim == 64) call_function("srp_sig16", col(embCol))
       else srpSignature(embCol, hyperplanes(nPlanes, dim))
@@ -733,7 +732,6 @@ object Similarity {
     * see uncapped, and the graded slice is bounded anyway. */
   def blockingMetrics(vectors: DataFrame, idCol: String, embCol: String,
       threshold: Double): DataFrame = {
-    ensureRegistered(vectors.sparkSession)
     val v = vectors.select(col(idCol).cast("long").as("vec_id"),
         col(embCol).as("emb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -783,7 +781,6 @@ object Similarity {
   def kCenterGreedy(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    ensureRegistered(vecs.sparkSession)
     val v = vecs.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -836,7 +833,6 @@ object Similarity {
     * independent of k, so k ∝ n stays affordable). */
   def semDedup(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, threshold: Double): DataFrame = {
-    ensureRegistered(vecs.sparkSession)
     val v = vecs.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("v"))
     val centers = kCenterGreedy(vecs, idCol, vecCol, k)
@@ -889,7 +885,6 @@ object Similarity {
     * the larger id always drops at threshold <= 1). */
   def semDedupKMeans(vecs: DataFrame, idCol: String, vecCol: String,
       nCells: Int, threshold: Double, iters: Int = 2): DataFrame = {
-    ensureRegistered(vecs.sparkSession)
     val spark = vecs.sparkSession
     import spark.implicits._
     val cs = kMeansCentroids(vecs, idCol, vecCol, nCells, iters)
@@ -1123,8 +1118,4 @@ object Similarity {
         lit(nPairs).as("n_pairs"),
         expr(s"(matches * 1000000) div ${nPairs}L").as("recall_ppm"))
   }
-
-  /** Ensure native vector functions exist in this session. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    graft.functions.VectorFunctions.register(spark)
 }

@@ -71,7 +71,6 @@ object TextAnalysis {
   def languageIdNgram(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // native kernel: lowercases once and slides in one loop; the SQL
     // formulation re-evaluates lower(text) per gram and per language
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val withScores = trigramProfiles.foldLeft(
       docs.select(col(idCol).as("doc_id"), col(textCol))
         .where(expr(s"length($textCol) >= 3"))) {

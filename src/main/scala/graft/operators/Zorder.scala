@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZorderFunctions
-
 /** Z-order (Morton-curve) data clustering — the write-side layout that
   * makes MULTI-dimensional filters prune at read time.
   *
@@ -26,19 +24,15 @@ object Zorder {
 
   /** Morton code of two key columns (low 32 bits each; normalize
     * negative / wide domains first). */
-  def zCol(df: DataFrame, a: Column, b: Column): Column = {
-    ZorderFunctions.register(df.sparkSession)
+  def zCol(a: Column, b: Column): Column =
     call_function("z_interleave", a.cast("long"), b.cast("long"))
-  }
 
   /** Hilbert-curve distance of two key columns (low 16 bits each) — the
     * locality-stricter alternative to [[zCol]]: consecutive curve values
     * are always grid neighbors, so d-sorted row groups carry tighter
     * min/max bounds than Morton's seam-crossing runs. */
-  def hilbertCol(df: DataFrame, a: Column, b: Column): Column = {
-    ZorderFunctions.register(df.sparkSession)
+  def hilbertCol(a: Column, b: Column): Column =
     call_function("hilbert_index", a.cast("long"), b.cast("long"))
-  }
 
   /** Write `df` z-ordered on (a, b): range-partition into `numFiles`
     * z-runs, sort each run locally, write parquet. `options` passes
@@ -46,12 +40,12 @@ object Zorder {
     * fine-grained row groups, as the spec does). */
   def clusterWrite(df: DataFrame, path: String, a: Column, b: Column,
       numFiles: Int, options: Map[String, String] = Map.empty): Unit =
-    clusterWriteBy(df, path, zCol(df, a, b), numFiles, options)
+    clusterWriteBy(df, path, zCol(a, b), numFiles, options)
 
   /** [[clusterWrite]] along the Hilbert curve instead of the Z-curve. */
   def clusterWriteHilbert(df: DataFrame, path: String, a: Column, b: Column,
       numFiles: Int, options: Map[String, String] = Map.empty): Unit =
-    clusterWriteBy(df, path, hilbertCol(df, a, b), numFiles, options)
+    clusterWriteBy(df, path, hilbertCol(a, b), numFiles, options)
 
   private def clusterWriteBy(df: DataFrame, path: String, curve: Column,
       numFiles: Int, options: Map[String, String]): Unit =

@@ -1238,8 +1238,6 @@ object Curation extends QueryModule {
     //      reproduces the exact k-smallest-distinct state and estimate. ----
     GraftQuery("q_kmv_distinct",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
-        graft.functions.ThetaExprs.register(s)
         t(s, dir, "documents")
           .select(col("lang"),
             explode(call_function("shingle_hashes", col("text"))).as("h"))
@@ -1266,8 +1264,6 @@ object Curation extends QueryModule {
     //      reproductions across engines. ----
     GraftQuery("q_kmv_overlap",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
-        graft.functions.ThetaExprs.register(s)
         val sk = t(s, dir, "documents")
           .where(col("lang").isin("en", "de"))
           .select(col("lang"),
@@ -1573,7 +1569,6 @@ object Curation extends QueryModule {
     //      property, verified in SQL, at every scale) ----
     GraftQuery("q_kmv_rollup",
       (s, dir) => {
-        graft.functions.ThetaExprs.register(s)
         val byNation = t(s, dir, "orders")
           .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
           .select(col("c_nationkey").as("nationkey"),
@@ -1694,7 +1689,6 @@ object Curation extends QueryModule {
 
     GraftQuery("q_bottomk_sample",
       (s, dir) => {
-        graft.functions.ThetaExprs.register(s)
         // withH feeds the sketch AND the membership probe: two scans,
         // but each is a 2-column pruned projection of the id column
         // only (never the payload) — cheaper than caching corpus-wide

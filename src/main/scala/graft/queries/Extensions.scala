@@ -1323,7 +1323,6 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_embed_neardup",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         Similarity.lshPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
       },
       Some(s"""$duckSrpCtes,
@@ -1346,7 +1345,6 @@ object Extensions extends QueryModule {
     // reproduced SRP pairs
     GraftQuery("q_embed_clusters",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         graft.operators.Dedup.dupClusters(
           Similarity.lshPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
             .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
@@ -1383,7 +1381,6 @@ object Extensions extends QueryModule {
     // ranks with the exclusion applied.
     GraftQuery("q_hard_negatives",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         val groups = graft.operators.Dedup.dupClusters(
           Similarity.lshPairs(emb, "vec_id", "embedding", 0.4)
@@ -1406,7 +1403,6 @@ object Extensions extends QueryModule {
     // change nothing semantically.
     GraftQuery("q_hard_negatives_artifact",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         // The artifact is keyed on a fingerprint of WHAT was clustered,
         // not just the path: with a persistent metastore, a regenerated
@@ -1443,7 +1439,6 @@ object Extensions extends QueryModule {
     // run at corpus scale)
     GraftQuery("q_blocking_metrics",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         Similarity.blockingMetrics(
           t(s, dir, "embeddings").where(col("vec_id") < 500),
           "vec_id", "embedding", threshold = 0.4)
@@ -1484,7 +1479,6 @@ object Extensions extends QueryModule {
     // recurrence round for round.
     GraftQuery("q_kcenter_coreset",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         Similarity.kCenterGreedy(
           t(s, dir, "embeddings"), "vec_id", "embedding", k = 6)
       },
@@ -1514,7 +1508,6 @@ object Extensions extends QueryModule {
     // vector, hash-matched against the stage-for-stage unrolled oracle.
     GraftQuery("q_semdedup",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         Similarity.semDedup(
           t(s, dir, "embeddings"), "vec_id", "embedding",
           k = 6, threshold = 0.4)
@@ -1533,7 +1526,6 @@ object Extensions extends QueryModule {
     // precedent); the SemDedupKMeansSpec carries the semantics.
     GraftQuery("q_semdedup_kmeans",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         Similarity.semDedupKMeans(
           t(s, dir, "embeddings"), "vec_id", "embedding",
           nCells = 6, threshold = 0.4)
@@ -1559,7 +1551,6 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_sim_topk",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.bruteTopK(emb, emb.where(col("vec_id") < 8), "vec_id", "embedding", 5)
       },
@@ -1581,7 +1572,6 @@ object Extensions extends QueryModule {
     // dequantize → cosine → top-k bit-for-bit.
     GraftQuery("q_int8_topk",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.int8TopK(emb, emb.where(col("vec_id") < 8),
           "vec_id", "embedding", 5)
@@ -1618,7 +1608,6 @@ object Extensions extends QueryModule {
     // SimilaritySpec; not SQL-oracled (approximate by design).
     GraftQuery("q_sim_ivf",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.ivfTopK(emb, emb.where(col("vec_id") < 8),
           "vec_id", "embedding", "label", 5, nProbe = 2)
@@ -1629,7 +1618,6 @@ object Extensions extends QueryModule {
     // rows-only; recall asserted in SimilaritySpec.
     GraftQuery("q_sim_ivf_kmeans",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.ivfKMeansTopK(emb, emb.where(col("vec_id") < 8),
           "vec_id", "embedding", 5, nCells = 8, nProbe = 2)
@@ -1640,7 +1628,6 @@ object Extensions extends QueryModule {
     // recall-vs-brute is asserted in SimilaritySpec
     GraftQuery("q_sim_pq",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.pqTopK(emb, emb.where(col("vec_id") < 8),
           "vec_id", "embedding", 5)
@@ -1652,7 +1639,6 @@ object Extensions extends QueryModule {
     // contract is asserted in SimilaritySpec.
     GraftQuery("q_sim_ivfpq",
       (s, dir) => {
-        Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         Similarity.ivfPqTopK(emb, emb.where(col("vec_id") < 8),
           "vec_id", "embedding", 5, nCells = 8, nProbe = 3)
@@ -1899,7 +1885,6 @@ object Extensions extends QueryModule {
     // header_hex even though the round-trip is self-consistent.
     GraftQuery("q_media_meta",
       (s, dir) => {
-        graft.multimodal.MediaFunctions.register(s)
         Multimodal.fixtures(t(s, dir, "documents"), "doc_id").toDF()
           .select(col("doc_id"),
             lower(hex(expr(s"substring(media, 1, ${Multimodal.HeaderHexBytes})")))
@@ -2201,7 +2186,6 @@ object Extensions extends QueryModule {
     // oracle-checked in aggregate.
     GraftQuery("q_media_route",
       (s, dir) => {
-        graft.multimodal.MediaFunctions.register(s)
         Multimodal.fixtures(t(s, dir, "documents"), "doc_id").toDF()
           .select(expr("media_meta(media)").as("m"),
             expr("octet_length(media)").cast("long").as("nb"))
@@ -3895,7 +3879,6 @@ object Extensions extends QueryModule {
     // mutation, which corrupts the coordinate swap.
     GraftQuery("q_hilbert",
       (s, dir) => {
-        graft.functions.ZorderFunctions.register(s)
         t(s, dir, "orders").select(col("o_orderkey"),
           call_function("hilbert_index",
             pmod(col("o_custkey"), lit(65536)).cast("long"),
@@ -3930,7 +3913,6 @@ object Extensions extends QueryModule {
     // DuckDB mirror stays in BIGINT range.
     GraftQuery("q_zorder",
       (s, dir) => {
-        graft.functions.ZorderFunctions.register(s)
         t(s, dir, "orders").select(col("o_orderkey"),
           call_function("z_interleave",
             pmod(col("o_custkey"), lit(65536)).cast("long"),
@@ -3952,7 +3934,6 @@ object Extensions extends QueryModule {
     // candidate keys of the latest "batch" (the 1998 ship year).
     GraftQuery("q_heavy_hitters",
       (s, dir) => {
-        graft.functions.SketchFunctions.register(s)
         val li = t(s, dir, "lineitem")
         val cms = li
           .groupBy(col("l_returnflag"))
@@ -3975,7 +3956,6 @@ object Extensions extends QueryModule {
     // matview (UpsertSink.mergeQuantileBatch).
     GraftQuery("q_kll_quantile",
       (s, dir) => {
-        graft.functions.SketchFunctions.register(s)
         t(s, dir, "lineitem")
           .groupBy(col("l_returnflag"))
           .agg(call_function("kll_sketch_agg",

@@ -120,7 +120,6 @@ object Mining extends QueryModule {
     //      construction ----
     GraftQuery("q_margin_mine",
       (s, dir) => {
-        graft.operators.Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         val x = emb.where(col("vec_id") % 2 === 0)
         val y = emb.where(col("vec_id") % 2 === 1)
@@ -341,7 +340,6 @@ object Mining extends QueryModule {
     //      top-N (never a per-query full sort) ----
     GraftQuery("q_maxsim_topk",
       (s, dir) => {
-        graft.operators.Similarity.ensureRegistered(s)
         val v = t(s, dir, "embeddings")
           .select((col("vec_id") / 4).cast("long").as("doc_id"),
             col("vec_id"), col("embedding"))
@@ -442,7 +440,6 @@ object Mining extends QueryModule {
     //      ppm recall per dim with the 64-dim row as the 1e6 anchor ----
     GraftQuery("q_matryoshka_recall",
       (s, dir) => {
-        graft.operators.Similarity.ensureRegistered(s)
         val emb = t(s, dir, "embeddings")
         graft.operators.Similarity.matryoshkaRecall(
           emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",

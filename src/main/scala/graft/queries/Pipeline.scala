@@ -254,7 +254,6 @@ object Pipeline extends QueryModule {
     GraftQuery("q_decontaminate",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         // native k-shingle kernel (NULL for docs with < 5 words — same
         // guard as the oracle's WHERE); the interpreted HOF form cost
         // ~4s of the bench at sf0.1
@@ -1151,7 +1150,6 @@ object Pipeline extends QueryModule {
     //      hand cases + single-digit-mutation property) ----
     GraftQuery("q_luhn_redact",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         import s.implicits._
         t(s, dir, "documents").select($"doc_id",
           call_function("luhn_redact", expr(luhnFixtureExpr))
@@ -1175,7 +1173,6 @@ object Pipeline extends QueryModule {
     //      by IbanRedactSpec's hand cases + mutation property) ----
     GraftQuery("q_iban_redact",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         import s.implicits._
         t(s, dir, "documents").select($"doc_id",
           call_function("iban_redact", expr(ibanFixtureExpr))

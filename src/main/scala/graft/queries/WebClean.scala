@@ -181,7 +181,6 @@ object WebClean extends QueryModule {
     //      code point; every other width class is NFC-stable ----
     GraftQuery("q_unicode_nfc",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         graft.operators.Utf8Corpus.decorate(
             t(s, dir, "documents"), "doc_id", "text")
           .select(col("doc_id"),
@@ -205,7 +204,6 @@ object WebClean extends QueryModule {
     //      at exactly 2 copies keeping the even id ----
     GraftQuery("q_nfc_dedup",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         val docs = t(s, dir, "documents")
         val pre = new String(Character.toChars(0xE9)) // é precomposed
         val cmb = "e" + new String(Character.toChars(0x301)) // e + U+0301
@@ -272,7 +270,6 @@ object WebClean extends QueryModule {
     //      same translate over the SAME shared from/to constants ----
     GraftQuery("q_homoglyph_dedup",
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         val docs = t(s, dir, "documents")
         val spoof = "pаypаl оffеr " // Cyrillic а о е
         val variants = docs.select((col("doc_id") * 2).as("id"),

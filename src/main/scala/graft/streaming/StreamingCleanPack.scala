@@ -104,30 +104,19 @@ object StreamingCleanPack {
     * same directory instead of duplicating it — staging is idempotent
     * for any crash point around the clean commit (the hook fires
     * before the texts append; see [[StreamingCorpusClean.foldDocs]]). */
-  private val StageProf = sys.env.get("SPARK_GRAFT_FOLDPROF").contains("1")
-  private def sprof[A](name: String)(f: => A): A =
-    if (!StageProf) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"STAGEPROF $name%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
   private[graft] def stagePending(spark: SparkSession, base: String,
       delta: DataFrame): Unit = {
     // two consumers (content tag + write): persist so the delta's
     // anti-join evaluates once per fold, not once per action (r14)
     val d = delta.persist()
     try {
-      val row = sprof("agg.head")(d.agg(
+      val row = d.agg(
         count(lit(1)), min(col("doc_id")), max(col("doc_id")),
-        sum(expr("doc_id % 1000000007L"))).head)
+        sum(expr("doc_id % 1000000007L"))).head
       if (row.getLong(0) > 0L) {
         val tag = s"d_${row.getLong(1)}_${row.getLong(2)}_" +
           s"${row.getLong(0)}_${row.getLong(3)}"
-        sprof("pending.write")(
-          d.write.mode("overwrite").parquet(s"${pendingPath(base)}/$tag"))
+        d.write.mode("overwrite").parquet(s"${pendingPath(base)}/$tag")
       }
     } finally { d.unpersist(); () }
   }

@@ -62,20 +62,6 @@ object StreamingCorpusClean {
     * the map-side fast path. */
   private[streaming] val BroadcastBatchRows: Long = 4L << 20
 
-  /** Logging-only per-action fold timer (SPARK_GRAFT_FOLDPROF=1) —
-    * attributes a clean fold's wall to its individual actions for the
-    * optimization rounds' measurement discipline. Zero effect when
-    * unset. */
-  private val FoldProf = sys.env.get("SPARK_GRAFT_FOLDPROF").contains("1")
-  private def prof[A](name: String)(f: => A): A =
-    if (!FoldProf) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"FOLDPROF $name%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
   private def textsPath(base: String) = s"$base/texts"
   private def bandsPath(base: String) = s"$base/bands"
   private def dropsPath(base: String) = s"$base/drops"
@@ -109,7 +95,6 @@ object StreamingCorpusClean {
       idCol: String, textCol: String, lang: String = "en",
       minQuality: Long = 3000L, jaccard: Double = 0.8,
       onNewlyKept: Option[DataFrame => Unit] = None): Unit = {
-    graft.functions.VectorFunctions.register(spark)
     val storedT = readOr(spark, textsPath(base), textSchema)
     val storedB = readOr(spark, bandsPath(base), bandSchema)
 
@@ -166,7 +151,7 @@ object StreamingCorpusClean {
     // of OOMing the driver or tripping the 8 GB broadcast cap. The count
     // also short-circuits a fully-replayed/empty fold (every append and
     // probe below would be empty anyway — the no-op replay contract).
-    val nBatch = prof("batchTexts.count")(batchTexts.count())
+    val nBatch = batchTexts.count()
     if (nBatch == 0L) return
     def hinted(df: DataFrame): DataFrame =
       if (nBatch <= BroadcastBatchRows) broadcast(df) else df
@@ -222,7 +207,7 @@ object StreamingCorpusClean {
       // candIds is collision-sized, not batch-bounded (a hot bucket can
       // select many stored mates): gate its broadcast on ITS OWN count —
       // cands is checkpointed, so this is an RDD-backed count
-      val nCands = prof("cands.count")(cands.count())
+      val nCands = cands.count()
       val candIds = cands.select(col("doc_a").as("cid"))
         .unionByName(cands.select(col("doc_b").as("cid"))).distinct()
       val sh = storedT.unionByName(newExact)
@@ -252,8 +237,8 @@ object StreamingCorpusClean {
       // bought nothing; a crash-replayed fold re-appends the same
       // rows either way, and drops duplicates are absorbed by the
       // left_anti reads)
-      prof("drops.append")(demoted.unionByName(verified).write.mode("append")
-        .parquet(dropsPath(base)))
+      demoted.unionByName(verified).write.mode("append")
+        .parquet(dropsPath(base))
       // the newly-kept delta is surfaced BEFORE the bands/texts appends
       // (r14 reorder): texts is the commit point (a replayed batch
       // no-ops only once texts landed), so every crash window either
@@ -261,10 +246,10 @@ object StreamingCorpusClean {
       // already staged it. (With the fold relations checkpointed the
       // appends can no longer invalidate them — RDD-backed plans read
       // no path — but the ordering stays load-bearing for replay.)
-      prof("hook(newlyKept)")(onNewlyKept.foreach(f =>
-        f(newExact.join(verified, Seq("doc_id"), "left_anti"))))
-      prof("bands.append")(newBands.write.mode("append").parquet(bandsPath(base)))
-      prof("texts.append")(newExact.write.mode("append").parquet(textsPath(base)))
+      onNewlyKept.foreach(f =>
+        f(newExact.join(verified, Seq("doc_id"), "left_anti")))
+      newBands.write.mode("append").parquet(bandsPath(base))
+      newExact.write.mode("append").parquet(textsPath(base))
     }
   }
 

@@ -28,7 +28,6 @@ object StreamingDedup {
 
   /** docs stream (idCol, textCol) → banded (band, bhash, doc_id). */
   def bandedSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     import graft.operators.Dedup.{Bands, RowsPerBand, foldDigest}
     docs
       .select(col(idCol).cast("long").as("doc_id"),
@@ -75,7 +74,6 @@ object StreamingDedup {
     * stream needs no verify step for the hd≤3 contract, only a Hamming
     * recheck on the candidate pair. */
   def bandedSimhashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     import graft.operators.Dedup.{SimhashBands, SimhashBandBits}
     docs
       .select(col(idCol).cast("long").as("doc_id"),

@@ -92,7 +92,6 @@ object StreamingSemDedup {
   /** Fold one micro-batch of vectors `(idCol, vecCol)`. */
   def fold(spark: SparkSession, base: String, batch: DataFrame,
       idCol: String, vecCol: String, threshold: Double): Unit = {
-    Similarity.ensureRegistered(spark)
     val centers = spark.read.schema(centerSchema)
       .parquet(centersPath(base))
     val stored = readOr(spark, membersPath(base), memberSchema)

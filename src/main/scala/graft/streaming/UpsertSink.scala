@@ -196,11 +196,10 @@ object UpsertSink {
     * of [[mergeSketchBatch]]. KLL merge is associative and
     * order-independent but (like any rewrite) replays are fenced by
     * batchId. Build batch sketches with `kll_sketch_agg(x)`, read back
-    * with `kll_quantile(sketchCol, q)` (both registered by
+    * with `kll_quantile(sketchCol, q)` (both defined in
     * [[graft.functions.SketchFunctions]]). */
   def mergeQuantileBatch(batch: DataFrame, path: String, keyCols: Seq[String],
       sketchCols: Seq[String], batchId: Long, numBuckets: Int = 64): Unit = {
-    graft.functions.SketchFunctions.register(batch.sparkSession)
     mergeBatchWith(batch, path, keyCols, sketchCols,
       c => call_function("kll_union_agg", col(c)).as(c), batchId, numBuckets)
   }
@@ -215,7 +214,6 @@ object UpsertSink {
     * replays are fenced by batchId like [[mergeAggBatch]]. */
   def mergeFrequencyBatch(batch: DataFrame, path: String, keyCols: Seq[String],
       sketchCols: Seq[String], batchId: Long, numBuckets: Int = 64): Unit = {
-    graft.functions.SketchFunctions.register(batch.sparkSession)
     mergeBatchWith(batch, path, keyCols, sketchCols,
       c => call_function("cms_union_agg", col(c)).as(c), batchId, numBuckets)
   }
@@ -233,7 +231,6 @@ object UpsertSink {
   def mergeThetaBatch(batch: DataFrame, path: String, keyCols: Seq[String],
       sketchCols: Seq[String], batchId: Long, numBuckets: Int = 64,
       k: Int = 256): Unit = {
-    graft.functions.ThetaExprs.register(batch.sparkSession)
     // the union k MUST equal the batch-sketch k: only then is the merged
     // state the exact k-smallest-distinct semilattice (a larger union k
     // would silently grow the sample and skew the (k-1)/θ estimator)
@@ -288,7 +285,6 @@ object UpsertSink {
   def compactClosedQuantile(spark: SparkSession, path: String, closedPath: String,
       keyCols: Seq[String], sketchCols: Seq[String], sealedWhen: org.apache.spark.sql.Column,
       cutoffId: Long, closedBuckets: Int = 64): Unit = {
-    graft.functions.SketchFunctions.register(spark)
     compactClosedWith(spark, path, closedPath, keyCols, sketchCols,
       c => call_function("kll_union_agg", col(c)).as(c), sealedWhen, cutoffId, closedBuckets)
   }
@@ -297,7 +293,6 @@ object UpsertSink {
   def compactClosedFrequency(spark: SparkSession, path: String, closedPath: String,
       keyCols: Seq[String], sketchCols: Seq[String], sealedWhen: org.apache.spark.sql.Column,
       cutoffId: Long, closedBuckets: Int = 64): Unit = {
-    graft.functions.SketchFunctions.register(spark)
     compactClosedWith(spark, path, closedPath, keyCols, sketchCols,
       c => call_function("cms_union_agg", col(c)).as(c), sealedWhen, cutoffId, closedBuckets)
   }
@@ -306,7 +301,6 @@ object UpsertSink {
   def compactClosedTheta(spark: SparkSession, path: String, closedPath: String,
       keyCols: Seq[String], sketchCols: Seq[String], sealedWhen: org.apache.spark.sql.Column,
       cutoffId: Long, closedBuckets: Int = 64, k: Int = 256): Unit = {
-    graft.functions.ThetaExprs.register(spark)
     compactClosedWith(spark, path, closedPath, keyCols, sketchCols,
       c => call_function("kmv_union_agg", col(c), lit(k)).as(c), sealedWhen, cutoffId, closedBuckets)
   }

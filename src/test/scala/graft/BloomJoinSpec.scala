@@ -22,7 +22,6 @@ class BloomJoinSpec extends SparkSpec {
 
   test("probe has no false negatives and prunes to ~fpp of non-members") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     val fpp = 0.01
     val members = (0L until 500L).map(i => i * 7919L) // arbitrary spread keys
     val bf = members.toDF("k").select(xxhash64($"k").as("__h"))

@@ -16,7 +16,6 @@ class CmsSpec extends SparkSpec {
 
   test("unioned per-partition sketches never underestimate and respect the eps bound") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     // skewed frequencies: key i appears i times (1..100), N = 5050
     val rows = (1L to 100L).flatMap(i => Seq.fill(i.toInt)(i))
     val truth = rows.groupBy(identity).view.mapValues(_.size.toLong).toMap
@@ -56,7 +55,6 @@ class CmsSpec extends SparkSpec {
 
   test("mergeFrequencyBatch maintains per-key frequencies incrementally with a replay fence") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     val path = java.nio.file.Files.createTempDirectory("cmsmv").toString + "/t"
     // two batches of (service, item); item 7 appears 30 times in total
     val batches = Seq(

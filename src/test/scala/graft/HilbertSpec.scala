@@ -9,7 +9,6 @@ class HilbertSpec extends SparkSpec {
 
   test("hilbert_index is a bijection with unit steps on a 32x32 block") {
     import spark.implicits._
-    graft.functions.ZorderFunctions.register(spark)
     // the space-filling-curve contract, exactly: the 32x32 corner block
     // of the order-16 curve maps onto the contiguous range 0..1023, and
     // every consecutive pair of curve values is one grid step apart in

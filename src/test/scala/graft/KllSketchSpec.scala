@@ -17,7 +17,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("sketch quantiles land within rank tolerance of exact") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     // non-uniform data so value error != rank error
     val data = (1 to 20000).map(i => math.pow(i.toDouble, 2.0))
     val row = data.toDF("x")
@@ -35,7 +34,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("per-partition sketches union to the same answer as one global sketch") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     val data = (1 to 20000).map(_.toDouble)
     val unioned = data.zipWithIndex
       .map { case (x, i) => (i % 16, x) }.toDF("part", "x")
@@ -49,7 +47,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("an all-null group yields NULL quantiles, not a crash") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     val row = Seq[Option[Double]](None, None).toDF("x")
       .agg(call_function("kll_sketch_agg", $"x").as("sk"))
       .select(call_function("kll_quantile", $"sk", lit(0.5)).as("p50"))
@@ -59,7 +56,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("mergeQuantileBatch maintains per-key quantiles incrementally") {
     import spark.implicits._
-    graft.functions.SketchFunctions.register(spark)
     val path = java.nio.file.Files.createTempDirectory("kllmv").toString + "/t"
     // 3 micro-batches of (service, latency); quantiles of the UNION must
     // come out of the incrementally-merged table

@@ -12,17 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same cached-plan AQE setting as Bench/Verify (r15) so suites
-      // exercise the plans the driver surfaces run
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the file system the driver surfaces and the stream bench run on
-      .config(GraftSession.LocalFsConf)
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -51,7 +51,6 @@ class ZorderSpec extends SparkSpec {
 
   test("z_interleave round-trips bit positions") {
     import spark.implicits._
-    graft.functions.ZorderFunctions.register(spark)
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L),
       (0xFFFFFFFFL, 0L), (0L, 0xFFFFFFFFL)).toDF("x", "y")
       .select(call_function("z_interleave", $"x", $"y").as("z"))

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class CleanKernelSpec extends SparkSpec {
 
   private def docs = {
-    graft.functions.VectorFunctions.register(spark)
     spark.read.parquet(s"$sfDir/documents.parquet")
   }
 

@@ -4,12 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
-/** Native function registration and type-checking behavior. */
+/** Native function resolution and type-checking behavior. */
 class FunctionSpecs extends SparkSpec {
 
-  test("functions are registered idempotently and visible to SQL") {
-    VectorFunctions.register(spark)
-    VectorFunctions.register(spark) // second call must be a no-op
+  test("functions are visible to SQL on the shared session") {
     import spark.implicits._
     val r = Seq((Array(1f, 0f), Array(1f, 0f))).toDF("a", "b")
       .selectExpr("vec_cosine(a, b) AS c").as[Double].head()
@@ -18,7 +16,6 @@ class FunctionSpecs extends SparkSpec {
   }
 
   test("vector expressions reject wrong argument types with a clear error") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val bad = Seq((1, "x")).toDF("a", "b")
     val e = intercept[AnalysisException] {
@@ -28,7 +25,6 @@ class FunctionSpecs extends SparkSpec {
   }
 
   test("simhash60 and minhash_sig null out degenerate documents") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq("", "   ", "one two").toDF("t")
       .selectExpr("simhash60(t) AS sh", "minhash_sig(t) AS mh")

@@ -8,7 +8,6 @@ class IbanRedactSpec extends SparkSpec {
 
   private def redact(texts: String*): Seq[String] = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     texts.zipWithIndex.map(_.swap).toDF("i", "t")
       .orderBy(col("i"))
       .select(call_function("iban_redact", col("t")))
@@ -69,7 +68,6 @@ class IbanRedactSpec extends SparkSpec {
 
   test("null-safety and independence of adjacent candidates") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val got = Seq((1L, null.asInstanceOf[String]),
       (2L, "DE89 3704 0044 0532 0130 00, NO93 8601 1117 947"))
       .toDF("i", "t").orderBy(col("i"))

@@ -8,7 +8,6 @@ class LuhnRedactSpec extends SparkSpec {
 
   private def redact(texts: String*): Seq[String] = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     texts.zipWithIndex.map(_.swap).toDF("i", "t")
       .orderBy(col("i"))
       .select(call_function("luhn_redact", col("t")))

@@ -12,7 +12,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("NFC composes combining sequences; NFD decomposes them") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(("caf" + cmb), ("caf" + pre), "plain ascii").toDF("t")
     val got = df.select(
       call_function("unicode_norm", $"t", lit("NFC")).as("nfc"),
@@ -25,7 +24,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("NFKC applies compatibility folds that NFC must not") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val got = Seq(ligature + "ne").toDF("t").select(
       call_function("unicode_norm", $"t", lit("NFC")).as("nfc"),
       call_function("unicode_norm", $"t", lit("NFKC")).as("nfkc"))
@@ -35,7 +33,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("a bad form literal fails analysis, null input stays null") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val err = intercept[Exception] {
       Seq("x").toDF("t")
         .select(call_function("unicode_norm", $"t", lit("BOGUS"))).collect()

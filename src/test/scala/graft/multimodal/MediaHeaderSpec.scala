@@ -168,7 +168,6 @@ class MediaHeaderSpec extends SparkSpec {
 
   test("media_meta runs as a native expression inside a projection") {
     import spark.implicits._
-    MediaFunctions.register(spark)
     val rows = Multimodal.fixtures(
         Seq(0L, 1L, 2L).toDF("doc_id"), "doc_id").toDF()
       .select($"doc_id", expr("media_meta(media)").as("m"))

@@ -79,7 +79,6 @@ class MultimodalSpec extends SparkSpec {
   test("decode → featurize → ANN search composes into one pipeline") {
     import spark.implicits._
     import graft.operators.Similarity
-    Similarity.ensureRegistered(spark)
     val docs = Seq(
       (1L, "aaaa bbbb aaaa"), (2L, "aaaa bbbb aaab"), // near-identical bytes
       (3L, "zzzz qqqq wwww xxxx")).toDF("doc_id", "text")

@@ -26,7 +26,6 @@ class BitextMineSpec extends SparkSpec {
   }
 
   test("hub correction: raw cosine picks the hub, the margin does not") {
-    Similarity.ensureRegistered(spark)
     val (xs, ys) = shards
     // raw cosine rank 1 for BOTH xs is the hub (id 1)
     val raw = Similarity.bruteTopK(ys, xs, "vec_id", "embedding", 2)
@@ -44,7 +43,6 @@ class BitextMineSpec extends SparkSpec {
   }
 
   test("margin arithmetic: the hand-traced ratio in micro units") {
-    Similarity.ensureRegistered(spark)
     val (xs, ys) = shards
     val all = BitextMine.marginPairs(
       Similarity.bruteTopK(ys, xs, "vec_id", "embedding", 2),
@@ -61,7 +59,6 @@ class BitextMineSpec extends SparkSpec {
   }
 
   test("one best pair per endpoint on the real embeddings table") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val x = emb.where(col("vec_id") % 2 === 0)
     val y = emb.where(col("vec_id") % 2 === 1)

@@ -9,7 +9,6 @@ class MaxSimSpec extends SparkSpec {
 
   test("hand-traced MaxSim: per-query-vector maxima add up") {
     import spark.implicits._
-    Similarity.ensureRegistered(spark)
     // query doc 0: unit x + unit y; doc 1 matches only x (maxsim 1e6);
     // doc 2 matches x at .6 and y at 1.0 (maxsim 1.6e6) -> doc 2 first
     val v = Seq(
@@ -26,7 +25,6 @@ class MaxSimSpec extends SparkSpec {
   }
 
   test("parity with the naive window formulation on the real table") {
-    Similarity.ensureRegistered(spark)
     val v = Tables.t(spark, sfDir, "embeddings")
       .select((col("vec_id") / 4).cast("long").as("doc_id"),
         col("vec_id"), col("embedding"))

@@ -35,7 +35,6 @@ class NegSamplingMatryoshkaSpec extends SparkSpec {
   }
 
   test("matryoshka recall: full width anchors at 1e6, recall degrades") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val rows = Similarity.matryoshkaRecall(
       emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",

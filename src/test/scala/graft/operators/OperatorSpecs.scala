@@ -275,7 +275,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("vec_cosine matches a reference implementation") {
     import spark.implicits._
-    Similarity.ensureRegistered(spark)
     val a = Array(1.0f, 2.0f, 3.0f)
     val b = Array(-1.0f, 0.5f, 2.0f)
     val got = Seq((a, b)).toDF("a", "b")
@@ -306,7 +305,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("bruteTopK returns k best-by-cosine with deterministic tiebreak") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val got = Similarity.bruteTopK(emb, emb.where(col("vec_id") === 0),
       "vec_id", "embedding", 3).collect()
@@ -318,7 +316,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("bruteTopK ignores zero-norm (NaN-cosine) vectors instead of poisoning the heap") {
     import spark.implicits._
-    Similarity.ensureRegistered(spark)
     // one partition, zero-norm vector FIRST: its NaN cosine used to sit at
     // the worst-on-top heap head, making the replace test false for every
     // later (better) row — the true top-k was silently rejected
@@ -335,7 +332,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshPairs derives the hyperplane width from the data (32-dim corpus)") {
     import spark.implicits._
-    Similarity.ensureRegistered(spark)
     // 32-dim vectors: the old hardcoded dim=64 built 64-wide planes whose
     // tail the fold never saw consistently; signatures must now come from
     // 32-wide planes and find the planted near-identical pair
@@ -360,7 +356,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("int8TopK recall vs float-exact scan is near-perfect") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 10)
     val k = 5
@@ -375,7 +370,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfKMeansTopK learns cells that give reasonable recall vs brute force") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 10)
     val k = 5
@@ -391,7 +385,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pqTopK compresses to m bytes and keeps reasonable recall vs brute force") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 10)
     val k = 5
@@ -409,7 +402,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfPqTopK recall matches plain PQ at the same code budget while scanning fewer vectors") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 10)
     val k = 5
@@ -437,7 +429,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("pqTopK handles a corpus smaller than kSub (codes clamp to corpus size)") {
     import spark.implicits._
-    Similarity.ensureRegistered(spark)
     val vecs = (1L to 10L).map(i =>
       (i, Array.tabulate(64)(d => ((d * i) % 7).toFloat + 1f)))
       .toDF("vec_id", "embedding")
@@ -448,7 +439,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopK achieves reasonable recall vs brute force") {
-    Similarity.ensureRegistered(spark)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val queries = emb.where(col("vec_id") < 10)
     val k = 5
