@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.SparkSession
 
 /** Session-catalog registration of the fixture tables — the engine's
@@ -20,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * specs (sf0.001) never fight over locations.
   *
   * `events` is excluded: its TIMESTAMP(NANOS) column needs the
-  * nanos-as-long session conf + timestamp rebuild ([[Tables.t]]), which a
-  * bare catalog scan can't apply.
+  * timestamp rebuild of [[Tables.t]], which a bare catalog scan can't
+  * apply.
   */
 object GraftCatalog {
   val tables: Seq[String] = Tables.all.filterNot(_ == "events")
@@ -31,6 +32,17 @@ object GraftCatalog {
   def dbFor(dir: String): String =
     "graft_" + dir.replaceAll("/+$", "").replaceAll(".*/", "")
       .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+
+  /** Where a query keeps what it writes for the data in `dir` (fold state,
+    * stream checkpoints, archive fixtures, bucketed tables):
+    * `<root>/<dbFor(dir)>/<name>`, as a `file:` URI so that it does not
+    * depend on `fs.defaultFS`. `<root>` is `graft` under
+    * `SparkFiles.getRootDirectory()`, Spark's per-application temp dir,
+    * which lives under `spark.local.dir` and is deleted when the context
+    * stops: two applications never share a path, and nothing outlives
+    * its run. */
+  def artifactPath(dir: String, name: String): String =
+    s"file:${SparkFiles.getRootDirectory()}/graft/${dbFor(dir)}/$name"
 
   /** Idempotently create the database + external table entries for `dir`;
     * returns the database name for `spark.table(s"$db.$name")` resolution.

@@ -6,13 +6,10 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** `spark.sql.extensions` entry point, loaded by every
-  * [[GraftSession.builder]] session: the native function kernels plus the
-  * engine's custom optimizer rules. */
+  * [[GraftSession.builder]] session: the native function kernels. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.CollapseRedundantRound)
-  }
 }
 
 object GraftExtensions {

@@ -23,9 +23,14 @@ import org.apache.spark.sql.SparkSession
   *   - UTC session time, so timestamps render the same on every machine
   *     and in the DuckDB oracle;
   *   - no UI: nothing reads it, and each driver would bind a port;
+  *   - `parquet.nanosAsLong`: `events.ts` has shipped as parquet
+  *     TIMESTAMP(NANOS), which Spark rejects unless the column is read
+  *     as a long; [[Tables.t]] then rebuilds the timestamp. Set here, it
+  *     holds for every query in every order; set per load, it leaked into
+  *     whatever ran next. It changes only NANOS columns;
   *   - `spark.sql.extensions`: [[GraftExtensions]] injects the engine's
-  *     native functions and its optimizer rule into every session and
-  *     every `newSession()` of it, so no query registers anything;
+  *     native functions into every session and every `newSession()` of
+  *     it, so no query registers anything;
   *   - the local file system. Without the native `libhadoop`, Hadoop's
   *     `RawLocalFileSystem` forks `chmod` for every file it creates,
   *     `readlink` around every `FileContext` rename and `ls -ld` for every
@@ -61,6 +66,7 @@ object GraftSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.codegen.cache.maxEntries", "2048")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)

@@ -60,7 +60,8 @@ object Tables {
   }
 
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) — which
-    * Spark's vectorized reader rejects, so it is read as raw long nanos and
+    * Spark's vectorized reader rejects, so it is read as raw long nanos
+    * (`nanosAsLong`, set by [[GraftSession.builder]]) and
     * rebuilt as a micro-precision timestamp with exact integer division (a
     * double division would lose precision above 2^53 ns; DuckDB truncates
     * ns→µs the same way, so oracle timestamps match bit-for-bit) — or as
@@ -70,7 +71,6 @@ object Tables {
     * Branch on the type the reader actually produced.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

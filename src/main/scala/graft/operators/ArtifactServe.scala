@@ -33,39 +33,23 @@ object ArtifactServe {
     * it from `build` first iff absent. `fpExpr` is a comma-separated
     * column list over `fpSource` (e.g. `"doc_id, text"`).
     *
-    * Lifetime (r14 optimization round): the path is ALSO keyed on the
-    * Spark application id, so nothing derived from the test corpus
-    * survives across driver/bench/oracle invocations — every JVM run
-    * rebuilds its artifacts from the parquet inputs exactly once and
-    * serves them for the remainder of that run only (the bench's
-    * warmup pass pays the build; reps measure the serve path, which is
-    * the operator's declared production semantics). A warehouse
-    * deployment would drop the app-id term and key on the source
-    * table's snapshot/version id instead — cross-run serving is the
-    * production point; in THIS harness it would be indistinguishable
-    * from caching results between graded runs, so it is off. */
+    * Lifetime: callers pass a prefix under
+    * [[graft.GraftCatalog.artifactPath]], Spark's per-application temp
+    * dir, so an artifact is built at most once per corpus in a run,
+    * served for the rest of that run, and deleted with the context when
+    * the run stops. Nothing derived from a corpus carries over from one
+    * run to the next. A warehouse deployment that should serve across
+    * runs passes a durable prefix and keys on the source table's
+    * snapshot/version id instead. */
   def ensure(spark: SparkSession, fpSource: DataFrame, fpExpr: String,
       pathPrefix: String)(build: => DataFrame): String = {
     val fp = java.lang.Long.toHexString(
       fpSource.agg(expr(s"bit_xor(xxhash64($fpExpr))")).head.getLong(0))
-    val path = s"${pathPrefix}_${fp}_${spark.sparkContext.applicationId}"
+    val path = s"${pathPrefix}_$fp"
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
-      // r15 (ADVICE): app-id keying means no run ever reuses a prior
-      // run's directory — delete stale `${prefix}_*` siblings before
-      // building so bench/driver/oracle invocations don't accumulate
-      // unbounded artifact copies under the shared root. Single writer
-      // per prefix (the fold-artifact contract) makes this race-free.
-      val parent = p.getParent
-      val base = p.getName
-      if (parent != null && fs.exists(parent))
-        fs.listStatus(parent).map(_.getPath)
-          .filter(q => q.getName != base &&
-            q.getName.startsWith(new org.apache.hadoop.fs.Path(pathPrefix).getName + "_"))
-          .foreach(q => fs.delete(q, true))
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")))
       build.write.mode("overwrite").parquet(path)
-    }
     path
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1846,7 +1847,7 @@ object Curation extends QueryModule {
     //      change the answer) ----
     GraftQuery("q_isotonic_stream",
       (s, dir) => {
-        val base = s"/tmp/graft_iso_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "iso_stream")
         graft.streaming.StreamingCalibration.init(s, base)
         val (_, pred) = graft.operators.Perceptron.train(
           t(s, dir, "documents"), "doc_id", "text", d = 32, rounds = 4)
@@ -1888,8 +1889,7 @@ object Curation extends QueryModule {
     //      oracle; mid-run compaction must not change it) ----
     GraftQuery("q_classifier_eval_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_eval_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "eval_stream")
         graft.streaming.StreamingEval.init(s, base)
         val (_, pred) = graft.operators.Perceptron.train(
           t(s, dir, "documents"), "doc_id", "text", d = 32, rounds = 4)
@@ -1951,8 +1951,7 @@ object Curation extends QueryModule {
     //      batch oracle; a mid-run compaction must not change it) ----
     GraftQuery("q_conformal_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_conf_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "conf_stream")
         graft.streaming.StreamingConformal.init(s, base)
         val (_, pred) = graft.operators.Perceptron.train(
           t(s, dir, "documents"), "doc_id", "text", d = 32, rounds = 4)
@@ -2005,8 +2004,7 @@ object Curation extends QueryModule {
     //      change it) ----
     GraftQuery("q_conformal_by_group_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_confg_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "confg_stream")
         graft.streaming.StreamingConformal.init(s, base)
         val docs = t(s, dir, "documents")
         val (_, pred) = graft.operators.Perceptron.train(
@@ -2069,8 +2067,7 @@ object Curation extends QueryModule {
     //      compaction must not change it) ----
     GraftQuery("q_quantile_norm_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_ecdf_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "ecdf_stream")
         graft.streaming.StreamingEcdf.init(s, base)
         val docs = t(s, dir, "documents")
         val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
@@ -2162,8 +2159,7 @@ object Curation extends QueryModule {
     //      oracle; mid-run compaction must not change it) ----
     GraftQuery("q_dsir_ngram_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_dsir_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "dsir_stream")
         graft.streaming.StreamingDsir.init(s, base)
         val docs = t(s, dir, "documents")
         val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1

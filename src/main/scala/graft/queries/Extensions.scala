@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import graft.multimodal.Multimodal
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1220,7 +1221,7 @@ object Extensions extends QueryModule {
           Dedup.dupClusters(
             Dedup.minhashPairs(docs, "doc_id", "text", 0.5)
               .select("doc_a", "doc_b")),
-          s"clusters_art_$tag", s"/tmp/graft_artifacts/$tag/clusters")
+          s"clusters_art_$tag", artifactPath(dir, "clusters"))
         Dedup.groupAwareSplit(docs, "doc_id", s.table(s"clusters_art_$tag"))
       },
       Some(Extensions.groupSplitOracle)),
@@ -1290,7 +1291,7 @@ object Extensions extends QueryModule {
     // oracle verbatim.
     GraftQuery("q_cdc_dedup_stream",
       (s, dir) => {
-        val base = s"/tmp/graft_cdc_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "cdc_stream")
         graft.streaming.StreamingCdc.init(s, base)
         val docs = t(s, dir, "documents")
         val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
@@ -1420,7 +1421,7 @@ object Extensions extends QueryModule {
             Similarity.lshPairs(emb, "vec_id", "embedding", 0.4)
               .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
           Dedup.writeClusters(clusters, tbl,
-            s"/tmp/graft_artifacts/$tag/embclusters_$fp")
+            artifactPath(dir, s"embclusters_$fp"))
           // clusters is localCheckpoint-backed (dupClusters cuts lineage
           // per round), so there is no CacheManager entry to unpersist;
           // the checkpoint blocks are freed by the ContextCleaner once
@@ -1534,7 +1535,7 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_semdedup_stream",
       (s, dir) => {
-        val base = s"/tmp/graft_semdedup_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "semdedup_stream")
         graft.streaming.StreamingSemDedup.init(s, base)
         val emb = t(s, dir, "embeddings")
         graft.streaming.StreamingSemDedup.serveCenters(
@@ -2750,8 +2751,7 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_warc_file_split",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/warcfiles"
+        val root = artifactPath(dir, "warcfiles")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.warcFixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".warc.gz")
@@ -2763,8 +2763,7 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_warc_zst_file_split",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/warczstfiles"
+        val root = artifactPath(dir, "warczstfiles")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.warcZstFixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".warc.zst")
@@ -2782,8 +2781,7 @@ object Extensions extends QueryModule {
     // archive — servable: their LOCAL headers carry zero size fields).
     GraftQuery("q_zip_file_explode",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/zipfiles"
+        val root = artifactPath(dir, "zipfiles")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.zipFixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".zip")
@@ -2795,8 +2793,7 @@ object Extensions extends QueryModule {
 
     GraftQuery("q_tar_file_members",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/tarfiles"
+        val root = artifactPath(dir, "tarfiles")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.tarFixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".tar")
@@ -2816,8 +2813,7 @@ object Extensions extends QueryModule {
     // query pins against.
     GraftQuery("q_zip64_file_explode",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/zip64files"
+        val root = artifactPath(dir, "zip64files")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.zip64Fixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".zip")
@@ -2836,8 +2832,7 @@ object Extensions extends QueryModule {
     // truncated 100-byte header name mismatches every row.
     GraftQuery("q_tar_longname_members",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val root = s"/tmp/graft_artifacts/$tag/tarlongfiles"
+        val root = artifactPath(dir, "tarlongfiles")
         graft.multimodal.ArchiveFiles.writeDir(
           graft.multimodal.Archives.tarLongFixtures(
             t(s, dir, "documents"), "doc_id", "text"), root, ".tar")
@@ -2887,7 +2882,7 @@ object Extensions extends QueryModule {
     // survives.
     GraftQuery("q_corpus_clean_stream",
       (s, dir) => {
-        val root = s"/tmp/graft_cc_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val root = artifactPath(dir, "cc_stream")
         val fs = new org.apache.hadoop.fs.Path(root)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -2935,7 +2930,7 @@ object Extensions extends QueryModule {
     // VERBATIM — incremental arrival may change nothing
     GraftQuery("q_clean_pack_stream",
       (s, dir) => {
-        val base = s"/tmp/graft_cp_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "cp_stream")
         graft.streaming.StreamingCleanPack.init(s, base)
         // fixture scaffolding: the zstd encode is consumed four times
         // (maxId + three wave filters, which sit ABOVE the mapGroups
@@ -2988,11 +2983,10 @@ object Extensions extends QueryModule {
     // q_unigram_encode_artifact hash-match pins exactly that).
     GraftQuery("q_clean_tokenize_pack_stream",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
         val docs = t(s, dir, "documents")
         val vocabPath = graft.operators.ArtifactServe.ensure(s, docs,
             "doc_id, text",
-            s"/tmp/graft_artifacts/$tag/clean_unigram_vocab") {
+            artifactPath(dir, "clean_unigram_vocab")) {
           val cleaned = graft.operators.CorpusClean.clean(
               docs, "doc_id", "text",
               lang = "en", minQuality = 3000L, jaccard = 0.8)
@@ -3004,7 +2998,7 @@ object Extensions extends QueryModule {
             .localCheckpoint(true)
           finally cleaned.unpersist()
         }
-        val base = s"/tmp/graft_ctp_stream/$tag"
+        val base = artifactPath(dir, "ctp_stream")
         graft.streaming.StreamingCleanPack.init(s, base)
         // fixture scaffolding: the zstd encode is consumed four times
         // (maxId + three wave filters, which sit ABOVE the mapGroups
@@ -3149,7 +3143,7 @@ object Extensions extends QueryModule {
           .select(col("e.src").as("src"), col("e.dst").as("dst"))
         val ranks = graft.operators.Graphs.pageRank(edges, iters = 3)
         graft.operators.Graphs.writeRanks(ranks, s"ranks_art_$tag",
-          s"/tmp/graft_artifacts/$tag/ranks")
+          artifactPath(dir, "ranks"))
         ranks.unpersist(blocking = true)
         s.table(s"ranks_art_$tag")
           .select(col("node"), round(col("rank"), 9).as("rank"))
@@ -3768,7 +3762,7 @@ object Extensions extends QueryModule {
     GraftQuery("q_bucketed_join",
       (s, dir) => {
         val tag = graft.GraftCatalog.dbFor(dir) // sf-unique, identifier-safe
-        val base = s"/tmp/graft_bucketed/$tag"
+        val base = artifactPath(dir, "bucketed")
         graft.operators.Bucketing.writeBucketed(
           t(s, dir, "orders").select(col("o_custkey").as("custkey"),
             col("o_orderkey"), col("o_totalprice")),
@@ -3796,8 +3790,7 @@ object Extensions extends QueryModule {
     // unpartitioned table, proving layout changes nothing.
     GraftQuery("q_dpp",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir) // sf-unique, identifier-safe
-        val path = s"/tmp/graft_dpp/$tag/orders"
+        val path = artifactPath(dir, "dpp/orders")
         graft.operators.PartitionedFact.writeMonthPartitioned(
           t(s, dir, "orders"), "o_orderdate", "order_month", path)
         val fact = s.read.parquet(path)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -273,8 +274,7 @@ object Mining extends QueryModule {
     //      mid-run compaction must not change it) ----
     GraftQuery("q_temperature_mix_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_tempmix_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "tempmix_stream")
         graft.streaming.StreamingMixing.init(s, base)
         val docs = t(s, dir, "documents")
         val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1

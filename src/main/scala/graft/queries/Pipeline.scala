@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -526,8 +527,7 @@ object Pipeline extends QueryModule {
     //      change it) ----
     GraftQuery("q_winsorize_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_wins_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "wins_stream")
         graft.streaming.StreamingWinsorize.init(s, base)
         val ev = t(s, dir, "events")
         val maxId = ev.agg(max(col("event_id"))).head.getLong(0) + 1
@@ -569,8 +569,7 @@ object Pipeline extends QueryModule {
     //      must not change it) ----
     GraftQuery("q_winsorize_by_group_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_winsg_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "winsg_stream")
         graft.streaming.StreamingWinsorize.init(s, base)
         val ev = t(s, dir, "events")
         val maxId = ev.agg(max(col("event_id"))).head.getLong(0) + 1
@@ -666,7 +665,7 @@ object Pipeline extends QueryModule {
         import s.implicits._
         import graft.streaming.StreamingResample
         import graft.streaming.StreamingResample.{BucketSlice, Obs}
-        val root = s"/tmp/graft_twap_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val root = artifactPath(dir, "twap_stream")
         val fs = new org.apache.hadoop.fs.Path(root)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(root), true)

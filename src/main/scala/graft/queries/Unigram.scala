@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Unigram-LM (SentencePiece-style) tokenizer surface —
@@ -282,7 +283,6 @@ object Unigram extends QueryModule {
     //      time) — must hash-match the inline train→encode exactly ----
     GraftQuery("q_unigram_encode_artifact",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
         // built ONCE per corpus fingerprint and served thereafter
         // (r14): the hash-match against the inline train→encode oracle
         // is precisely the proof that serving the stored vocabulary is
@@ -290,7 +290,7 @@ object Unigram extends QueryModule {
         // proved nothing extra and cost ~15 s per bench pass
         val docs = t(s, dir, "documents")
         val path = graft.operators.ArtifactServe.ensure(s, docs,
-            "doc_id, text", s"/tmp/graft_artifacts/$tag/unigram_vocab") {
+            "doc_id, text", artifactPath(dir, "unigram_vocab")) {
           graft.operators.UnigramLM.train(docs, "doc_id", "text",
             rounds = 2)
         }

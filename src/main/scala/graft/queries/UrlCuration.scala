@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -346,8 +347,7 @@ object UrlCuration extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.streaming.StreamingUrlCuration.DomainGateRow
-        val root =
-          s"/tmp/graft_gate_files/${graft.GraftCatalog.dbFor(dir)}"
+        val root = artifactPath(dir, "gate_files")
         val in = s"$root/in"
         val ckpt = s"$root/ckpt"
         val fs = new org.apache.hadoop.fs.Path(root)

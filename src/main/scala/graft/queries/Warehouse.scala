@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
+import graft.GraftCatalog.artifactPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -336,8 +337,7 @@ object Warehouse extends QueryModule {
     //      PSI arithmetic — shares q_psi_drift's oracle verbatim ----
     GraftQuery("q_psi_drift_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_psi_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "psi_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
         val live = docs.where(col("doc_id") % 2 === 1)
@@ -360,8 +360,7 @@ object Warehouse extends QueryModule {
     //      a mid-run compaction must not change it) ----
     GraftQuery("q_category_drift_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_drift_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "drift_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
         val live = docs.where(col("doc_id") % 2 === 1)
@@ -400,8 +399,7 @@ object Warehouse extends QueryModule {
     //      oracle VERBATIM ----
     GraftQuery("q_numeric_drift_stream",
       (s, dir) => {
-        val base =
-          s"/tmp/graft_ndrift_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "ndrift_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
         val live = docs.where(col("doc_id") % 2 === 1)
@@ -536,8 +534,7 @@ object Warehouse extends QueryModule {
     //      (no file reads), proving layout+evolution change nothing. ----
     GraftQuery("q_schema_evolution",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val base = s"/tmp/graft_evolve/$tag"
+        val base = artifactPath(dir, "evolve")
         val o = t(s, dir, "orders")
         o.where(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -605,7 +602,7 @@ object Warehouse extends QueryModule {
     // brute-force recursive-CC oracle. ----
     GraftQuery("q_entity_resolution_stream",
       (s, dir) => {
-        val base = s"/tmp/graft_er_stream/${graft.GraftCatalog.dbFor(dir)}"
+        val base = artifactPath(dir, "er_stream")
         graft.streaming.StreamingEntityResolution.init(s, base)
         val cust = t(s, dir, "customer").where(col("c_custkey") % 7 === 0)
           .select(col("c_custkey"), col("c_name"))
@@ -758,9 +755,8 @@ object Warehouse extends QueryModule {
     // the oracle proves content identity through the rewrite ----
     GraftQuery("q_compact_files",
       (s, dir) => {
-        val tag = graft.GraftCatalog.dbFor(dir)
-        val in = s"/tmp/graft_compact/$tag/in"
-        val out = s"/tmp/graft_compact/$tag/out"
+        val in = artifactPath(dir, "compact/in")
+        val out = artifactPath(dir, "compact/out")
         t(s, dir, "lineitem").repartition(64)
           .write.mode("overwrite").parquet(in)
         graft.operators.Compaction.compact(s, in, out,

@@ -27,6 +27,15 @@ class CatalogSpec extends SparkSpec {
     assert(other.table(s"$db.region").count() === 5L)
   }
 
+  test("loading events leaves the session's confs unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(before.get("spark.sql.legacy.parquet.nanosAsLong") === Some("true"),
+      "every session reads NANOS timestamps as longs from the start")
+    Tables.t(s, sfDir, "events").count()
+    assert(s.conf.getAll === before)
+  }
+
   test("q_catalog_scan resolves through spark.table, not temp views") {
     val df = SparkEntry.queries("q_catalog_scan")(spark, sfDir)
     val rows = df.collect()

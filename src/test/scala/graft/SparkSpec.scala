@@ -8,6 +8,12 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   /** Smallest driver-provided scale factor — specs stay fast. */
   def sfDir: String = "/root/testdata/sf0.001"
+  /** [[GraftCatalog.artifactPath]] for `sfDir`, inside the shared
+    * session's application (which this starts if it is not yet up). */
+  def artifactPath(name: String): String = {
+    spark
+    GraftCatalog.artifactPath(sfDir, name)
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.Path
 
 /** [[ArtifactServe.ensure]]: the trainer runs once per corpus
   * fingerprint — never again for the same corpus, again (at a NEW
@@ -8,12 +9,10 @@ import graft.SparkSpec
   * before committing `_SUCCESS`. */
 class ArtifactServeSpec extends SparkSpec {
 
-  private def fresh(tag: String): String = {
-    val p = s"/tmp/graft_artserve_spec/$tag/model"
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/tmp/graft_artserve_spec/$tag"))
-    p
-  }
+  private def fs = graft.streaming.FoldStore.fs(spark, artifactPath("artserve_spec"))
+
+  // each test JVM is a new application, so the path starts out absent
+  private def fresh(tag: String): String = artifactPath(s"artserve_spec/$tag/model")
 
   test("same corpus builds once; a changed corpus rebuilds at a new " +
       "fingerprinted path; the artifact round-trips") {
@@ -31,6 +30,8 @@ class ArtifactServeSpec extends SparkSpec {
     val p2 = ensure(corpusA)
     assert(builds === 1, "identical corpus must serve, not retrain")
     assert(p1 === p2)
+    assert(p1.matches(s"\\Q${prefix}_\\E[0-9a-f]+"),
+      "the path is the prefix plus the fingerprint, nothing run-specific")
     assert(spark.read.parquet(p1).orderBy("doc_id")
       .collect().map(_.getLong(1)).toSeq === Seq(2L, 2L))
     val p3 = ensure(corpusB)
@@ -49,9 +50,9 @@ class ArtifactServeSpec extends SparkSpec {
       prefix) { builds += 1; corpus.select("doc_id") }
     val p = ensure()
     // simulate the crash: the data landed but the commit marker did not
-    assert(new java.io.File(s"$p/_SUCCESS").delete())
+    assert(fs.delete(new Path(p, "_SUCCESS"), false))
     ensure()
     assert(builds === 2, "a torn artifact (no _SUCCESS) must rebuild")
-    assert(new java.io.File(s"$p/_SUCCESS").exists())
+    assert(fs.exists(new Path(p, "_SUCCESS")))
   }
 }

@@ -13,14 +13,10 @@ class FoldStoreSpec extends SparkSpec {
 
   import org.apache.hadoop.fs.Path
 
-  private def fs = new Path("/tmp").getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
+  private def fs = FoldStore.fs(spark, artifactPath("foldstore_spec"))
 
-  private def fresh(tag: String): Path = {
-    val p = new Path(s"/tmp/graft_foldstore_spec/$tag")
-    fs.delete(p.getParent, true)
-    p
-  }
+  // each test JVM is a new application, so the path starts out absent
+  private def fresh(tag: String): Path = new Path(artifactPath(s"foldstore_spec/$tag"))
 
   private def mk(p: Path, marker: String): Unit = {
     fs.mkdirs(p)

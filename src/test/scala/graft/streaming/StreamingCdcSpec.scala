@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.col
 /** Streamed CDC: merge-on-read first occurrence is order-independent. */
 class StreamingCdcSpec extends SparkSpec {
 
+  private def root(tag: String) = artifactPath(s"scdc_spec/$tag")
+
   private def doc(n: Int, tag: String) =
     (1 to n).map(i => s"$tag$i").mkString(" ")
 
@@ -36,7 +38,7 @@ class StreamingCdcSpec extends SparkSpec {
   }
 
   test("ascending folds equal the batch report") {
-    assert(streamed("/tmp/graft_scdc/asc",
+    assert(streamed(root("asc"),
       Seq(Seq(1L), Seq(2L), Seq(3L))) === batchTruth)
   }
 
@@ -45,13 +47,13 @@ class StreamingCdcSpec extends SparkSpec {
     // doc 2 (the copy) arrives FIRST and its chunks are provisionally
     // original; when doc 1 lands, the merged min flips doc 2 to fully
     // duplicated without any demotion writes
-    assert(streamed("/tmp/graft_scdc/desc",
+    assert(streamed(root("desc"),
       Seq(Seq(3L), Seq(2L), Seq(1L))) === batchTruth)
   }
 
   test("compactFirsts collapses the artifact without changing verdicts") {
     import spark.implicits._
-    val base = "/tmp/graft_scdc/compact"
+    val base = root("compact")
     val before = streamed(base, Seq(Seq(1L), Seq(2L), Seq(3L)))
     val rowsBefore = spark.read.parquet(s"$base/firsts").count()
     StreamingCdc.compactFirsts(spark, base)
@@ -71,7 +73,7 @@ class StreamingCdcSpec extends SparkSpec {
   }
 
   test("replayed batches are no-ops") {
-    val base = "/tmp/graft_scdc/replay"
+    val base = root("replay")
     val got = streamed(base, Seq(Seq(1L), Seq(2L), Seq(3L)))
     StreamingCdc.fold(spark, base,
       docs.where(col("doc_id").isin(1L, 2L)), "doc_id", "text")

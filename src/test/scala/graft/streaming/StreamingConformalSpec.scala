@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * split/order; compaction answer-preserving; replay idempotent. */
 class StreamingConformalSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_conf_spec/$tag"
+  private def base(tag: String) = artifactPath(s"conf_spec/$tag")
 
   private def batchGate(rows: Seq[(Long, Long, Boolean)],
       alphaPpm: Long) = {

@@ -7,7 +7,7 @@ import graft.SparkSpec
   * idempotence; the numeric fold shares the batch binning. */
 class StreamingDriftSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_drift_spec/$tag"
+  private def base(tag: String) = artifactPath(s"drift_spec/$tag")
 
   private val live: Seq[(Long, String)] =
     (1L to 60L).map(i => (i, s"s${(i * i + i / 7) % 4}"))

@@ -6,7 +6,7 @@ import graft.SparkSpec
   * split/order; replay counts once; compaction answer-preserving. */
 class StreamingDsirSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_dsir_spec/$tag"
+  private def base(tag: String) = artifactPath(s"dsir_spec/$tag")
 
   // m = 64 cells: with a 14-token target sample, m = 1024 would
   // flatten the smoothed target distribution below every raw

@@ -7,7 +7,7 @@ import graft.SparkSpec
   * compaction, negative-bin parity. */
 class StreamingEcdfSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_ecdf_spec/$tag"
+  private def base(tag: String) = artifactPath(s"ecdf_spec/$tag")
 
   // two groups, scores incl. negatives so sign-safe binning is live
   private val rows: Seq[(Long, String, Long)] =

@@ -6,7 +6,7 @@ import graft.SparkSpec
   * split/order; compaction and replay idempotence. */
 class StreamingEvalSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_eval_spec/$tag"
+  private def base(tag: String) = artifactPath(s"eval_spec/$tag")
 
   private val rows: Seq[(Long, Long)] =
     (1L to 50L).map(i => ((i % 5) - 2, ((i * i + i / 7) % 5) - 2)) ++

@@ -7,7 +7,7 @@ import graft.{SparkSpec, Tables}
 class StreamingMixingSpec extends SparkSpec {
 
   private def freshBase(name: String): String = {
-    val base = s"/tmp/graft_test_tempmix/$name"
+    val base = artifactPath(s"tempmix_spec/$name")
     StreamingMixing.init(spark, base)
     base
   }

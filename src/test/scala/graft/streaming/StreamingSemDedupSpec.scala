@@ -43,14 +43,14 @@ class StreamingSemDedupSpec extends SparkSpec {
   }
 
   test("ascending folds equal the batch verdicts") {
-    val base = "/tmp/graft_ssd_spec/asc"
+    val base = artifactPath("ssd_spec/asc")
     foldSlices(base, Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L)))
     assert(streamed(base) === batchTruth)
   }
 
   test("descending arrival converges too: late smaller ids demote " +
       "stored members") {
-    val base = "/tmp/graft_ssd_spec/desc"
+    val base = artifactPath("ssd_spec/desc")
     // 5 and 2 arrive BEFORE their smaller near-dup partners 3 and 1 —
     // the demotion appends must fire for the verdicts to match batch
     foldSlices(base, Seq(Seq(5L, 4L), Seq(2L, 3L), Seq(1L)))
@@ -58,7 +58,7 @@ class StreamingSemDedupSpec extends SparkSpec {
   }
 
   test("replayed batches are no-ops") {
-    val base = "/tmp/graft_ssd_spec/replay"
+    val base = artifactPath("ssd_spec/replay")
     foldSlices(base, Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L)))
     val before = streamed(base)
     StreamingSemDedup.fold(spark, base,

@@ -116,7 +116,7 @@ class StreamingUrlCurationSpec extends SparkSpec {
       "final report equals the batch gate") {
     import spark.implicits._
     import StreamingUrlCuration.DomainGateRow
-    val root = "/tmp/graft_gate_files_spec"
+    val root = artifactPath("gate_files_spec")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)

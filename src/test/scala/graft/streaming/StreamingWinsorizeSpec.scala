@@ -6,7 +6,7 @@ import graft.SparkSpec
   * cuts — clamp equals batch for any split/order; replay, compaction. */
 class StreamingWinsorizeSpec extends SparkSpec {
 
-  private def base(tag: String) = s"/tmp/graft_wins_spec/$tag"
+  private def base(tag: String) = artifactPath(s"wins_spec/$tag")
 
   // aperiodic doubles incl. negatives and ties
   private val rows: Seq[(Long, Double)] =
