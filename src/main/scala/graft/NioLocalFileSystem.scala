@@ -8,7 +8,7 @@ import java.security.Principal
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -107,8 +107,18 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 /** `fs.AbstractFileSystem.file.impl`, the `FileContext` side that Spark's
   * checkpoint file manager uses for offsets, commits and state deltas:
   * Hadoop's `LocalFs` (a `ChecksumFs`) over [[NioRawLocalFileSystem]]. As
-  * in `LocalFs`, the URI is always `file:///`. */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
+  * in `LocalFs`, the URI is always `file:///`.
+  *
+  * Unlike `LocalFs`, `open(f)` verifies the `.crc` sidecar. It is what
+  * `FileContext.open` calls, and Hadoop's `FilterFs` hands it straight to
+  * the raw file system, past `ChecksumFs`'s checking reader; so under
+  * stock Hadoop a flipped byte in an offset or commit log reads back
+  * without error and restarts a query from wrong offsets. Here it goes
+  * through that reader, which throws `ChecksumException`; a file without
+  * a sidecar reads unchecked, as in stock Hadoop. */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** Hadoop's `RawLocalFs` with [[NioRawLocalFileSystem]] underneath. */
 private class NioRawLocalFs(conf: Configuration) extends DelegateToFileSystem(

@@ -34,17 +34,31 @@ final case class Alert(
   * over/under-limit state flips; first observation always emits —
   * /root/reference/src/main/java/org/test/pcap4j/KafkaProducer.java:34-41).
   *
-  * Scale design: the scan stage reads the source's per-NIF partitions in
-  * at most `defaultParallelism` tasks ([[packetSizes]] coalesces them, no
-  * shuffle), so a micro-batch pays per-task fixed cost per core, not per
-  * NIF. The windowed sum is a streaming HashAggregate (partial in the scan
-  * tasks, final after one hash exchange on (window, nif)); the
-  * edge-trigger keeps ONE Boolean per NIF in the checkpointed state store —
-  * upgraded from the reference's lossy per-executor-JVM static map
-  * (SURVEY.md §2.9 T4). At 1000 executors state is hash-partitioned by nif;
-  * nothing here is driver-bound.
+  * Scale design: a micro-batch of [[pipeline]] runs one exchange and one
+  * stateful operator. The scan stage reads the source's per-NIF partitions
+  * in at most `defaultParallelism` tasks ([[packetSizes]] coalesces them,
+  * no shuffle) and tags each packet with its 5-minute window; one hash
+  * exchange on nif feeds one `flatMapGroupsWithState` that keeps, per NIF,
+  * the byte sums of its open windows and its last alert flag in the
+  * checkpointed state store, upgraded from the reference's lossy
+  * per-executor-JVM static map (SURVEY.md §2.9 T4). At 1000 executors
+  * state is hash-partitioned by nif; nothing here is driver-bound.
   */
 object TrafficMonitor {
+
+  /** The tumbling window every traffic sum here is taken over. */
+  private val WindowLength = "5 minutes"
+  private val WindowMs = 5 * 60 * 1000L
+
+  /** Spark's `window` struct, as [[pipeline]]'s operator reads it. */
+  final case class WindowSpan(start: Timestamp, end: Timestamp)
+
+  /** One packet's bytes tagged with its window: [[pipeline]]'s operator input. */
+  final case class WindowedBytes(nif: String, w: WindowSpan, bytes: Long)
+
+  /** [[pipeline]]'s state for one NIF: the byte sums of its open windows,
+    * keyed by window start (epoch ms), and its last emitted alert flag. */
+  final case class NifWindows(open: Map[Long, Long], last: Option[Boolean])
 
   /** P1 projection (MainApp.java:41-42): packet → byte count. Sums are
     * LONG, not the reference's int (overflows at 2 GiB/window — SURVEY.md
@@ -70,7 +84,7 @@ object TrafficMonitor {
     import spark.implicits._
     packetSizes(packets)
       .withWatermark("ts", lateness)
-      .groupBy(window($"ts", "5 minutes"), $"nif")
+      .groupBy(window($"ts", WindowLength), $"nif")
       .agg(sum($"bytes").as("bytes"))
       .select($"nif", $"window.start".as("windowStart"), $"bytes")
       .as[Traffic]
@@ -78,8 +92,8 @@ object TrafficMonitor {
 
   /** Shared transition detector: walk a key's windows in windowStart
     * order, emit only flips (first observation always emits), return the
-    * emissions plus the final flag — the one implementation both
-    * [[edgeTrigger]] and [[edgeTriggerTtl]] run. */
+    * emissions plus the final flag — the one implementation that
+    * [[edgeTrigger]], [[edgeTriggerTtl]] and [[pipeline]] run. */
   private def transitions(nif: String, rows: Iterator[Traffic],
       last0: Option[Boolean], maxLimit: Long): (Seq[Alert], Option[Boolean]) = {
     var last = last0
@@ -234,10 +248,59 @@ object TrafficMonitor {
 
   /** The full pipeline as one streaming Dataset: packets in, alert
     * transitions out. Wire to any sink — memory (tests), console (dev), or
-    * kafka via [[toKafkaMessages]]. */
+    * kafka via [[toKafkaMessages]].
+    *
+    * It emits, batch for batch, what `edgeTrigger(windowedTraffic(...))`
+    * emits, with one stateful operator instead of two: each packet is
+    * tagged with its window, one exchange groups the rows by nif, and one
+    * `flatMapGroupsWithState` keeps a NIF's open-window sums and its last
+    * flag ([[NifWindows]]). A call adds the NIF's new rows, closes every
+    * window whose end is at or below the batch's watermark (the rule by
+    * which the streaming aggregate evicts), and passes the closed windows
+    * to [[transitions]] in window order. It then sets the event-time
+    * timeout to the earliest open window's end minus 1 ms: Spark fires a
+    * timeout once the watermark is strictly past it, so a NIF that gets
+    * no rows has its window closed in the same batch in which the
+    * aggregate would have evicted it.
+    *
+    * Late rows: the window column carries the watermark's metadata, so
+    * Spark drops a row before the function runs exactly when the
+    * aggregate drops it, i.e. when its window ends at or below the
+    * previous batch's watermark.
+    *
+    * The exchange carries one row per packet: a per-partition pre-sum to
+    * one row per (nif, window) measured no faster on `traffic_paced`.
+    *
+    * A checkpoint written by the two-operator plan (before this operator)
+    * has two state operators and cannot be restarted by this one. */
   def pipeline(packets: DataFrame, limits: DataFrame,
-      lateness: String = "1 minute"): Dataset[Alert] =
-    edgeTrigger(windowedTraffic(packets, lateness), maxLimit(limits))
+      lateness: String = "1 minute"): Dataset[Alert] = {
+    val spark = packets.sparkSession
+    import spark.implicits._
+    val limit = maxLimit(limits)
+    packetSizes(packets)
+      .withWatermark("ts", lateness)
+      .select($"nif", window($"ts", WindowLength).as("w"), $"bytes")
+      .as[WindowedBytes]
+      .groupByKey(_.nif)
+      .flatMapGroupsWithState[NifWindows, Alert](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (nif: String, rows: Iterator[WindowedBytes], state: GroupState[NifWindows]) =>
+          val before = state.getOption.getOrElse(NifWindows(Map.empty, None))
+          val sums = rows.foldLeft(before.open) { (m, r) =>
+            val start = r.w.start.getTime
+            m.updated(start, m.getOrElse(start, 0L) + r.bytes)
+          }
+          val watermark = state.getCurrentWatermarkMs()
+          val (closed, open) = sums.partition(_._1 + WindowMs <= watermark)
+          val (out, last) = transitions(nif,
+            closed.iterator.map { case (start, bytes) => Traffic(nif, new Timestamp(start), bytes) },
+            before.last, limit)
+          state.update(NifWindows(open, last))
+          if (open.nonEmpty) state.setTimeoutTimestamp(open.keys.min + WindowMs - 1)
+          out.iterator
+      }
+  }
 
   /** The pipeline with the limit applied via a STREAM-STATIC BROADCAST
     * JOIN instead of a driver-side collect: the static side is re-read per

@@ -55,7 +55,7 @@ class CmsSpec extends SparkSpec {
 
   test("mergeFrequencyBatch maintains per-key frequencies incrementally with a replay fence") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("cmsmv").toString + "/t"
+    val path = tempDir("cmsmv").toString + "/t"
     // two batches of (service, item); item 7 appears 30 times in total
     val batches = Seq(
       (1 to 20).map(i => ("api", if (i <= 10) 7L else i.toLong)),

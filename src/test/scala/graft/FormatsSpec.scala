@@ -11,7 +11,7 @@ class FormatsSpec extends SparkSpec {
 
   test("CSV, JSON, and ORC round-trip the same relation") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("fmt").toString
+    val tmp = tempDir("fmt").toString
     val src = Tables.t(spark, sfDir, "nation")
 
     src.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
@@ -30,7 +30,7 @@ class FormatsSpec extends SparkSpec {
 
   test("partitioned write with maxRecordsPerFile bounds every output file") {
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("pw").toString
+    val tmp = tempDir("pw").toString
     val orders = Tables.t(spark, sfDir, "orders")
     orders.write.mode("overwrite")
       .partitionBy("o_orderstatus")
@@ -57,7 +57,7 @@ class FormatsSpec extends SparkSpec {
 
   test("ORC scans get predicate pushdown like parquet") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("orcpp").toString
+    val tmp = tempDir("orcpp").toString
     Tables.t(spark, sfDir, "orders").write.mode("overwrite").orc(tmp)
     val df = spark.read.orc(tmp).where($"o_totalprice" > 300000.0)
       .select($"o_orderkey")

@@ -30,7 +30,7 @@ class HilbertSpec extends SparkSpec {
 
   test("hilbert layout prunes a y-only filter like the z-order layout") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val base = tempDir("hilbert").toString
     val grid = for (x <- 0 until 256; y <- 0 until 256)
       yield (x.toLong, y.toLong, x * 256L + y)
     val df = grid.toDF("x", "y", "payload")

@@ -56,7 +56,7 @@ class KllSketchSpec extends SparkSpec {
 
   test("mergeQuantileBatch maintains per-key quantiles incrementally") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("kllmv").toString + "/t"
+    val path = tempDir("kllmv").toString + "/t"
     // 3 micro-batches of (service, latency); quantiles of the UNION must
     // come out of the incrementally-merged table
     val batches = Seq(

@@ -65,7 +65,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("partition pruning: a partitioned table scans only the matching partition") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("pp").toString
+    val tmp = tempDir("pp").toString
     Tables.t(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp).where($"event_type" === "error")

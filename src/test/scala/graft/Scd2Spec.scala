@@ -25,7 +25,7 @@ class Scd2Spec extends SparkSpec {
     (3L, 5, 305L, "new"), (3L, 9, 309L, "new"))
 
   test("three merged batches equal the one-shot rebuild, including late data") {
-    val path = java.nio.file.Files.createTempDirectory("scd2").toString + "/t"
+    val path = tempDir("scd2").toString + "/t"
     // batch 2 delivers ts=3 LATE (after ts=7 already arrived in batch 1):
     // the recompute must split key 1's [1,7) interval into [1,3) + [3,7)
     val batches = Seq(
@@ -49,7 +49,7 @@ class Scd2Spec extends SparkSpec {
     // delivers (1,A) and (7,A) — the 7 is a non-change a version-row
     // store would drop. The late (3,B) then requires knowing A resumed
     // at 7: the observation-log store must yield A,[1,3) B,[3,7) A,[7,∞)
-    val path = java.nio.file.Files.createTempDirectory("scd2l").toString + "/t"
+    val path = tempDir("scd2l").toString + "/t"
     Scd2.mergeBatch(log(Seq((1L, 1, 11L, "A"), (1L, 7, 17L, "A"))),
       path, "k", "ts", "tie", Seq("status"), 4)
     Scd2.mergeBatch(log(Seq((1L, 3, 13L, "B"))),
@@ -62,7 +62,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("replaying a batch converges to the same table without a fence") {
-    val path = java.nio.file.Files.createTempDirectory("scd2r").toString + "/t"
+    val path = tempDir("scd2r").toString + "/t"
     val b1 = fullLog.filter(_._2 <= 4)
     val b2 = fullLog.filter(_._2 > 4)
     Scd2.mergeBatch(log(b1), path, "k", "ts", "tie", Seq("status"), 4)
@@ -75,7 +75,7 @@ class Scd2Spec extends SparkSpec {
   test("maintains history as a foreachBatch streaming sink") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("scd2s").toString + "/t"
+    val path = tempDir("scd2s").toString + "/t"
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Int, Long, String)]
     val q = in.toDF().toDF("k", "ts", "tie", "status")
@@ -114,7 +114,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("a batch only rewrites the buckets its keys hash to") {
-    val path = java.nio.file.Files.createTempDirectory("scd2b").toString + "/t"
+    val path = tempDir("scd2b").toString + "/t"
     Scd2.mergeBatch(log(fullLog), path, "k", "ts", "tie", Seq("status"), 64)
     def mtimes() = {
       import scala.jdk.CollectionConverters._

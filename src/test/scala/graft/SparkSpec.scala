@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +17,12 @@ trait SparkSpec extends AnyFunSuite {
     spark
     GraftCatalog.artifactPath(sfDir, name)
   }
+  /** A new empty directory under [[artifactPath]], as a local path: what
+    * `Files.createTempDirectory(prefix)` gives, but deleted with the
+    * application instead of left in the system temp dir. */
+  def tempDir(prefix: String): Path =
+    Files.createTempDirectory(
+      Files.createDirectories(Paths.get(URI.create(artifactPath("tmp")))), prefix)
 }
 
 object SparkSpec {

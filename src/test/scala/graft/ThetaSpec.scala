@@ -44,7 +44,7 @@ class ThetaSpec extends SparkSpec {
   test("theta matview: incremental state is bit-identical to a one-shot sketch") {
     import graft.streaming.UpsertSink
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("thetamv").toString + "/t"
+    val path = tempDir("thetamv").toString + "/t"
     val all = (1L to 300L).map(v => (v % 3, v * 2654435761L % (1L << 60)))
     def sketch(rows: Seq[(Long, Long)]) = rows.toDF("k", "h")
       .groupBy(col("k"))
@@ -69,7 +69,7 @@ class ThetaSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("thetastream").toString + "/t"
+    val path = tempDir("thetastream").toString + "/t"
     val all = (1L to 240L).map(v => (v % 2, v * 2654435761L % (1L << 60)))
 
     val in = MemoryStream[(Long, Long)]
@@ -97,7 +97,7 @@ class ThetaSpec extends SparkSpec {
   test("compactClosedTheta seals keys out of the hot table with sketches intact") {
     import graft.streaming.UpsertSink
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("sealtheta").toString
+    val base = tempDir("sealtheta").toString
     val hot = base + "/hot"; val closed = base + "/closed"
     val all = (1L to 200L).map(v => (v % 4, v * 2654435761L % (1L << 60)))
     def sketch(rows: Seq[(Long, Long)]) = rows.toDF("k", "h")

@@ -22,7 +22,7 @@ class ZorderSpec extends SparkSpec {
 
   test("z-ordered layout prunes a y-only filter that a linear layout cannot") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder").toString
     // 256x256 grid; tiny row groups so toy-scale files have many groups
     // to prune (at real scale the default 128 MB groups play this role)
     val grid = for (x <- 0 until 256; y <- 0 until 256)

@@ -11,10 +11,7 @@ import graft.Tables
   * never-throw contract on truncated files. */
 class ArchiveFilesSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_afspec_$tag").toString
-    d
-  }
+  private def freshDir(tag: String): String = tempDir(s"graft_afspec_$tag").toString
 
   private def docs = Tables.t(spark, sfDir, "documents")
 

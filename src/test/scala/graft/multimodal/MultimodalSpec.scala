@@ -166,7 +166,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("binary payload round-trips through parquet (the 100 TB storage shape)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("mm").toString
+    val tmp = tempDir("mm").toString
     val docs = Seq((1L, "payload-1"), (2L, "x")).toDF("doc_id", "text")
     Multimodal.fromText(docs, "doc_id", "text").write
       .mode("overwrite").parquet(s"$tmp/media")

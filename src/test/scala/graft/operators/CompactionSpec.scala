@@ -38,8 +38,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compact refuses an empty/partitioned input loudly") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cmp_empty")
-      .toString
+    val root = tempDir("graft_cmp_empty").toString
     spark.read.parquet(s"$sfDir/orders.parquet").limit(10)
       .withColumn("p", org.apache.spark.sql.functions.lit("x"))
       .write.partitionBy("p").parquet(s"$root/in")
@@ -51,7 +50,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compact: many small files -> few bins, content identical") {
-    val root = Files.createTempDirectory("graft_compaction").toString
+    val root = tempDir("graft_compaction").toString
     val in = s"$root/in"
     val out = s"$root/out"
     val src = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -71,7 +71,7 @@ class UnigramLMSpec extends SparkSpec {
     val docs = Seq((1L, "ab ab abcde"), (2L, "cd ab")).toDF("doc_id", "text")
     val inline = UnigramLM.encode(docs, "doc_id", "text", rounds = 2)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("uni_vocab").toString
+    val dir = tempDir("uni_vocab").toString
     UnigramLM.train(docs, "doc_id", "text", rounds = 2)
       .write.mode("overwrite").parquet(dir)
     val served = UnigramLM.encodeWith(docs, "doc_id", "text",

@@ -14,8 +14,7 @@ class AdditiveFoldSpec extends SparkSpec {
     Seq((1L, 1L), (1L, 0L), (0L, 0L), (0L, 1L), (1L, 1L))
 
   private def freshBase(): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_afold")
-      .toString + "/state"
+    val base = tempDir("graft_afold").toString + "/state"
     StreamingEval.init(spark, base)
     base
   }

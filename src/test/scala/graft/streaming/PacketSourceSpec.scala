@@ -114,17 +114,21 @@ class PacketSourceSpec extends SparkSpec {
     import spark.implicits._
     val (limit, expected) = exactAlerts
 
-    // (query id, task count) of every stage that reads the source
+    // (query id, task count) of every stage that reads the source, and
+    // (query id, batch id, task count) of every stage
     val scans = new ConcurrentLinkedQueue[(String, Int)]
+    val stages = new ConcurrentLinkedQueue[(String, String, Int)]
     val listener = new SparkListener {
       private val props = new ConcurrentHashMap[Int, Properties]
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         Option(e.properties).foreach(props.put(e.stageInfo.stageId, _))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        if (si.rddInfos.exists(_.name.contains("DataSourceRDD")))
-          Option(props.get(si.stageId)).foreach(p =>
-            scans.add((p.getProperty("sql.streaming.queryId"), si.numTasks)))
+        Option(props.get(si.stageId)).foreach { p =>
+          val query = p.getProperty("sql.streaming.queryId")
+          stages.add((query, p.getProperty("streaming.sql.batchId"), si.numTasks))
+          if (si.rddInfos.exists(_.name.contains("DataSourceRDD"))) scans.add((query, si.numTasks))
+        }
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -136,14 +140,29 @@ class PacketSourceSpec extends SparkSpec {
       assert(q.awaitTermination(120000))
       assert(alertsIn("pk16") === expected)
 
-      val id = q.id.toString
+      // the listener bus delivers in order: once a marker job's stage is
+      // seen, so is every stage of the query
+      val sc = spark.sparkContext
+      sc.setLocalProperty("sql.streaming.queryId", "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("sql.streaming.queryId", null)
       val deadline = System.currentTimeMillis() + 10000
-      while (!scans.asScala.exists(_._1 == id) && System.currentTimeMillis() < deadline)
+      while (!stages.asScala.exists(_._1 == "marker") && System.currentTimeMillis() < deadline)
         Thread.sleep(50)
+      val id = q.id.toString
       val tasks = scans.asScala.filter(_._1 == id).map(_._2).toSeq
       assert(tasks.nonEmpty)
-      assert(spark.sparkContext.defaultParallelism === 4)
+      assert(sc.defaultParallelism === 4)
       assert(tasks.forall(_ <= 4), s"scan stage task counts: $tasks")
+
+      // one stateful operator, and one scan stage plus one stateful stage
+      // of 4 tasks each, per batch
+      assert(q.recentProgress.nonEmpty)
+      for (p <- q.recentProgress)
+        assert(p.stateOperators.map(_.operatorName).toSeq === Seq("flatMapGroupsWithState"),
+          s"batch ${p.batchId}")
+      val perBatch = stages.asScala.filter(_._1 == id).groupMapReduce(_._2)(_._3)(_ + _)
+      assert(perBatch.nonEmpty && perBatch.values.forall(_ <= 8), s"tasks per batch: $perBatch")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -17,7 +17,7 @@ class RecoverySpec extends SparkSpec {
   test("foreachBatch gives idempotent per-batch writes keyed by batchId") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("fb").toString
+    val out = tempDir("fb").toString
     val in = MemoryStream[Traffic]
     // the exactly-once pattern: partition output by batch id; a replayed
     // batch overwrites its own partition instead of duplicating rows
@@ -38,8 +38,8 @@ class RecoverySpec extends SparkSpec {
   test("edge-trigger state survives a checkpointed stop/restart") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("ck").toString
-    val out = java.nio.file.Files.createTempDirectory("alerts").toString
+    val ckpt = tempDir("ck").toString
+    val out = tempDir("alerts").toString
     val in = MemoryStream[Traffic]
 
     // memory sink can't recover from a checkpoint; the file sink can
@@ -92,8 +92,8 @@ class RecoverySpec extends SparkSpec {
     }
     assert(expected.length >= 2, s"test geometry produced no flip: $sums")
 
-    val ckpt = java.nio.file.Files.createTempDirectory("e2e_ck").toString
-    val out = java.nio.file.Files.createTempDirectory("e2e_out").toString
+    val ckpt = tempDir("e2e_ck").toString
+    val out = tempDir("e2e_out").toString
     val limits = Seq(("max", limit)).toDF("limit_name", "limit_value")
 
     def run() = {
@@ -129,5 +129,34 @@ class RecoverySpec extends SparkSpec {
     // and the boundary was actually crossed: at least one emitted
     // transition belongs to a window only run 2 could finalize
     assert(transitions.exists(_._1 >= WindowPackets))
+  }
+
+  test("a flipped byte in a pipeline checkpoint's offset log fails the restart") {
+    import spark.implicits._
+    val ckpt = tempDir("flip_ck")
+    val limits = Seq(("max", 4000L)).toDF("limit_name", "limit_value")
+    def run() = TrafficMonitor.pipeline(
+        spark.readStream.format("graft.streaming.PacketSourceProvider")
+          .option("nifs", "eth0").option("packetsPerTrigger", "40")
+          .option("microsPerPacket", "60000000").load(),
+        limits, lateness = "0 seconds")
+      .writeStream.option("checkpointLocation", ckpt.toUri.toString)
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Alert], _: Long) => ds.collect(); () }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+
+    val q1 = run(); assert(q1.awaitTermination(120000)); q1.stop()
+    // flip the low bit of the last digit, the source offset's: it still
+    // parses, as a different offset
+    val log = ckpt.resolve("offsets/0")
+    val bytes = java.nio.file.Files.readAllBytes(log)
+    val at = bytes.lastIndexWhere(b => b >= '0' && b <= '9')
+    bytes(at) = (bytes(at) ^ 1).toByte
+    java.nio.file.Files.write(log, bytes)
+
+    val q2 = run()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q2.awaitTermination(120000))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
   }
 }

@@ -7,7 +7,7 @@ import graft.SparkSpec
 class StreamingCalibrationSpec extends SparkSpec {
 
   private def freshBase(): String =
-    java.nio.file.Files.createTempDirectory("graft_cal").toString + "/state"
+    tempDir("graft_cal").toString + "/state"
 
   private type Bin = (Long, Long, Long, Long, Long)
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
 class StreamingCleanPackSpec extends SparkSpec {
 
   private def freshBase(): String =
-    java.nio.file.Files.createTempDirectory("graft_scp").toString + "/state"
+    tempDir("graft_scp").toString + "/state"
 
   private def docs = Tables.t(spark, sfDir, "documents")
 
@@ -56,7 +56,7 @@ class StreamingCleanPackSpec extends SparkSpec {
     val cleaned = graft.operators.CorpusClean.clean(docs, "doc_id", "text")
       .persist()
     val vocabDir =
-      java.nio.file.Files.createTempDirectory("graft_scp_vocab").toString
+      tempDir("graft_scp_vocab").toString
     graft.operators.UnigramLM.train(cleaned, "doc_id", "norm_text", 2)
       .write.mode("overwrite").parquet(vocabDir)
     val expected = graft.operators.Packing.packCounted(
@@ -93,7 +93,7 @@ class StreamingCleanPackSpec extends SparkSpec {
     val cleaned = graft.operators.CorpusClean.clean(docs, "doc_id", "text")
       .persist()
     val vocabDir =
-      java.nio.file.Files.createTempDirectory("graft_scp_rv").toString
+      tempDir("graft_scp_rv").toString
     // vocab A: trained on the corpus; vocab B: singles only (every word
     // then costs length-many pieces — token counts provably differ)
     graft.operators.UnigramLM.train(cleaned, "doc_id", "norm_text", 2)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamingCorpusCleanSpec extends SparkSpec {
 
   private def freshBase(): String =
-    java.nio.file.Files.createTempDirectory("graft_scc").toString + "/state"
+    tempDir("graft_scc").toString + "/state"
 
   private def docs = Tables.t(spark, sfDir, "documents")
 
@@ -88,7 +88,7 @@ class StreamingCorpusCleanSpec extends SparkSpec {
 
   test("file-backed stream: new .warc.zst FILES landing in a watched dir fold incrementally") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_sccf").toString
+    val root = tempDir("graft_sccf").toString
     val watched = s"$root/landing"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watched))
     val base = s"$root/state"

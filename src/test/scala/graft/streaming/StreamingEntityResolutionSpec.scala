@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class StreamingEntityResolutionSpec extends SparkSpec {
 
   private def freshBase(): String = {
-    val p = java.nio.file.Files.createTempDirectory("er_stream").toString
+    val p = tempDir("er_stream").toString
     StreamingEntityResolution.init(spark, p)
     p
   }

@@ -54,7 +54,7 @@ class FoldPendingSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
   private def freshBase(): String =
-    java.nio.file.Files.createTempDirectory("graft_fp").toString
+    tempDir("graft_fp").toString
 
   private val wsCount: org.apache.spark.sql.DataFrame =>
       org.apache.spark.sql.DataFrame = fresh =>

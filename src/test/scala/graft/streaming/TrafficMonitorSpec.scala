@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -158,6 +159,60 @@ class TrafficMonitorSpec extends SparkSpec {
         .sortBy(_.windowStart.getTime).map(a => (a.windowStart, a.alert)).toSeq
       assert(got.take(2) === Seq((ts(0), true), (ts(5), false)))
     } finally q.stop()
+  }
+
+  /** (batch id, nif, window start, bytes, alert) of every alert `build`
+    * emits over `batches`, one `addData` and `processAllAvailable` each,
+    * plus the ids of the batches that ran without input rows. */
+  private def alertsByBatch(name: String, batches: Seq[Seq[Packet]])(
+      build: DataFrame => Dataset[Alert]): (Seq[(Long, String, Timestamp, Long, Boolean)], Set[Long]) = {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[Packet]
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Timestamp, Long, Boolean)]
+    val q = build(in.toDF()).writeStream
+      .option("checkpointLocation", artifactPath(s"tm_equiv/$name"))
+      .foreachBatch { (ds: Dataset[Alert], id: Long) =>
+        ds.collect().foreach(a => got.add((id, a.nif, a.windowStart, a.bytes, a.alert)))
+      }.start()
+    try {
+      for (b <- batches) { in.addData(b); q.processAllAvailable() }
+      import scala.jdk.CollectionConverters._
+      (got.asScala.toSeq.sortBy(a => (a._1, a._2, a._3.getTime)),
+        q.recentProgress.filter(_.numInputRows == 0).map(_.batchId).toSet)
+    } finally q.stop()
+  }
+
+  test("pipeline emits, batch for batch, what edgeTrigger(windowedTraffic) emits") {
+    import spark.implicits._
+    val limits = Seq(("max", 120)).toDF("limit_name", "limit_value")
+    val batches = Seq(
+      // eth0 [0,5) = 150 and [5,10) opens; eth2 gets no row after this batch,
+      // so its one window closes only through the watermark (the timeout)
+      Seq(pkt("eth0", 0, 10, 100), pkt("eth0", 4, 0, 50), pkt("eth0", 6, 30, 30),
+        pkt("eth1", 1, 0, 200), pkt("eth2", 2, 0, 5)),
+      // a late row for eth0 [0,5): dropped at lateness 0 s and 1 min, whose
+      // watermark (6:30, 5:30) has passed 5:00, kept at 2 min (4:30);
+      // eth1's rows arrive out of order
+      Seq(pkt("eth0", 3, 0, 999), pkt("eth1", 9, 50, 60), pkt("eth1", 5, 10, 70),
+        pkt("eth1", 8, 0, 10), pkt("eth0", 11, 0, 200)),
+      // the watermark jumps past every open window of eth0, which gets no
+      // row: at 2 min, its [5,10) and [10,15) close in one no-data batch
+      Seq(pkt("eth3", 30, 0, 7), pkt("eth1", 31, 0, 300)),
+      Seq(pkt("eth3", 59, 0, 1)))
+    for ((lateness, k) <- Seq("0 seconds", "1 minute", "2 minutes").zipWithIndex) withClue(lateness) {
+      val (fused, noData) = alertsByBatch(s"fused$k", batches)(
+        TrafficMonitor.pipeline(_, limits, lateness))
+      val (model, _) = alertsByBatch(s"model$k", batches)(p =>
+        TrafficMonitor.edgeTrigger(TrafficMonitor.windowedTraffic(p, lateness), 120L))
+      assert(fused === model)
+      // the cases above happened: no-data batches emitted, the late row
+      // counted only at 2 min, and two windows of one NIF flipped in one batch
+      assert(fused.exists(a => noData(a._1)))
+      val eth0w0 = fused.find(a => a._2 == "eth0" && a._3 == ts(0)).map(_._4)
+      assert(eth0w0 === Some(if (k == 2) 1149L else 150L))
+      if (k == 2) assert(fused.groupBy(a => (a._1, a._2)).values.exists(_.size == 2))
+    }
   }
 
   test("late data beyond the watermark is dropped, not double-counted") {

@@ -9,7 +9,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("upserts are last-write-wins and only affected buckets are rewritten") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("upsert").toString + "/t"
+    val path = tempDir("upsert").toString + "/t"
 
     val b1 = Seq((1L, "v1", 1L), (2L, "v1", 1L), (3L, "v1", 1L))
       .toDF("id", "payload", "version")
@@ -47,7 +47,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("re-applying the same batch is idempotent (exactly-once under replay)") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("upsert2").toString + "/t"
+    val path = tempDir("upsert2").toString + "/t"
     val b = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "payload", "version")
     UpsertSink.upsertBatch(b, path, "id", "version", numBuckets = 4)
     val first = UpsertSink.read(spark, path).as[(Long, String, Long)].collect().toSet
@@ -58,7 +58,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("mergeAggBatch maintains running totals and fences batch replays") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("aggm").toString + "/t"
+    val path = tempDir("aggm").toString + "/t"
     val b1 = Seq((1L, 10.0, 1L), (1L, 5.0, 1L), (2L, 7.0, 1L))
       .toDF("user_id", "amount", "n")
     UpsertSink.mergeAggBatch(b1, path, "user_id", Seq("amount", "n"), batchId = 0L)
@@ -76,7 +76,7 @@ class UpsertSinkSpec extends SparkSpec {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    val path = java.nio.file.Files.createTempDirectory("mv").toString + "/t"
+    val path = tempDir("mv").toString + "/t"
 
     val in = MemoryStream[Packet]
     // append mode emits each 5-min window exactly once (after the
@@ -110,7 +110,7 @@ class UpsertSinkSpec extends SparkSpec {
     // file:/// URI — java.io.File("file:///...") would see a non-existent
     // relative path, so hasData/markers only work through the Hadoop FS API
     val path = "file://" +
-      java.nio.file.Files.createTempDirectory("upserturi").toString + "/t"
+      tempDir("upserturi").toString + "/t"
     val b1 = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "payload", "version")
     UpsertSink.upsertBatch(b1, path, "id", "version", numBuckets = 4)
     val b2 = Seq((1L, "a2", 2L)).toDF("id", "payload", "version")
@@ -121,7 +121,7 @@ class UpsertSinkSpec extends SparkSpec {
 
     // agg matview + replay fence through the same URI path
     val aggPath = "file://" +
-      java.nio.file.Files.createTempDirectory("aggmuri").toString + "/t"
+      tempDir("aggmuri").toString + "/t"
     val a1 = Seq((1L, 10.0), (2L, 7.0)).toDF("k", "v")
     UpsertSink.mergeAggBatch(a1, aggPath, "k", Seq("v"), batchId = 0L, numBuckets = 4)
     UpsertSink.mergeAggBatch(a1, aggPath, "k", Seq("v"), batchId = 0L, numBuckets = 4)
@@ -132,7 +132,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("a NULL key upserts in place instead of accumulating duplicates") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("upsertnull").toString + "/t"
+    val path = tempDir("upsertnull").toString + "/t"
     val b1 = Seq((Some(1L), "a", 1L), (None, "n1", 1L))
       .toDF("id", "payload", "version")
     UpsertSink.upsertBatch(b1, path, "id", "version", numBuckets = 4)
@@ -149,7 +149,7 @@ class UpsertSinkSpec extends SparkSpec {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    val path = java.nio.file.Files.createTempDirectory("hllmv").toString + "/t"
+    val path = tempDir("hllmv").toString + "/t"
 
     val in = MemoryStream[(Long, Timestamp)]
     val q = in.toDF().toDF("user_id", "ts")
@@ -193,7 +193,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("compact collapses accumulated small files without changing contents") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val path = tempDir("compact").toString + "/t"
     // one wide batch: every merge task holds rows of several buckets, so
     // each bucket directory gets a file per task — the same fragmentation
     // a long-running stream accumulates. (AQE's partition coalescing
@@ -230,7 +230,7 @@ class UpsertSinkSpec extends SparkSpec {
     import java.sql.Timestamp
     import spark.implicits._
     def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    val base = java.nio.file.Files.createTempDirectory("sealhll").toString
+    val base = tempDir("sealhll").toString
     val hot = base + "/hot"; val closed = base + "/closed"
     def sketch(rows: (Long, Int)*) = rows.map { case (u, m) => (u, ts(m)) }
       .toDF("user_id", "ts")
@@ -281,7 +281,7 @@ class UpsertSinkSpec extends SparkSpec {
     import java.sql.Timestamp
     import spark.implicits._
     def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    val base = java.nio.file.Files.createTempDirectory("sealagg").toString
+    val base = tempDir("sealagg").toString
     val hot = base + "/hot"; val closed = base + "/closed"
     def totals(df: org.apache.spark.sql.DataFrame) = df
       .select(col("ws").cast("timestamp"), col("v"))
@@ -319,7 +319,7 @@ class UpsertSinkSpec extends SparkSpec {
   test("works as a foreachBatch streaming sink") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("upsert3").toString + "/t"
+    val path = tempDir("upsert3").toString + "/t"
     val in = MemoryStream[(Long, String, Long)]
     val q = in.toDF().toDF("id", "payload", "version")
       .writeStream.foreachBatch {
