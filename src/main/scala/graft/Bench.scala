@@ -82,10 +82,7 @@ object Bench {
     val t0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - t0) / 1e9
 
-    import scala.jdk.CollectionConverters._
-    def gcSeconds(): Double =
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime.max(0L)).sum / 1e3
+    def gcSeconds(): Double = QueryRecord.gcMs() / 1e3
     def loadAvg1m(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
@@ -124,9 +121,12 @@ object Bench {
     // must not read as a speedup.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
 
-    def timeOne(name: String, fn: QFn): Option[Double] = {
+    def timeOne(name: String, fn: QFn, record: Option[QueryRecord]): Option[Double] = {
       val s0 = System.nanoTime()
-      val status = attempt(run(fn))
+      val status = record match {
+        case Some(r) => r.run(name)(run(fn))
+        case None => attempt(run(fn))
+      }
       val dt = (System.nanoTime() - s0) / 1e9
       status.left.foreach { e =>
         System.err.println(s"[bench] $name failed: $e")
@@ -150,14 +150,14 @@ object Bench {
       * is a real measurement). Returns the partial-or-complete sample
       * map of the queries that ran without throwing. */
     def timedPass(kind: String, queries: Seq[(String, QFn)],
-        stopAt: Double): Map[String, Double] = {
+        stopAt: Double, record: Option[QueryRecord] = None): Map[String, Double] = {
       val (w0, g0) = (System.nanoTime(), gcSeconds())
       val out = scala.collection.mutable.Map.empty[String, Double]
       var cut = false
       val it = queries.iterator
       while (it.hasNext && !cut) {
         val (name, fn) = it.next()
-        timeOne(name, fn).foreach(out(name) = _)
+        timeOne(name, fn, record).foreach(out(name) = _)
         if (elapsedSec > stopAt) cut = true
       }
       val complete = !it.hasNext
@@ -175,6 +175,25 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     def fmt(v: Double) = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+
+    // The driver captures stdout with a tail that can truncate the
+    // alphabetical head of the per-query map; the detail file keeps the
+    // full line so round-over-round comparisons never lose queries, and
+    // the warmup pass's query record goes beside it. SUBSET runs skip both
+    // (unless explicitly redirected) — a timing experiment must never
+    // clobber the full-registry record it exists to explain.
+    val detailOut =
+      if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
+        Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_full.json"))
+      else None
+    def persist(path: String, text: String): Unit =
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+      catch { case e: Throwable =>
+        // never fail the bench over a side file, but never lose the
+        // signal either — a stale BENCH_full.json silently poisons
+        // round-over-round comparisons
+        System.err.println(s"[bench] WARNING: could not persist $path: $e")
+      }
 
     // --- cumulative emit: after EVERY completed pass, print the full
     // result line from all samples so far and rewrite the detail side
@@ -219,22 +238,7 @@ object Bench {
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val detailLine =
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$repsDone,"passes":$passes,"queries":$detail,"failed":$failedJson,"sf":"$sfDir"}"""
-      // The driver captures stdout with a tail that can truncate the
-      // alphabetical head of the per-query map; persist the full line so
-      // round-over-round comparisons never lose queries. SUBSET runs skip
-      // the side file (unless explicitly redirected) — a timing experiment
-      // must never clobber the full-registry record it exists to explain.
-      if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
-        try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(
-            sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_full.json")),
-          detailLine + "\n")
-        catch { case e: Throwable =>
-          // never fail the bench over the side file, but never lose the
-          // signal either — a stale BENCH_full.json silently poisons
-          // round-over-round comparisons
-          System.err.println(s"[bench] WARNING: could not persist full JSON: $e")
-        }
+      detailOut.foreach(persist(_, detailLine + "\n"))
     }
 
     // Warmup pass over the whole registry: pays one-time codegen/JIT/
@@ -244,11 +248,16 @@ object Bench {
     // a parseable line, but they never mix into medians once any rep
     // completes. Capped at 45% of the deadline — if warmup alone blows
     // that, the remaining queries run un-warmed in rep-1 rather than
-    // eating the whole budget. Skippable via SPARK_GRAFT_BENCH_WARMUP=0.
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0") {
-      warmupSamples = timedPass("warmup", registry, stopAt = deadlineSec * 0.45)
-      emitCumulative(repsDone = 0)
-    }
+    // eating the whole budget. Only this pass runs under a QueryRecord
+    // (one row of layers per query, written beside the detail file as
+    // `<detail>_record.json`): the timed reps run with no record listener.
+    val record = QueryRecord.open(spark)
+    try warmupSamples =
+      timedPass("warmup", registry, stopAt = deadlineSec * 0.45, Some(record))
+    finally record.close()
+    detailOut.foreach(p => persist(p.stripSuffix(".json") + "_record.json",
+      record.rows.map(_.json).mkString("[\n", ",\n", "\n]\n")))
+    emitCumulative(repsDone = 0)
 
     // Each pass rotates the execution order by a different offset so any
     // position-dependent contamination shifts to a different query.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder: Bench, Verify, Smoke, Scratch, CatalogDemo,
+/** The one session builder: Bench, Verify, Smoke, CatalogDemo,
   * the test suites and the stream benchmark all start from [[builder]],
   * so they plan and run with the same configuration. Callers add only
   * what is theirs (CatalogDemo its Hive metastore, the stream benchmark

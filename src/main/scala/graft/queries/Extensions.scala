@@ -2892,7 +2892,8 @@ object Extensions extends QueryModule {
         // fixture scaffolding: the zstd encode is consumed four times
         // (maxId + three wave filters, which sit ABOVE the mapGroups
         // encode) — eager-checkpoint it so the corpus is encoded once
-        // per invocation (the Scratch watchprof idiom), not per wave
+        // per invocation, not per wave: a filter cannot be pushed below
+        // the mapGroups, so each wave would re-encode the whole corpus
         val arcs = graft.multimodal.Archives.warcZstFixtures(
           t(s, dir, "documents"), "doc_id", "text").localCheckpoint(true)
         val maxId = arcs.agg(max(col("archive_id"))).head.getLong(0) + 1
@@ -2935,7 +2936,8 @@ object Extensions extends QueryModule {
         // fixture scaffolding: the zstd encode is consumed four times
         // (maxId + three wave filters, which sit ABOVE the mapGroups
         // encode) — eager-checkpoint it so the corpus is encoded once
-        // per invocation (the Scratch watchprof idiom), not per wave
+        // per invocation, not per wave: a filter cannot be pushed below
+        // the mapGroups, so each wave would re-encode the whole corpus
         val arcs = graft.multimodal.Archives.warcZstFixtures(
           t(s, dir, "documents"), "doc_id", "text").localCheckpoint(true)
         val maxId = arcs.agg(max(col("archive_id"))).head.getLong(0) + 1
@@ -3003,7 +3005,8 @@ object Extensions extends QueryModule {
         // fixture scaffolding: the zstd encode is consumed four times
         // (maxId + three wave filters, which sit ABOVE the mapGroups
         // encode) — eager-checkpoint it so the corpus is encoded once
-        // per invocation (the Scratch watchprof idiom), not per wave
+        // per invocation, not per wave: a filter cannot be pushed below
+        // the mapGroups, so each wave would re-encode the whole corpus
         val arcs = graft.multimodal.Archives.warcZstFixtures(
           t(s, dir, "documents"), "doc_id", "text").localCheckpoint(true)
         val maxId = arcs.agg(max(col("archive_id"))).head.getLong(0) + 1

@@ -185,46 +185,6 @@ object TrafficMonitor {
       }
   }
 
-  /** T6 (extension surface): sliding-window traffic — each packet counts
-    * toward every overlapping window (e.g. 10-min windows advancing every
-    * 5 min for smoothed alerting). */
-  def slidingTraffic(packets: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes", lateness: String = "1 minute"): Dataset[Traffic] = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    packetSizes(packets)
-      .withWatermark("ts", lateness)
-      .groupBy(window($"ts", windowLen, slide), $"nif")
-      .agg(sum($"bytes").as("bytes"))
-      .select($"nif", $"window.start".as("windowStart"), $"bytes")
-      .as[Traffic]
-  }
-
-  /** T6 (extension surface): session-window traffic — a session closes
-    * after `gap` of silence on a NIF; emits total bytes per burst. */
-  def sessionTraffic(packets: DataFrame, gap: String = "5 minutes",
-      lateness: String = "1 minute"): Dataset[Traffic] = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    packetSizes(packets)
-      .withWatermark("ts", lateness)
-      .groupBy(session_window($"ts", gap), $"nif")
-      .agg(sum($"bytes").as("bytes"))
-      .select($"nif", $"session_window.start".as("windowStart"), $"bytes")
-      .as[Traffic]
-  }
-
-  /** §2.11 × streaming: exactly-once packet dedup inside the watermark —
-    * duplicate (nif, ts, fingerprint) deliveries (receiver retries,
-    * at-least-once upstreams) collapse to one row; state for seen keys is
-    * dropped once the watermark passes them, so it stays bounded. */
-  def dedupPackets(packets: DataFrame, lateness: String = "1 minute"): DataFrame =
-    packets
-      .withColumn("fp", xxhash64(col("raw")))
-      .withWatermark("ts", lateness)
-      .dropDuplicates("nif", "ts", "fp")
-      .drop("fp")
-
   /** S5: per-batch observability — the reference logs per-batch counts and
     * totals (MainApp.java:52,57); `observe` publishes them as metrics on
     * the query progress events instead of log lines. */
@@ -300,23 +260,6 @@ object TrafficMonitor {
           if (open.nonEmpty) state.setTimeoutTimestamp(open.keys.min + WindowMs - 1)
           out.iterator
       }
-  }
-
-  /** The pipeline with the limit applied via a STREAM-STATIC BROADCAST
-    * JOIN instead of a driver-side collect: the static side is re-read per
-    * micro-batch, so limit-table updates take effect on the next trigger
-    * without a query restart (SURVEY.md §2.3 upgrade note). Output marks
-    * every window (alert flag per row); pair with [[edgeTrigger]] when only
-    * transitions should emit. */
-  def windowedWithLimits(packets: DataFrame, limits: DataFrame,
-      lateness: String = "1 minute"): DataFrame = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    windowedTraffic(packets, lateness).toDF()
-      .join(broadcast(limits.where($"limit_name" === "max")
-        .select($"limit_value".cast("long").as("max_limit"))))
-      .select($"nif", $"windowStart", $"bytes",
-        ($"bytes" > $"max_limit").as("alert"))
   }
 
   /** S4: shape alerts as Kafka records — (key, value) exactly what

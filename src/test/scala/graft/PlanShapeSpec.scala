@@ -749,8 +749,9 @@ class PlanShapeSpec extends SparkSpec {
     // The full-registry winaudit at sf0.1 (plans/r15/winaudit_sf01.txt)
     // found exactly these queries planning an empty-PARTITION-BY
     // WindowExec. Each is attributed to a bounded input; this pin fails
-    // if any of their global windows loses its bounding structure (and
-    // the audit itself is re-runnable via `Scratch winaudit`):
+    // if any of their global windows loses its bounding structure. The
+    // registry-wide sweep that produced the list is gone, so this test is
+    // now the audit; it checks only the queries listed here:
     //  - "limit": the window ranks the ≤ k survivors of a distributed
     //    TakeOrdered/limit (bm25/rrf/gumbel/weighted-sample/
     //    cooccurrence/bpe-merges post-limit rank);

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.Tables
 import graft.multimodal.{Archives, ArchiveRecord}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max}
 
 /** The composed streamed pipeline — archives → clean → count → pack —
   * must equal batch clean→count→pack on everything seen, for both the
@@ -140,5 +140,49 @@ class StreamingCleanPackSpec extends SparkSpec {
       assert(off === next, s"offset hole at $off (expected $next)")
       next = off + n
     }
+  }
+
+  test("20-fold crash soak: skipped packs, lost watermark markers and " +
+      "replayed folds still pack every kept doc once, contiguously, " +
+      "equal to the batch clean→pack") {
+    import spark.implicits._
+    val base = freshBase()
+    StreamingCleanPack.init(spark, base)
+    val cb = StreamingCleanPack.cleanBase(base)
+    val fs = FoldStore.fs(spark, base)
+    val folds = 20L
+    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
+    def clean(i: Long): Unit = StreamingCorpusClean.foldDocs(spark, cb,
+      docs.where(col("doc_id") >= i * maxId / folds &&
+        col("doc_id") < (i + 1) * maxId / folds), "doc_id", "text",
+      onNewlyKept = Some(d => StreamingCleanPack.stagePending(spark, base, d)))
+    def pack(): Unit = StreamingCleanPack.packPending(spark, base, 256, None)
+    // a crash after the pack consumed its pending dirs but before it
+    // wrote its watermark marker
+    def dropMaxMarker(): Unit = {
+      val d = new org.apache.hadoop.fs.Path(
+        s"${StreamingCleanPack.packBase(base)}/wlog")
+      val ms = fs.listStatus(d).map(_.getPath)
+        .flatMap(p => p.getName.stripPrefix("c_").toLongOption.map((_, p)))
+      if (ms.nonEmpty) fs.delete(ms.maxBy(_._1)._2, false)
+    }
+    for (i <- 0L until folds) {
+      clean(i)
+      // a crash between stage and pack: the next fold packs two folds
+      if (i % 10 != 3) pack()
+      if (i % 10 == 7) dropMaxMarker()
+      if (i == 19) StreamingCorpusClean.compact(spark, cb)
+      // the upstream source replays the previous fold end to end
+      if (i % 10 == 9) { clean(i - 1); pack() }
+    }
+    val rows = StreamingCleanPack.packed(spark, base)
+      .as[PackRow].collect().sortBy(_._3).toSeq
+    var next = 0L
+    for ((_, n, off, _, _) <- rows) {
+      assert(off === next, s"offset hole at $off (expected $next)")
+      next = off + n
+    }
+    assert(rows.map(_._1).distinct.length === rows.length, "a doc packed twice")
+    assert(rows.sortBy(_._1) === batchPacked())
   }
 }

@@ -236,84 +236,6 @@ class TrafficMonitorSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("slidingTraffic counts packets toward every overlapping window") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[Packet]
-    val q = TrafficMonitor.slidingTraffic(in.toDF(), lateness = "0 seconds")
-      .writeStream.format("memory").queryName("sw").outputMode("append").start()
-    try {
-      in.addData(pkt("eth0", 7, 0, 100)) // in [0,10) and [5,15)
-      q.processAllAvailable()
-      in.addData(pkt("eth0", 40, 0, 1))  // advance watermark
-      q.processAllAvailable()
-      val got = spark.table("sw").as[Traffic].collect()
-        .map(t => (t.windowStart, t.bytes)).toSet
-      assert(got.contains((ts(0), 100L)))
-      assert(got.contains((ts(5), 100L)))
-    } finally q.stop()
-  }
-
-  test("sessionTraffic closes a session after the gap and sums its bytes") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[Packet]
-    val q = TrafficMonitor.sessionTraffic(in.toDF(), gap = "5 minutes",
-        lateness = "0 seconds")
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      // burst 1: 0:00..1:00 (merges, 150 B); silence > 5 min; burst 2: 20:00
-      in.addData(pkt("eth0", 0, 0, 100), pkt("eth0", 1, 0, 50))
-      q.processAllAvailable()
-      in.addData(pkt("eth0", 20, 0, 7))
-      q.processAllAvailable()
-      in.addData(pkt("eth0", 59, 0, 1)) // advance watermark, close burst 2
-      q.processAllAvailable()
-      val got = spark.table("sess").as[Traffic].collect()
-        .map(t => (t.windowStart, t.bytes)).toSet
-      assert(got.contains((ts(0), 150L)))
-      assert(got.contains((ts(20), 7L)))
-    } finally q.stop()
-  }
-
-  test("windowedWithLimits applies the limit via a stream-static broadcast join") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val limits = Seq(("min", 10), ("max", 120)).toDF("limit_name", "limit_value")
-    val in = MemoryStream[Packet]
-    val q = TrafficMonitor.windowedWithLimits(in.toDF(), limits,
-        lateness = "0 seconds")
-      .writeStream.format("memory").queryName("wl").outputMode("append").start()
-    try {
-      in.addData(pkt("eth0", 0, 0, 200), pkt("eth1", 0, 0, 5))
-      q.processAllAvailable()
-      in.addData(pkt("eth0", 30, 0, 1)) // advance watermark
-      q.processAllAvailable()
-      val got = spark.table("wl").collect()
-        .map(r => (r.getAs[String]("nif"), r.getAs[Boolean]("alert"))).toSet
-      assert(got.contains(("eth0", true)))   // 200 > 120
-      assert(got.contains(("eth1", false)))  // 5 <= 120
-    } finally q.stop()
-  }
-
-  test("dedupPackets drops duplicate deliveries within the watermark") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[Packet]
-    val q = TrafficMonitor.dedupPackets(in.toDF())
-      .writeStream.format("memory").queryName("dd").outputMode("append").start()
-    try {
-      val p = pkt("eth0", 0, 0, 10)
-      in.addData(p, p) // duplicate in one batch
-      q.processAllAvailable()
-      in.addData(p)    // duplicate across batches
-      in.addData(pkt("eth0", 0, 0, 99)) // same (nif, ts), different payload
-      q.processAllAvailable()
-      val rows = spark.table("dd").collect()
-      assert(rows.length === 2) // the dup collapsed; distinct payload kept
-    } finally q.stop()
-  }
-
   test("observe publishes per-batch packet metrics on progress events") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
