@@ -176,7 +176,7 @@ object Bench {
     }
     def fmt(v: Double) = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
 
-    // The driver captures stdout with a tail that can truncate the
+    // A caller that keeps only the tail of stdout can truncate the
     // alphabetical head of the per-query map; the detail file keeps the
     // full line so round-over-round comparisons never lose queries, and
     // the warmup pass's query record goes beside it. SUBSET runs skip both
@@ -184,7 +184,7 @@ object Bench {
     // clobber the full-registry record it exists to explain.
     val detailOut =
       if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
-        Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_full.json"))
+        Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json"))
       else None
     def persist(path: String, text: String): Unit =
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
