@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkFiles
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogUtils
 
 /** Session-catalog registration of the fixture tables — the engine's
   * analogue of the reference resolving `traffic_limits` through a
   * persistent metastore (`enableHiveSupport()` +
   * `sqlContext.table("traffic_limits")`,
   * /root/reference/src/main/java/org/test/pcap4j/MainApp.java:32-44).
+  * [[Tables.t]] reads every fixture table through [[register]].
   *
   * Tables are EXTERNAL (`CREATE TABLE ... USING parquet LOCATION`): the
   * catalog stores metadata only, the data stays where it is — the shape a
@@ -18,14 +22,10 @@ import org.apache.spark.sql.SparkSession
   * DDL persists across JVMs (see [[CatalogDemo]]).
   *
   * One database per sf directory so verify (sf0.01), bench (sf0.1) and
-  * specs (sf0.001) never fight over locations.
-  *
-  * `events` is excluded: its TIMESTAMP(NANOS) column needs the
-  * timestamp rebuild of [[Tables.t]], which a bare catalog scan can't
-  * apply.
+  * specs (sf0.001) never fight over locations. The database's own
+  * directory sits under [[artifactPath]], so it goes with the application.
   */
 object GraftCatalog {
-  val tables: Seq[String] = Tables.all.filterNot(_ == "events")
 
   /** Stable database name for an sf dir, e.g. /root/testdata/sf0.01 →
     * graft_sf0_01. */
@@ -44,28 +44,36 @@ object GraftCatalog {
   def artifactPath(dir: String, name: String): String =
     s"file:${SparkFiles.getRootDirectory()}/graft/${dbFor(dir)}/$name"
 
-  /** Idempotently create the database + external table entries for `dir`;
-    * returns the database name for `spark.table(s"$db.$name")` resolution.
-    * If a table of the same name is already registered but points at a
-    * DIFFERENT location (same basename, different parent — e.g. a moved
-    * dataset), it is dropped and re-created: IF NOT EXISTS alone would
-    * silently keep serving the stale location. */
-  def ensure(spark: SparkSession, dir: String): String = {
-    val db = dbFor(dir)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+  /** Registers `dir`'s table `name` as the external parquet table
+    * `<db>.<name>` unless it is already there, and returns that qualified
+    * name for `spark.table`. Registering infers the schema (a Spark job
+    * that reads a footer); an existing entry costs one catalog lookup.
+    *
+    * An entry of the same name that points at a DIFFERENT location (same
+    * basename, different parent — e.g. a moved dataset) is dropped and
+    * re-created: IF NOT EXISTS alone would silently keep serving the stale
+    * location. Locations compare as the catalog qualifies them, so `file:`
+    * and plain spellings of one path match.
+    *
+    * Two threads that register one table at once at worst both infer its
+    * schema: `CREATE TABLE IF NOT EXISTS` creates with `ignoreIfExists`. */
+  def register(spark: SparkSession, dir: String, name: String): String =
+    register(spark, dir, name, dbFor(dir))
+
+  /** [[register]] into database `db` instead of `dbFor(dir)`. */
+  def register(spark: SparkSession, dir: String, name: String, db: String): String = {
     val catalog = spark.sessionState.catalog
-    tables.foreach { name =>
-      val want = s"$dir/$name.parquet"
-      val id = org.apache.spark.sql.catalyst.TableIdentifier(name, Some(db))
-      if (catalog.tableExists(id)) {
-        val loc = new java.net.URI(
-          catalog.getTableMetadata(id).location.toString).getPath
-        if (loc != want) spark.sql(s"DROP TABLE $db.$name")
-      }
-      spark.sql(
-        s"CREATE TABLE IF NOT EXISTS $db.$name USING parquet LOCATION '$want'")
+    val id = TableIdentifier(name, Some(db))
+    val location = s"$dir/$name.parquet"
+    def pointsThere = new Path(catalog.getTableMetadata(id).location) ==
+      new Path(catalog.makeQualifiedTablePath(CatalogUtils.stringToURI(location), db))
+    if (!(catalog.tableExists(id) && pointsThere)) {
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db " +
+        s"LOCATION '${artifactPath(dir, s"$db.db")}'")
+      if (catalog.tableExists(id) && !pointsThere) spark.sql(s"DROP TABLE $db.$name")
+      spark.sql(s"CREATE TABLE IF NOT EXISTS $db.$name USING parquet LOCATION '$location'")
     }
-    db
+    s"$db.$name"
   }
 }
 
@@ -94,7 +102,7 @@ object CatalogDemo {
     spark.sparkContext.setLogLevel("WARN")
     val db = GraftCatalog.dbFor(sfDir)
     if (phase == "create") {
-      GraftCatalog.ensure(spark, sfDir)
+      Tables.all.foreach(GraftCatalog.register(spark, sfDir, _))
       println(s"CATALOG_TABLES=${spark.catalog.listTables(db).count()}")
     } else {
       // no DDL here: resolution comes from the persisted metastore

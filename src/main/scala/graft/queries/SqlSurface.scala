@@ -180,15 +180,16 @@ object SqlSurface extends QueryModule {
     // ---- persistent-catalog resolution (reference: Hive-resolved
     //      traffic_limits, MainApp.java:32-44). The inputs resolve through
     //      the SESSION CATALOG (CREATE TABLE ... USING parquet LOCATION +
-    //      spark.table), not temp views; GraftCatalog/CatalogDemo cover
+    //      spark.table), not temp views, spelled out here although
+    //      Tables.t reads the same way; GraftCatalog/CatalogDemo cover
     //      cross-session and cross-JVM metastore persistence. Balance sums
     //      use exact integer cents — a double sum's addition order differs
     //      between engines. ----
     GraftQuery("q_catalog_scan",
       (s, dir) => {
-        val db = graft.GraftCatalog.ensure(s, dir)
-        s.table(s"$db.customer")
-          .join(s.table(s"$db.nation"), col("c_nationkey") === col("n_nationkey"))
+        def table(name: String) = s.table(graft.GraftCatalog.register(s, dir, name))
+        table("customer")
+          .join(table("nation"), col("c_nationkey") === col("n_nationkey"))
           .groupBy(col("n_name"))
           .agg(count(lit(1)).as("n_customers"),
             sum(round(col("c_acctbal") * 100).cast("long")).as("cents_total"))

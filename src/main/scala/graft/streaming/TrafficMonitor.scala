@@ -64,18 +64,20 @@ object TrafficMonitor {
     * LONG, not the reference's int (overflows at 2 GiB/window — SURVEY.md
     * §7.0 delta 3).
     *
-    * The input is first coalesced to the session's `defaultParallelism`:
+    * The projection is then coalesced to the session's `defaultParallelism`:
     * [[PacketSource]] plans one partition per NIF, and at 64 NIFs × 125
     * packets a scan task carries ~0.2 ms of payload work against several ms
     * of scheduling and launch cost. `coalesce` never raises a partition
     * count and adds no exchange, so a source that already plans at most
     * that many partitions is unchanged. It is the streaming counterpart of
     * [[graft.Tables.spreadScan]]: batch scans are sized by AQE and split
-    * packing, a micro-batch scan by nothing else. */
+    * packing, a micro-batch scan by nothing else. Projecting first keeps
+    * `raw` out of the rows the coalesced stage carries: only its length
+    * leaves the scan. */
   def packetSizes(packets: DataFrame): DataFrame =
-    packets.coalesce(packets.sparkSession.sparkContext.defaultParallelism)
-      .select(col("nif"), octet_length(col("raw")).cast("long").as("bytes"),
+    packets.select(col("nif"), octet_length(col("raw")).cast("long").as("bytes"),
         col("ts"))
+      .coalesce(packets.sparkSession.sparkContext.defaultParallelism)
 
   /** A1+T1/T2: event-time 5-minute tumbling window sum per NIF, with a
     * watermark so state is bounded and late packets beyond `lateness` drop. */
@@ -228,6 +230,11 @@ object TrafficMonitor {
     * aggregate drops it, i.e. when its window ends at or below the
     * previous batch's watermark.
     *
+    * The operator is keyed by the `nif` column (`groupBy(...).as`), not by
+    * a Scala function of the row: a function key would add an
+    * `AppendColumns` that deserializes every row and serializes its key in
+    * the scan stage.
+    *
     * The exchange carries one row per packet: a per-partition pre-sum to
     * one row per (nif, window) measured no faster on `traffic_paced`.
     *
@@ -241,8 +248,7 @@ object TrafficMonitor {
     packetSizes(packets)
       .withWatermark("ts", lateness)
       .select($"nif", window($"ts", WindowLength).as("w"), $"bytes")
-      .as[WindowedBytes]
-      .groupByKey(_.nif)
+      .groupBy($"nif").as[String, WindowedBytes]
       .flatMapGroupsWithState[NifWindows, Alert](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (nif: String, rows: Iterator[WindowedBytes], state: GroupState[NifWindows]) =>

@@ -46,6 +46,17 @@ class CboSpec extends SparkSpec {
        |  AND o_totalprice < 50000.0
        |GROUP BY n_name""".stripMargin
 
+  /** The TPC-H tables in a database of this spec's own: the stats that
+    * ANALYZE writes must not sit under other suites' [[Tables.t]] reads. */
+  private def analyzed(): String = {
+    val db = "cbospec"
+    tpch.foreach { t =>
+      GraftCatalog.register(spark, sfDir, t, db)
+      spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS")
+    }
+    db
+  }
+
   private def leafOrder(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collectLeaves().flatMap {
       case r: LogicalRelation => r.catalogTable.map(_.identifier.table)
@@ -53,9 +64,7 @@ class CboSpec extends SparkSpec {
     }
 
   test("ANALYZE TABLE puts exact row counts and column stats in the catalog") {
-    val db = GraftCatalog.ensure(spark, sfDir)
-    tpch.foreach(t =>
-      spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS"))
+    val db = analyzed()
     for (t <- tpch) {
       val meta = spark.sessionState.catalog
         .getTableMetadata(TableIdentifier(t, Some(db)))
@@ -67,9 +76,7 @@ class CboSpec extends SparkSpec {
   }
 
   test("CBO consumes the stats: estimates become row-count based, results unchanged") {
-    val db = GraftCatalog.ensure(spark, sfDir)
-    tpch.foreach(t =>
-      spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS"))
+    val db = analyzed()
     val sql = q5(db)
 
     val (baseOrder, baseRows) = withConfs(

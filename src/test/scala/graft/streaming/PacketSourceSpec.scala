@@ -11,6 +11,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.Trigger
 
 /** DataSource V2 packet source (SURVEY.md §2.1 S1 replacement). */
@@ -163,6 +164,12 @@ class PacketSourceSpec extends SparkSpec {
           s"batch ${p.batchId}")
       val perBatch = stages.asScala.filter(_._1 == id).groupMapReduce(_._2)(_._3)(_ + _)
       assert(perBatch.nonEmpty && perBatch.values.forall(_ <= 8), s"tasks per batch: $perBatch")
+
+      // the operator is keyed by the nif column: no per-row deserialize
+      // and key serialize (AppendColumns) in the scan stage
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case p if p.nodeName.startsWith("AppendColumns") => p }.isEmpty,
+        plan.treeString)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
