@@ -1,10 +1,11 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkFiles
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogUtils
 
 /** Session-catalog registration of the fixture tables — the engine's
   * analogue of the reference resolving `traffic_limits` through a
@@ -45,33 +46,39 @@ object GraftCatalog {
     s"file:${SparkFiles.getRootDirectory()}/graft/${dbFor(dir)}/$name"
 
   /** Registers `dir`'s table `name` as the external parquet table
-    * `<db>.<name>` unless it is already there, and returns that qualified
-    * name for `spark.table`. Registering infers the schema (a Spark job
-    * that reads a footer); an existing entry costs one catalog lookup.
+    * `<dbFor(dir)>.<name>` unless it is already there, and returns that
+    * qualified name for `spark.table`. Registering infers the schema (a
+    * Spark job that reads a footer); an existing entry costs one catalog
+    * lookup.
     *
-    * An entry of the same name that points at a DIFFERENT location (same
-    * basename, different parent — e.g. a moved dataset) is dropped and
-    * re-created: IF NOT EXISTS alone would silently keep serving the stale
-    * location. Locations compare as the catalog qualifies them, so `file:`
-    * and plain spellings of one path match.
+    * `dir` is qualified first (`file:` and plain spellings of one path
+    * match, and a relative dir resolves against the working directory,
+    * not against the database's location, where the catalog would put a
+    * relative table location). An entry of the same name that points at a
+    * DIFFERENT location (same basename, different parent — e.g. a moved
+    * dataset) is dropped and re-created: IF NOT EXISTS alone would
+    * silently keep serving the stale location.
     *
-    * Two threads that register one table at once at worst both infer its
-    * schema: `CREATE TABLE IF NOT EXISTS` creates with `ignoreIfExists`. */
-  def register(spark: SparkSession, dir: String, name: String): String =
-    register(spark, dir, name, dbFor(dir))
-
-  /** [[register]] into database `db` instead of `dbFor(dir)`. */
-  def register(spark: SparkSession, dir: String, name: String, db: String): String = {
+    * Two threads that register one location at once at worst both infer
+    * its schema: `CREATE TABLE IF NOT EXISTS` creates with
+    * `ignoreIfExists`. Re-pointing is not safe while another thread reads
+    * the same table: a read between the drop and the create finds no
+    * table. */
+  def register(spark: SparkSession, dir: String, name: String): String = {
     val catalog = spark.sessionState.catalog
+    val db = dbFor(dir)
     val id = TableIdentifier(name, Some(db))
-    val location = s"$dir/$name.parquet"
-    def pointsThere = new Path(catalog.getTableMetadata(id).location) ==
-      new Path(catalog.makeQualifiedTablePath(CatalogUtils.stringToURI(location), db))
-    if (!(catalog.tableExists(id) && pointsThere)) {
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db " +
-        s"LOCATION '${artifactPath(dir, s"$db.db")}'")
-      if (catalog.tableExists(id) && !pointsThere) spark.sql(s"DROP TABLE $db.$name")
-      spark.sql(s"CREATE TABLE IF NOT EXISTS $db.$name USING parquet LOCATION '$location'")
+    val root = new Path(dir)
+    val location = new Path(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root),
+      s"$name.parquet")
+    Try(new Path(catalog.getTableMetadata(id).location)).toOption match {
+      case Some(`location`) =>
+      case stale =>
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db " +
+          s"LOCATION '${artifactPath(dir, s"$db.db")}'")
+        if (stale.isDefined) spark.sql(s"DROP TABLE IF EXISTS $db.$name")
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $db.$name USING parquet LOCATION '$location'")
     }
     s"$db.$name"
   }

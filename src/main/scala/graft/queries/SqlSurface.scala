@@ -180,20 +180,16 @@ object SqlSurface extends QueryModule {
     // ---- persistent-catalog resolution (reference: Hive-resolved
     //      traffic_limits, MainApp.java:32-44). The inputs resolve through
     //      the SESSION CATALOG (CREATE TABLE ... USING parquet LOCATION +
-    //      spark.table), not temp views, spelled out here although
-    //      Tables.t reads the same way; GraftCatalog/CatalogDemo cover
-    //      cross-session and cross-JVM metastore persistence. Balance sums
-    //      use exact integer cents — a double sum's addition order differs
-    //      between engines. ----
+    //      spark.table), not temp views, as every Tables.t read does;
+    //      GraftCatalog/CatalogDemo cover cross-session and cross-JVM
+    //      metastore persistence. Balance sums use exact integer cents — a
+    //      double sum's addition order differs between engines. ----
     GraftQuery("q_catalog_scan",
-      (s, dir) => {
-        def table(name: String) = s.table(graft.GraftCatalog.register(s, dir, name))
-        table("customer")
-          .join(table("nation"), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(count(lit(1)).as("n_customers"),
-            sum(round(col("c_acctbal") * 100).cast("long")).as("cents_total"))
-      },
+      (s, dir) => Tables.t(s, dir, "customer")
+        .join(Tables.t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
+        .groupBy(col("n_name"))
+        .agg(count(lit(1)).as("n_customers"),
+          sum(round(col("c_acctbal") * 100).cast("long")).as("cents_total")),
       Some("""SELECT n_name, CAST(count(*) AS BIGINT) AS n_customers,
              |CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS cents_total
              |FROM customer JOIN nation ON c_nationkey = n_nationkey

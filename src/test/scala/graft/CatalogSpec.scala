@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -20,16 +20,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   */
 class CatalogSpec extends SparkSpec {
 
-  private def createTime(table: String): Long = {
+  private def meta(table: String) = {
     val Array(db, name) = table.split('.')
-    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name, Some(db))).createTime
-  }
-
-  /** Copies the fixture's `tables` into `dir`, which it creates. */
-  private def fixtureCopy(dir: Path, tables: String*): Path = {
-    Files.createDirectories(dir)
-    tables.foreach(t => Files.copy(Paths.get(s"$sfDir/$t.parquet"), dir.resolve(s"$t.parquet")))
-    dir
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name, Some(db)))
   }
 
   test("tables register as non-temporary external catalog entries") {
@@ -52,20 +45,29 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("a file: dir registers once, and a dir with the same basename re-points the table") {
-    val db = "catalogspec_repoint"
-    val region = GraftCatalog.register(spark, s"file:$sfDir", "region", db)
-    val created = createTime(region)
+    val first = fixtureCopy(tempDir("a").resolve("repoint"), "region")
+    val region = GraftCatalog.register(spark, s"file:$first", "region")
+    val created = meta(region).createTime
     Thread.sleep(5) // a re-created entry would get a later createTime
-    assert(GraftCatalog.register(spark, s"file:$sfDir", "region", db) === region)
-    assert(GraftCatalog.register(spark, sfDir, "region", db) === region)
-    assert(createTime(region) === created, "re-registering the same location re-created the table")
+    assert(GraftCatalog.register(spark, s"file:$first", "region") === region)
+    assert(GraftCatalog.register(spark, first.toString, "region") === region)
+    assert(meta(region).createTime === created,
+      "re-registering the same location re-created the table")
 
-    val moved = fixtureCopy(tempDir("moved").resolve("sf0.001"), "region")
-    GraftCatalog.register(spark, moved.toString, "region", db)
+    val moved = fixtureCopy(tempDir("b").resolve("repoint"), "region")
+    assert(GraftCatalog.register(spark, moved.toString, "region") === region)
     assert(spark.catalog.getTable(region).tableType === "EXTERNAL")
-    assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier("region", Some(db)))
-      .location.getPath === s"$moved/region.parquet")
-    assert(createTime(region) > created)
+    assert(meta(region).location.getPath === s"$moved/region.parquet")
+    assert(meta(region).createTime > created)
+  }
+
+  test("a relative dir resolves against the working directory") {
+    val dir = fixtureCopy(tempDir("relative").resolve("relative"), "nation")
+    val relative = Paths.get("").toAbsolutePath.relativize(dir).toString
+    assert(!relative.startsWith("/"))
+    assert(Tables.t(spark, relative, "nation").count() === 25L)
+    val nation = GraftCatalog.register(spark, relative, "nation")
+    assert(meta(nation).location.getPath === s"$dir/nation.parquet")
   }
 
   test("a registered table reads and plans without starting a Spark job") {

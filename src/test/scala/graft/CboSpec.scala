@@ -46,12 +46,15 @@ class CboSpec extends SparkSpec {
        |  AND o_totalprice < 50000.0
        |GROUP BY n_name""".stripMargin
 
-  /** The TPC-H tables in a database of this spec's own: the stats that
-    * ANALYZE writes must not sit under other suites' [[Tables.t]] reads. */
+  /** A copy of the TPC-H tables, so they register in a database of this
+    * spec's own (`graft_cbospec`): the stats that ANALYZE writes must not
+    * sit under other suites' [[Tables.t]] reads. */
+  private lazy val dir = fixtureCopy(tempDir("cbo").resolve("cbospec"), tpch: _*).toString
+
   private def analyzed(): String = {
-    val db = "cbospec"
+    val db = GraftCatalog.dbFor(dir)
     tpch.foreach { t =>
-      GraftCatalog.register(spark, sfDir, t, db)
+      GraftCatalog.register(spark, dir, t)
       spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS")
     }
     db

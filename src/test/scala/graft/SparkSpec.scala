@@ -23,6 +23,13 @@ trait SparkSpec extends AnyFunSuite {
   def tempDir(prefix: String): Path =
     Files.createTempDirectory(
       Files.createDirectories(Paths.get(URI.create(artifactPath("tmp")))), prefix)
+  /** Copies `sfDir`'s `tables` into `dir`, which it creates: a dataset of
+    * its own, in the database that `dir`'s basename names. */
+  def fixtureCopy(dir: Path, tables: String*): Path = {
+    Files.createDirectories(dir)
+    tables.foreach(t => Files.copy(Paths.get(s"$sfDir/$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir
+  }
 }
 
 object SparkSpec {
