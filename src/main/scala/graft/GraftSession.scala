@@ -51,14 +51,6 @@ object GraftSession {
   /** Local cores for the driver surfaces: `SPARK_GRAFT_CPUS`, default 4. */
   lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** RocksDB-backed streaming state, for `spark.sql.streaming.stateStore.
-    * providerClass`: the default HDFS-backed store keeps every key of
-    * every stateful operator on the executor heap, while RocksDB spills
-    * to local disk with bounded memory. It measured slower on the traffic
-    * monitor's tiny state, so no session sets it by default. */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
 
 /** Loaders for the driver-provided parquet tables (see /root/repo/TESTDATA.md).
   *
@@ -69,6 +70,17 @@ object Tables {
     }
     if (splits.length == leaves.length && splits.sum < p) df.repartition(p)
     else df
+  }
+
+  /** The three ascending id-range slices a streamed registry query folds
+    * as its three batches: with `m = max(id) + 1`, slice `i` holds the
+    * rows with `i * m / 3 <= id < (i + 1) * m / 3` (integer division).
+    * The slices are disjoint and together hold every row whose id lies in
+    * `[0, m)`. Finding `m` runs one job; the slices are lazy. */
+  def thirds[T](ds: Dataset[T], id: String): Seq[Dataset[T]] = {
+    val m = ds.agg(max(col(id))).head.getLong(0) + 1
+    (0L until 3L).map(i =>
+      ds.where(col(id) >= i * m / 3 && col(id) < (i + 1) * m / 3))
   }
 
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) — which

@@ -666,6 +666,60 @@ object Curation extends QueryModule {
        |    i -> ${dH60raw("words[i+1]||' '||words[i+2]||' '||words[i+3]")}))) AS h
        |  FROM d WHERE len(words) >= 3)""".stripMargin
 
+  /** Shared by q_quantile_norm and q_quantile_norm_stream. */
+  private val quantileNormOracle: String =
+    """WITH b AS (
+      |  SELECT doc_id, source, n_chars,
+      |    ((CASE WHEN n_chars < 0 THEN -1 ELSE 1 END)
+      |     * (abs(n_chars) // 8))::BIGINT AS bin
+      |  FROM documents),
+      |c AS (SELECT source, bin, count(*)::BIGINT AS c
+      |      FROM b GROUP BY 1, 2),
+      |cw AS (SELECT source, bin,
+      |    (sum(c) OVER (PARTITION BY source ORDER BY bin
+      |      ROWS BETWEEN UNBOUNDED PRECEDING
+      |      AND CURRENT ROW))::BIGINT AS cum,
+      |    (sum(c) OVER (PARTITION BY source))::BIGINT AS n_grp
+      |  FROM c)
+      |SELECT b.doc_id AS id, b.source AS "group",
+      |  b.n_chars AS score, b.bin, cw.n_grp,
+      |  (cw.cum * 1000000 // cw.n_grp)::BIGINT AS ecdf_ppm
+      |FROM b JOIN cw USING (source, bin)""".stripMargin
+
+  /** Shared by q_dsir_ngram and q_dsir_ngram_stream. */
+  private val dsirNgramOracle: String =
+    """WITH wd AS (
+      |  SELECT doc_id, source,
+      |    list_filter(string_split(text, ' '), w -> w <> '')
+      |      AS words
+      |  FROM documents),
+      |gr AS (
+      |  SELECT doc_id, source, unnest(words) AS g FROM wd
+      |  UNION ALL
+      |  SELECT doc_id, source,
+      |    unnest(list_transform(range(len(words) - 1),
+      |      i -> words[i+1] || ' ' || words[i+2])) AS g
+      |  FROM wd WHERE len(words) >= 2),
+      |fb AS MATERIALIZED (SELECT doc_id, source,
+      |    ('0x'||substr(md5(g),1,15))::BIGINT % 1024 AS b
+      |  FROM gr),
+      |cq AS MATERIALIZED (SELECT b, count(*)::BIGINT AS cq
+      |  FROM fb GROUP BY 1),
+      |cp AS (SELECT b, count(*)::BIGINT AS cp
+      |  FROM fb WHERE source = 'src0' GROUP BY 1),
+      |tq AS (SELECT coalesce(sum(cq), 0)::BIGINT AS tq FROM cq),
+      |tp AS (SELECT coalesce(sum(cp), 0)::BIGINT AS tp FROM cp),
+      |w AS (SELECT cq.b,
+      |    floor(1000000.0 * ln(
+      |      ((coalesce(cp.cp, 0) + 1) * (tq.tq + 1024))::DOUBLE
+      |      / ((cq.cq + 1) * (tp.tp + 1024))::DOUBLE))::BIGINT
+      |      AS w
+      |  FROM cq LEFT JOIN cp USING (b), tq, tp)
+      |SELECT fb.doc_id, count(*)::BIGINT AS n_feats,
+      |  sum(w.w)::BIGINT AS logratio_micro,
+      |  (sum(w.w) > 0) AS kept
+      |FROM fb JOIN w USING (b) GROUP BY 1""".stripMargin
+
   override val queries: Seq[GraftQuery] = Seq(
 
     // ---- Gopher-style hard quality gates: per-rule 0/1 attribution +
@@ -1854,14 +1908,11 @@ object Curation extends QueryModule {
         val scored = pred.select(col("doc_id"), col("margin"),
             when(col("y") === 1L, 1L).otherwise(0L).as("is_pos"))
           .persist()
-        val maxId = scored.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingCalibration.fold(s, base,
-            scored.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(scored, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingCalibration.fold(s, base, slice,
             "margin", "is_pos", batchId = i, binWidth = 1024L,
             clamp = 64L)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingCalibration.compactBins(s, base)
         }
         scored.unpersist()
@@ -1894,13 +1945,10 @@ object Curation extends QueryModule {
         val (_, pred) = graft.operators.Perceptron.train(
           t(s, dir, "documents"), "doc_id", "text", d = 32, rounds = 4)
         val rows = pred.persist()
-        val maxId = rows.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingEval.fold(s, base,
-            rows.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3), "y", "pred",
+        for ((slice, i) <- Tables.thirds(rows, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingEval.fold(s, base, slice, "y", "pred",
             batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingEval.compact(s, base)
         }
         val out = graft.streaming.StreamingEval.scorecard(s, base)
@@ -1959,13 +2007,10 @@ object Curation extends QueryModule {
             (-col("margin")).as("nonconf"),
             (col("y") === 1L && col("doc_id") % 2 === 0).as("is_cal"))
           .persist()
-        val maxId = rows.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingConformal.fold(s, base,
-            rows.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(rows, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingConformal.fold(s, base, slice,
             "nonconf", "is_cal", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingConformal.compact(s, base)
         }
         val out = graft.streaming.StreamingConformal.gate(s, base,
@@ -2015,13 +2060,10 @@ object Curation extends QueryModule {
             (-col("margin")).as("nonconf"),
             (col("y") === 1L && col("doc_id") % 2 === 0).as("is_cal"))
           .persist()
-        val maxId = rows.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingConformal.foldByGroup(s, base,
-            rows.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(rows, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingConformal.foldByGroup(s, base, slice,
             "lang", "nonconf", "is_cal", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingConformal.compactByGroup(s, base)
         }
         val out = graft.streaming.StreamingConformal.gateByGroup(
@@ -2041,23 +2083,7 @@ object Curation extends QueryModule {
       (s, dir) => graft.operators.Calibration.ecdfNormalize(
         t(s, dir, "documents"), "doc_id", "source", "n_chars",
         binWidth = 8L),
-      Some("""WITH b AS (
-             |  SELECT doc_id, source, n_chars,
-             |    ((CASE WHEN n_chars < 0 THEN -1 ELSE 1 END)
-             |     * (abs(n_chars) // 8))::BIGINT AS bin
-             |  FROM documents),
-             |c AS (SELECT source, bin, count(*)::BIGINT AS c
-             |      FROM b GROUP BY 1, 2),
-             |cw AS (SELECT source, bin,
-             |    (sum(c) OVER (PARTITION BY source ORDER BY bin
-             |      ROWS BETWEEN UNBOUNDED PRECEDING
-             |      AND CURRENT ROW))::BIGINT AS cum,
-             |    (sum(c) OVER (PARTITION BY source))::BIGINT AS n_grp
-             |  FROM c)
-             |SELECT b.doc_id AS id, b.source AS "group",
-             |  b.n_chars AS score, b.bin, cw.n_grp,
-             |  (cw.cum * 1000000 // cw.n_grp)::BIGINT AS ecdf_ppm
-             |FROM b JOIN cw USING (source, bin)""".stripMargin)),
+      Some(quantileNormOracle)),
 
     // ---- streamed ECDF normalization: (group, bin) counts are
     //      ADDITIVE, so three id-range folds append deltas and the
@@ -2070,35 +2096,16 @@ object Curation extends QueryModule {
         val base = artifactPath(dir, "ecdf_stream")
         graft.streaming.StreamingEcdf.init(s, base)
         val docs = t(s, dir, "documents")
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingEcdf.fold(s, base,
-            docs.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingEcdf.fold(s, base, slice,
             "source", "n_chars", binWidth = 8L, batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingEcdf.compact(s, base)
         }
         graft.streaming.StreamingEcdf.normalize(s, base, docs,
           "doc_id", "source", "n_chars", binWidth = 8L)
       },
-      Some("""WITH b AS (
-             |  SELECT doc_id, source, n_chars,
-             |    ((CASE WHEN n_chars < 0 THEN -1 ELSE 1 END)
-             |     * (abs(n_chars) // 8))::BIGINT AS bin
-             |  FROM documents),
-             |c AS (SELECT source, bin, count(*)::BIGINT AS c
-             |      FROM b GROUP BY 1, 2),
-             |cw AS (SELECT source, bin,
-             |    (sum(c) OVER (PARTITION BY source ORDER BY bin
-             |      ROWS BETWEEN UNBOUNDED PRECEDING
-             |      AND CURRENT ROW))::BIGINT AS cum,
-             |    (sum(c) OVER (PARTITION BY source))::BIGINT AS n_grp
-             |  FROM c)
-             |SELECT b.doc_id AS id, b.source AS "group",
-             |  b.n_chars AS score, b.bin, cw.n_grp,
-             |  (cw.cum * 1000000 // cw.n_grp)::BIGINT AS ecdf_ppm
-             |FROM b JOIN cw USING (source, bin)""".stripMargin)),
+      Some(quantileNormOracle)),
 
     // ---- CCNet-style perplexity filter: stupid-backoff bigram LM
     //      trained on the even-doc_id half, scoring the held-out odd
@@ -2119,37 +2126,7 @@ object Curation extends QueryModule {
           docs, docs.where(col("source") === "src0"),
           "doc_id", "text", buckets = 1024)
       },
-      Some("""WITH wd AS (
-             |  SELECT doc_id, source,
-             |    list_filter(string_split(text, ' '), w -> w <> '')
-             |      AS words
-             |  FROM documents),
-             |gr AS (
-             |  SELECT doc_id, source, unnest(words) AS g FROM wd
-             |  UNION ALL
-             |  SELECT doc_id, source,
-             |    unnest(list_transform(range(len(words) - 1),
-             |      i -> words[i+1] || ' ' || words[i+2])) AS g
-             |  FROM wd WHERE len(words) >= 2),
-             |fb AS MATERIALIZED (SELECT doc_id, source,
-             |    ('0x'||substr(md5(g),1,15))::BIGINT % 1024 AS b
-             |  FROM gr),
-             |cq AS MATERIALIZED (SELECT b, count(*)::BIGINT AS cq
-             |  FROM fb GROUP BY 1),
-             |cp AS (SELECT b, count(*)::BIGINT AS cp
-             |  FROM fb WHERE source = 'src0' GROUP BY 1),
-             |tq AS (SELECT coalesce(sum(cq), 0)::BIGINT AS tq FROM cq),
-             |tp AS (SELECT coalesce(sum(cp), 0)::BIGINT AS tp FROM cp),
-             |w AS (SELECT cq.b,
-             |    floor(1000000.0 * ln(
-             |      ((coalesce(cp.cp, 0) + 1) * (tq.tq + 1024))::DOUBLE
-             |      / ((cq.cq + 1) * (tp.tp + 1024))::DOUBLE))::BIGINT
-             |      AS w
-             |  FROM cq LEFT JOIN cp USING (b), tq, tp)
-             |SELECT fb.doc_id, count(*)::BIGINT AS n_feats,
-             |  sum(w.w)::BIGINT AS logratio_micro,
-             |  (sum(w.w) > 0) AS kept
-             |FROM fb JOIN w USING (b) GROUP BY 1""".stripMargin)),
+      Some(dsirNgramOracle)),
 
     // ---- streamed DSIR: the raw corpus arrives in three id-range
     //      folds, each appending its ADDITIVE <=m-row hashed-feature
@@ -2162,50 +2139,17 @@ object Curation extends QueryModule {
         val base = artifactPath(dir, "dsir_stream")
         graft.streaming.StreamingDsir.init(s, base)
         val docs = t(s, dir, "documents")
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingDsir.fold(s, base,
-            docs.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingDsir.fold(s, base, slice,
             "doc_id", "text", batchId = i, buckets = 1024)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingDsir.compact(s, base)
         }
         graft.streaming.StreamingDsir.weights(s, base, docs,
           docs.where(col("source") === "src0"), "doc_id", "text",
           buckets = 1024)
       },
-      Some("""WITH wd AS (
-             |  SELECT doc_id, source,
-             |    list_filter(string_split(text, ' '), w -> w <> '')
-             |      AS words
-             |  FROM documents),
-             |gr AS (
-             |  SELECT doc_id, source, unnest(words) AS g FROM wd
-             |  UNION ALL
-             |  SELECT doc_id, source,
-             |    unnest(list_transform(range(len(words) - 1),
-             |      i -> words[i+1] || ' ' || words[i+2])) AS g
-             |  FROM wd WHERE len(words) >= 2),
-             |fb AS MATERIALIZED (SELECT doc_id, source,
-             |    ('0x'||substr(md5(g),1,15))::BIGINT % 1024 AS b
-             |  FROM gr),
-             |cq AS MATERIALIZED (SELECT b, count(*)::BIGINT AS cq
-             |  FROM fb GROUP BY 1),
-             |cp AS (SELECT b, count(*)::BIGINT AS cp
-             |  FROM fb WHERE source = 'src0' GROUP BY 1),
-             |tq AS (SELECT coalesce(sum(cq), 0)::BIGINT AS tq FROM cq),
-             |tp AS (SELECT coalesce(sum(cp), 0)::BIGINT AS tp FROM cp),
-             |w AS (SELECT cq.b,
-             |    floor(1000000.0 * ln(
-             |      ((coalesce(cp.cp, 0) + 1) * (tq.tq + 1024))::DOUBLE
-             |      / ((cq.cq + 1) * (tp.tp + 1024))::DOUBLE))::BIGINT
-             |      AS w
-             |  FROM cq LEFT JOIN cp USING (b), tq, tp)
-             |SELECT fb.doc_id, count(*)::BIGINT AS n_feats,
-             |  sum(w.w)::BIGINT AS logratio_micro,
-             |  (sum(w.w) > 0) AS kept
-             |FROM fb JOIN w USING (b) GROUP BY 1""".stripMargin)),
+      Some(dsirNgramOracle)),
 
     // ---- DSIR resampling (the paper's actual draw): Gumbel-top-k
     //      over the importance ratios — sample ∝ exp(logratio) as the

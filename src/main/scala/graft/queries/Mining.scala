@@ -39,6 +39,21 @@ object Mining extends QueryModule {
       |n AS (SELECT doc_id, count(*)::BIGINT AS n FROM tk GROUP BY 1)"""
       .stripMargin
 
+  /** Shared by q_temperature_mix and q_temperature_mix_stream. */
+  private val temperatureMixOracle: String =
+    """WITH cnt AS (SELECT lang AS domain, count(*)::BIGINT AS n
+      |  FROM documents GROUP BY 1),
+      |mn AS (SELECT min(n)::BIGINT AS m FROM cnt),
+      |rated AS (SELECT domain,
+      |    floor(1000000.0 * sqrt(m::DOUBLE / n::DOUBLE))::BIGINT
+      |      AS rate_ppm
+      |  FROM cnt, mn)
+      |SELECT d.doc_id AS id, d.lang AS domain, r.rate_ppm
+      |FROM documents d JOIN rated r ON d.lang = r.domain
+      |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || ':'
+      |    || d.lang), 1, 15))::BIGINT
+      |  % 1000000007 % 1000000 < r.rate_ppm""".stripMargin
+
   def queries: Seq[GraftQuery] = Seq(
 
     // ---- prefix-filtered set-similarity self-join (AllPairs/PPJoin):
@@ -253,18 +268,7 @@ object Mining extends QueryModule {
     GraftQuery("q_temperature_mix",
       (s, dir) => graft.operators.Mixing.temperatureSample(
         t(s, dir, "documents"), "doc_id", "lang"),
-      Some("""WITH cnt AS (SELECT lang AS domain, count(*)::BIGINT AS n
-             |  FROM documents GROUP BY 1),
-             |mn AS (SELECT min(n)::BIGINT AS m FROM cnt),
-             |rated AS (SELECT domain,
-             |    floor(1000000.0 * sqrt(m::DOUBLE / n::DOUBLE))::BIGINT
-             |      AS rate_ppm
-             |  FROM cnt, mn)
-             |SELECT d.doc_id AS id, d.lang AS domain, r.rate_ppm
-             |FROM documents d JOIN rated r ON d.lang = r.domain
-             |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || ':'
-             |    || d.lang), 1, 15))::BIGINT
-             |  % 1000000007 % 1000000 < r.rate_ppm""".stripMargin)),
+      Some(temperatureMixOracle)),
 
     // ---- streamed temperature mixing: (domain, n) counts are
     //      ADDITIVE, so three id-range folds append <= |domains|-row
@@ -277,30 +281,16 @@ object Mining extends QueryModule {
         val base = artifactPath(dir, "tempmix_stream")
         graft.streaming.StreamingMixing.init(s, base)
         val docs = t(s, dir, "documents")
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingMixing.fold(s, base,
-            docs.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex) {
+          graft.streaming.StreamingMixing.fold(s, base, slice,
             "lang", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingMixing.compact(s, base)
         }
         graft.streaming.StreamingMixing.sample(s, base, docs,
           "doc_id", "lang")
       },
-      Some("""WITH cnt AS (SELECT lang AS domain, count(*)::BIGINT AS n
-             |  FROM documents GROUP BY 1),
-             |mn AS (SELECT min(n)::BIGINT AS m FROM cnt),
-             |rated AS (SELECT domain,
-             |    floor(1000000.0 * sqrt(m::DOUBLE / n::DOUBLE))::BIGINT
-             |      AS rate_ppm
-             |  FROM cnt, mn)
-             |SELECT d.doc_id AS id, d.lang AS domain, r.rate_ppm
-             |FROM documents d JOIN rated r ON d.lang = r.domain
-             |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || ':'
-             |    || d.lang), 1, 15))::BIGINT
-             |  % 1000000007 % 1000000 < r.rate_ppm""".stripMargin)),
+      Some(temperatureMixOracle)),
 
     // ---- exact integer water-filling of a 70% global token budget
     //      over per-language token counts: alloc = min(c, level) with

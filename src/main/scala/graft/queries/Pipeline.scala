@@ -127,6 +127,49 @@ object Pipeline extends QueryModule {
       |      AS batch_id
       |  FROM nz)""".stripMargin
 
+  /** Shared by q_winsorize and q_winsorize_stream (clamping everything the
+    * folds saw equals the batch operator). */
+  private val winsorizeOracle: String =
+    """WITH r AS (
+      |  SELECT event_id AS id, value AS v,
+      |    row_number() OVER (ORDER BY value, event_id) AS rnk,
+      |    count(*) OVER ()::BIGINT AS n
+      |  FROM events WHERE value IS NOT NULL),
+      |c AS (SELECT
+      |    min(CASE WHEN rnk = greatest(least(
+      |      (n * 10000 + 999999) // 1000000, n), 1)
+      |      THEN v END) AS lo_cut,
+      |    max(CASE WHEN rnk = greatest(least(
+      |      (n * 990000 + 999999) // 1000000, n), 1)
+      |      THEN v END) AS hi_cut
+      |  FROM r)
+      |SELECT r.id, r.v AS value, c.lo_cut, c.hi_cut,
+      |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
+      |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
+      |FROM r CROSS JOIN c""".stripMargin
+
+  /** Shared by q_winsorize_by_group and q_winsorize_by_group_stream. */
+  private val winsorizeByGroupOracle: String =
+    """WITH r AS (
+      |  SELECT event_id AS id, event_type AS grp, value AS v,
+      |    row_number() OVER (PARTITION BY event_type
+      |      ORDER BY value, event_id) AS rnk,
+      |    count(*) OVER (PARTITION BY event_type)::BIGINT AS n
+      |  FROM events WHERE value IS NOT NULL),
+      |c AS (SELECT grp,
+      |    min(CASE WHEN rnk = greatest(least(
+      |      (n * 50000 + 999999) // 1000000, n), 1)
+      |      THEN v END) AS lo_cut,
+      |    max(CASE WHEN rnk = greatest(least(
+      |      (n * 950000 + 999999) // 1000000, n), 1)
+      |      THEN v END) AS hi_cut
+      |  FROM r GROUP BY 1)
+      |SELECT r.id, r.grp AS "group", r.v AS value,
+      |  c.lo_cut, c.hi_cut,
+      |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
+      |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
+      |FROM r JOIN c USING (grp)""".stripMargin
+
   override val queries: Seq[GraftQuery] = Seq(
 
     // ---- purged temporal split: train before the 4/5 time cut, val
@@ -469,23 +512,7 @@ object Pipeline extends QueryModule {
       (s, dir) => graft.operators.Profiler.winsorize(
         t(s, dir, "events"), "event_id", "value",
         loPpm = 10000L, hiPpm = 990000L),
-      Some("""WITH r AS (
-             |  SELECT event_id AS id, value AS v,
-             |    row_number() OVER (ORDER BY value, event_id) AS rnk,
-             |    count(*) OVER ()::BIGINT AS n
-             |  FROM events WHERE value IS NOT NULL),
-             |c AS (SELECT
-             |    min(CASE WHEN rnk = greatest(least(
-             |      (n * 10000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS lo_cut,
-             |    max(CASE WHEN rnk = greatest(least(
-             |      (n * 990000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS hi_cut
-             |  FROM r)
-             |SELECT r.id, r.v AS value, c.lo_cut, c.hi_cut,
-             |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
-             |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
-             |FROM r CROSS JOIN c""".stripMargin)),
+      Some(winsorizeOracle)),
 
     // ---- per-GROUP winsorization: one exact rank-cut pair per event
     //      type (a global p95 calibrated on the majority type clips
@@ -497,25 +524,7 @@ object Pipeline extends QueryModule {
       (s, dir) => graft.operators.Profiler.winsorizeByGroup(
         t(s, dir, "events"), "event_id", "event_type", "value",
         loPpm = 50000L, hiPpm = 950000L),
-      Some("""WITH r AS (
-             |  SELECT event_id AS id, event_type AS grp, value AS v,
-             |    row_number() OVER (PARTITION BY event_type
-             |      ORDER BY value, event_id) AS rnk,
-             |    count(*) OVER (PARTITION BY event_type)::BIGINT AS n
-             |  FROM events WHERE value IS NOT NULL),
-             |c AS (SELECT grp,
-             |    min(CASE WHEN rnk = greatest(least(
-             |      (n * 50000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS lo_cut,
-             |    max(CASE WHEN rnk = greatest(least(
-             |      (n * 950000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS hi_cut
-             |  FROM r GROUP BY 1)
-             |SELECT r.id, r.grp AS "group", r.v AS value,
-             |  c.lo_cut, c.hi_cut,
-             |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
-             |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
-             |FROM r JOIN c USING (grp)""".stripMargin)),
+      Some(winsorizeByGroupOracle)),
 
     // ---- streamed winsorization: observations arrive in three
     //      id-range folds, each appending its ADDITIVE value
@@ -530,35 +539,16 @@ object Pipeline extends QueryModule {
         val base = artifactPath(dir, "wins_stream")
         graft.streaming.StreamingWinsorize.init(s, base)
         val ev = t(s, dir, "events")
-        val maxId = ev.agg(max(col("event_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingWinsorize.fold(s, base,
-            ev.where(col("event_id") >= i * maxId / 3 &&
-              col("event_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(ev, "event_id").zipWithIndex) {
+          graft.streaming.StreamingWinsorize.fold(s, base, slice,
             "value", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingWinsorize.compact(s, base)
         }
         graft.streaming.StreamingWinsorize.winsorized(s, base, ev,
           "event_id", "value", loPpm = 10000L, hiPpm = 990000L)
       },
-      Some("""WITH r AS (
-             |  SELECT event_id AS id, value AS v,
-             |    row_number() OVER (ORDER BY value, event_id) AS rnk,
-             |    count(*) OVER ()::BIGINT AS n
-             |  FROM events WHERE value IS NOT NULL),
-             |c AS (SELECT
-             |    min(CASE WHEN rnk = greatest(least(
-             |      (n * 10000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS lo_cut,
-             |    max(CASE WHEN rnk = greatest(least(
-             |      (n * 990000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS hi_cut
-             |  FROM r)
-             |SELECT r.id, r.v AS value, c.lo_cut, c.hi_cut,
-             |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
-             |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
-             |FROM r CROSS JOIN c""".stripMargin)),
+      Some(winsorizeOracle)),
 
     // ---- streamed PER-GROUP winsorization (r14 — the streamed-grouped
     //      cell of the winsorize matrix): same three id-range folds,
@@ -572,38 +562,17 @@ object Pipeline extends QueryModule {
         val base = artifactPath(dir, "winsg_stream")
         graft.streaming.StreamingWinsorize.init(s, base)
         val ev = t(s, dir, "events")
-        val maxId = ev.agg(max(col("event_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
-          graft.streaming.StreamingWinsorize.foldByGroup(s, base,
-            ev.where(col("event_id") >= i * maxId / 3 &&
-              col("event_id") < (i + 1) * maxId / 3),
+        for ((slice, i) <- Tables.thirds(ev, "event_id").zipWithIndex) {
+          graft.streaming.StreamingWinsorize.foldByGroup(s, base, slice,
             "event_type", "value", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingWinsorize.compactByGroup(s, base)
         }
         graft.streaming.StreamingWinsorize.winsorizedByGroup(s, base,
           ev, "event_id", "event_type", "value",
           loPpm = 50000L, hiPpm = 950000L)
       },
-      Some("""WITH r AS (
-             |  SELECT event_id AS id, event_type AS grp, value AS v,
-             |    row_number() OVER (PARTITION BY event_type
-             |      ORDER BY value, event_id) AS rnk,
-             |    count(*) OVER (PARTITION BY event_type)::BIGINT AS n
-             |  FROM events WHERE value IS NOT NULL),
-             |c AS (SELECT grp,
-             |    min(CASE WHEN rnk = greatest(least(
-             |      (n * 50000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS lo_cut,
-             |    max(CASE WHEN rnk = greatest(least(
-             |      (n * 950000 + 999999) // 1000000, n), 1)
-             |      THEN v END) AS hi_cut
-             |  FROM r GROUP BY 1)
-             |SELECT r.id, r.grp AS "group", r.v AS value,
-             |  c.lo_cut, c.hi_cut,
-             |  least(greatest(r.v, c.lo_cut), c.hi_cut) AS winsorized,
-             |  (r.v < c.lo_cut OR r.v > c.hi_cut)::BIGINT AS clipped
-             |FROM r JOIN c USING (grp)""".stripMargin)),
+      Some(winsorizeByGroupOracle)),
 
     // ---- burst suppression: drop events repeating within 1 HOUR of
     //      the PREVIOUS raw event per (user, type) — retry/duplicate

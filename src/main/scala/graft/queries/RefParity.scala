@@ -62,6 +62,15 @@ object RefParity extends QueryModule {
       |FROM agg CROSS JOIN (VALUES ('max', 150)) AS l(limit_name, limit_value)
       |""".stripMargin
 
+  /** Shared by q_range_join and q_range_join_binned (binning changes the
+    * plan, not the answer). */
+  private val rangeJoinOracle: String =
+    """SELECT band, count(*) AS n, round(avg(p_retailprice), 2) AS avg_price
+      |FROM part JOIN (VALUES ('low', 900.0, 940.0), ('mid', 940.0, 970.0),
+      |  ('high', 970.0, 1000.0)) AS b(band, lo, hi)
+      |ON p_retailprice >= lo AND p_retailprice < hi
+      |GROUP BY band""".stripMargin
+
   override val queries: Seq[GraftQuery] = Seq(
 
     // ---- P1: projection + scalar funcs (MainApp.java:41-42 shape) ----
@@ -386,11 +395,7 @@ object RefParity extends QueryModule {
             count(lit(1)).as("n"),
             round(avg($"p_retailprice"), 2).as("avg_price"))
       },
-      Some("""SELECT band, count(*) AS n, round(avg(p_retailprice), 2) AS avg_price
-             |FROM part JOIN (VALUES ('low', 900.0, 940.0), ('mid', 940.0, 970.0),
-             |  ('high', 970.0, 1000.0)) AS b(band, lo, hi)
-             |ON p_retailprice >= lo AND p_retailprice < hi
-             |GROUP BY band""".stripMargin)),
+      Some(rangeJoinOracle)),
 
     // ---- binned range join (graft.operators.RangeJoin): the big-big
     //      scale path — equi-join on floor(value/width) bins + residual
@@ -409,11 +414,7 @@ object RefParity extends QueryModule {
             count(lit(1)).as("n"),
             round(avg($"p_retailprice"), 2).as("avg_price"))
       },
-      Some("""SELECT band, count(*) AS n, round(avg(p_retailprice), 2) AS avg_price
-             |FROM part JOIN (VALUES ('low', 900.0, 940.0), ('mid', 940.0, 970.0),
-             |  ('high', 970.0, 1000.0)) AS b(band, lo, hi)
-             |ON p_retailprice >= lo AND p_retailprice < hi
-             |GROUP BY band""".stripMargin)),
+      Some(rangeJoinOracle)),
 
     // ---- interval OVERLAP join (big-big, binned, exactly-once via the
     //      canonical overlap-start bin): same-(supplier, part) shipments
@@ -656,19 +657,8 @@ object RefParity extends QueryModule {
     //      emit only when a key's over/under-limit state flips; first
     //      observation always emits). LAG over the per-window alert state. ----
     GraftQuery("q_edge_trigger_batch",
-      (s, dir) => {
-        import s.implicits._
-        val agg = t(s, dir, "events")
-          .groupBy($"user_id",
-            (floor(unix_timestamp($"ts") / 300) * 300).cast("long").as("w"))
-          .agg(sum($"value").as("traffic"))
-        val st = agg.select($"user_id", $"w",
-          (round($"traffic", 2) > 150).as("alert"))
-        val win = Window.partitionBy($"user_id").orderBy($"w")
-        st.withColumn("prev", lag($"alert", 1).over(win))
-          .filter($"prev".isNull || $"alert" =!= $"prev")
-          .select($"user_id", $"w".as("window_start"), $"alert")
-      },
+      (s, dir) => graft.streaming.TrafficMonitor.batchEdgeTrigger(
+        t(s, dir, "events"), 150.0),
       Some("""WITH agg AS (
              |  SELECT user_id, CAST(floor(epoch(ts)/300)*300 AS BIGINT) AS w,
              |         sum(value) AS traffic

@@ -223,6 +223,20 @@ object UrlCuration extends QueryModule {
        |  FROM p1 JOIN b ON p1.doc_id = b.doc_id)""".stripMargin
   }
 
+  /** Shared by q_domain_quality_gate and its _stream and _files twins. */
+  private val domainQualityGateOracle: String =
+    s"""WITH $parsePslCte,
+      |nw AS (SELECT doc_id, len(list_filter(string_split(text, ' '),
+      |  w -> w <> ''))::BIGINT AS n_words FROM documents),
+      |g AS (SELECT pu.registrable, count(*)::BIGINT AS n_docs,
+      |        sum(nw.n_words)::BIGINT AS sum_words
+      |      FROM pu JOIN nw USING (doc_id) GROUP BY 1)
+      |SELECT registrable, n_docs, sum_words,
+      |  (sum_words * 1000 // n_docs)::BIGINT AS mean_words_milli,
+      |  (n_docs >= 3 AND (sum_words * 1000 // n_docs) >= 54000)
+      |    AS kept
+      |FROM g""".stripMargin
+
   override val queries: Seq[GraftQuery] = Seq(
 
     // ---- parse + canonicalize + registrable domain: pure codegen'd
@@ -269,17 +283,7 @@ object UrlCuration extends QueryModule {
           .select(col("doc_id"), expr(urlExpr).as("url"), col("text")),
         "url", "text", minDocs = 3L, minMeanWordsMilli = 54000L,
         rules = Some(graft.operators.UrlCuration.syntheticPsl(s))),
-      Some(s"""WITH $parsePslCte,
-             |nw AS (SELECT doc_id, len(list_filter(string_split(text, ' '),
-             |  w -> w <> ''))::BIGINT AS n_words FROM documents),
-             |g AS (SELECT pu.registrable, count(*)::BIGINT AS n_docs,
-             |        sum(nw.n_words)::BIGINT AS sum_words
-             |      FROM pu JOIN nw USING (doc_id) GROUP BY 1)
-             |SELECT registrable, n_docs, sum_words,
-             |  (sum_words * 1000 // n_docs)::BIGINT AS mean_words_milli,
-             |  (n_docs >= 3 AND (sum_words * 1000 // n_docs) >= 54000)
-             |    AS kept
-             |FROM g""".stripMargin)),
+      Some(domainQualityGateOracle)),
 
     // ---- streamed domain-quality gate: documents arrive over three
     //      micro-batches, resolution + word count run map-side, state
@@ -322,17 +326,7 @@ object UrlCuration extends QueryModule {
           .select(col("registrable"), col("n_docs"), col("sum_words"),
             col("mean_words_milli"), col("kept"))
       },
-      Some(s"""WITH $parsePslCte,
-             |nw AS (SELECT doc_id, len(list_filter(string_split(text, ' '),
-             |  w -> w <> ''))::BIGINT AS n_words FROM documents),
-             |g AS (SELECT pu.registrable, count(*)::BIGINT AS n_docs,
-             |        sum(nw.n_words)::BIGINT AS sum_words
-             |      FROM pu JOIN nw USING (doc_id) GROUP BY 1)
-             |SELECT registrable, n_docs, sum_words,
-             |  (sum_words * 1000 // n_docs)::BIGINT AS mean_words_milli,
-             |  (n_docs >= 3 AND (sum_words * 1000 // n_docs) >= 54000)
-             |    AS kept
-             |FROM g""".stripMargin)),
+      Some(domainQualityGateOracle)),
 
     // ---- FILE-SOURCE streamed domain-quality gate: the same gate
     //      driven by spark.readStream over parquet FILES (one file per
@@ -355,11 +349,9 @@ object UrlCuration extends QueryModule {
         fs.delete(new org.apache.hadoop.fs.Path(root), true)
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), expr(urlExpr).as("url"), col("text"))
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        def writeChunk(i: Long): Unit = docs
-          .where(col("doc_id") >= i * maxId / 3 &&
-            col("doc_id") < (i + 1) * maxId / 3)
-          .coalesce(1).write.mode("append").parquet(in)
+        val chunks = Tables.thirds(docs, "doc_id")
+        def writeChunk(i: Int): Unit =
+          chunks(i).coalesce(1).write.mode("append").parquet(in)
         val out = s"$root/out"
         // r15: stateful stream — state-store task count sized by
         // StreamConf (state volume), not the batch shuffle width
@@ -393,17 +385,7 @@ object UrlCuration extends QueryModule {
           .select(col("registrable"), col("n_docs"), col("sum_words"),
             col("mean_words_milli"), col("kept"))
       },
-      Some(s"""WITH $parsePslCte,
-             |nw AS (SELECT doc_id, len(list_filter(string_split(text, ' '),
-             |  w -> w <> ''))::BIGINT AS n_words FROM documents),
-             |g AS (SELECT pu.registrable, count(*)::BIGINT AS n_docs,
-             |        sum(nw.n_words)::BIGINT AS sum_words
-             |      FROM pu JOIN nw USING (doc_id) GROUP BY 1)
-             |SELECT registrable, n_docs, sum_words,
-             |  (sum_words * 1000 // n_docs)::BIGINT AS mean_words_milli,
-             |  (n_docs >= 3 AND (sum_words * 1000 // n_docs) >= 54000)
-             |    AS kept
-             |FROM g""".stripMargin)),
+      Some(domainQualityGateOracle)),
 
     // ---- robots.txt gate (RFC 9309): specific-agent group override,
     //      longest-octet-match precedence with allow-on-tie, `*`

@@ -54,6 +54,67 @@ object Warehouse extends QueryModule {
       |    AS psi_term_pico
       |FROM sh""".stripMargin
 
+  /** Shared by q_category_drift and q_category_drift_stream. */
+  private val categoryDriftOracle: String =
+    """WITH a AS (SELECT source AS category,
+      |    count(*)::BIGINT AS n_a
+      |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
+      |b AS (SELECT source AS category, count(*)::BIGINT AS n_b
+      |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
+      |j AS (SELECT category, coalesce(n_a, 0) AS n_a,
+      |    coalesce(n_b, 0) AS n_b
+      |  FROM a FULL OUTER JOIN b USING (category)),
+      |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
+      |      FROM j)
+      |SELECT category, n_a, n_b,
+      |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
+      |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
+      |  abs(n_a * 1000000 // greatest(ta, 1)
+      |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
+      |FROM j CROSS JOIN t""".stripMargin
+
+  /** Shared by q_numeric_drift and q_numeric_drift_stream. */
+  private val numericDriftOracle: String =
+    """WITH a AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
+      |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
+      |    count(*)::BIGINT AS n_a
+      |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
+      |b AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
+      |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
+      |    count(*)::BIGINT AS n_b
+      |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
+      |j AS (SELECT bin, coalesce(n_a, 0) AS n_a,
+      |    coalesce(n_b, 0) AS n_b
+      |  FROM a FULL OUTER JOIN b USING (bin)),
+      |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
+      |      FROM j)
+      |SELECT bin, n_a, n_b,
+      |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
+      |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
+      |  abs(n_a * 1000000 // greatest(ta, 1)
+      |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
+      |FROM j CROSS JOIN t""".stripMargin
+
+  /** Shared by q_entity_resolution and q_entity_resolution_stream. */
+  private val entityResolutionOracle: String =
+    """WITH RECURSIVE c AS (
+      |  SELECT c_custkey, c_name FROM customer WHERE c_custkey % 7 = 0),
+      |p AS (SELECT a.c_custkey AS doc_a, b.c_custkey AS doc_b
+      |  FROM c a JOIN c b ON a.c_custkey < b.c_custkey
+      |  WHERE levenshtein(a.c_name, b.c_name) <= 2),
+      |e AS (SELECT doc_a AS a, doc_b AS b FROM p
+      |      UNION ALL SELECT doc_b, doc_a FROM p),
+      |walk(id, lab) AS (
+      |  SELECT a, a FROM e
+      |  UNION
+      |  SELECT e.a, walk.lab FROM e JOIN walk ON walk.id = e.b),
+      |comp AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id),
+      |g AS (SELECT c.c_custkey,
+      |    coalesce(comp.cluster_id, c.c_custkey) AS entity_id
+      |  FROM c LEFT JOIN comp ON c.c_custkey = comp.id)
+      |SELECT g.c_custkey, g.entity_id, cn.c_name AS canonical_name
+      |FROM g JOIN c cn ON cn.c_custkey = g.entity_id""".stripMargin
+
   override val queries: Seq[GraftQuery] = Seq(
 
     // ---- k-anonymity release gate: rows whose (segment, nation) group
@@ -235,22 +296,7 @@ object Warehouse extends QueryModule {
           docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 === 1), "source")
       },
-      Some("""WITH a AS (SELECT source AS category,
-             |    count(*)::BIGINT AS n_a
-             |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-             |b AS (SELECT source AS category, count(*)::BIGINT AS n_b
-             |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-             |j AS (SELECT category, coalesce(n_a, 0) AS n_a,
-             |    coalesce(n_b, 0) AS n_b
-             |  FROM a FULL OUTER JOIN b USING (category)),
-             |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
-             |      FROM j)
-             |SELECT category, n_a, n_b,
-             |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
-             |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
-             |  abs(n_a * 1000000 // greatest(ta, 1)
-             |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
-             |FROM j CROSS JOIN t""".stripMargin)),
+      Some(categoryDriftOracle)),
 
     // ---- numeric drift: the same TV machinery over sign-safe value
     //      bins — a shifted length/score distribution caught without
@@ -263,25 +309,7 @@ object Warehouse extends QueryModule {
           docs.where(col("doc_id") % 2 === 1), "n_chars",
           binWidth = 64L)
       },
-      Some("""WITH a AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
-             |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
-             |    count(*)::BIGINT AS n_a
-             |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-             |b AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
-             |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
-             |    count(*)::BIGINT AS n_b
-             |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-             |j AS (SELECT bin, coalesce(n_a, 0) AS n_a,
-             |    coalesce(n_b, 0) AS n_b
-             |  FROM a FULL OUTER JOIN b USING (bin)),
-             |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
-             |      FROM j)
-             |SELECT bin, n_a, n_b,
-             |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
-             |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
-             |  abs(n_a * 1000000 // greatest(ta, 1)
-             |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
-             |FROM j CROSS JOIN t""".stripMargin)),
+      Some(numericDriftOracle)),
 
     // ---- PSI drift: the log-weighted sibling of the TV monitor — a
     //      category going 1% → 0.1% screams where TV barely moves;
@@ -340,12 +368,9 @@ object Warehouse extends QueryModule {
         val base = artifactPath(dir, "psi_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
-        val live = docs.where(col("doc_id") % 2 === 1)
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L)
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex)
           graft.streaming.StreamingDrift.fold(s, base,
-            live.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+            slice.where(col("doc_id") % 2 === 1),
             "source", batchId = i)
         graft.streaming.StreamingDrift.reportPsi(s, base,
           docs.where(col("doc_id") % 2 === 0), "source")
@@ -363,35 +388,17 @@ object Warehouse extends QueryModule {
         val base = artifactPath(dir, "drift_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
-        val live = docs.where(col("doc_id") % 2 === 1)
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L) {
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex) {
           graft.streaming.StreamingDrift.fold(s, base,
-            live.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+            slice.where(col("doc_id") % 2 === 1),
             "source", batchId = i)
-          if (i == 1L) // mid-run compaction is answer-preserving
+          if (i == 1) // mid-run compaction is answer-preserving
             graft.streaming.StreamingDrift.compact(s, base)
         }
         graft.streaming.StreamingDrift.report(s, base,
           docs.where(col("doc_id") % 2 === 0), "source")
       },
-      Some("""WITH a AS (SELECT source AS category,
-             |    count(*)::BIGINT AS n_a
-             |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-             |b AS (SELECT source AS category, count(*)::BIGINT AS n_b
-             |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-             |j AS (SELECT category, coalesce(n_a, 0) AS n_a,
-             |    coalesce(n_b, 0) AS n_b
-             |  FROM a FULL OUTER JOIN b USING (category)),
-             |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
-             |      FROM j)
-             |SELECT category, n_a, n_b,
-             |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
-             |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
-             |  abs(n_a * 1000000 // greatest(ta, 1)
-             |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
-             |FROM j CROSS JOIN t""".stripMargin)),
+      Some(categoryDriftOracle)),
 
     // ---- streamed numeric drift: same additive fold over sign-safe
     //      value bins (bin ids stringified into the shared category
@@ -402,35 +409,14 @@ object Warehouse extends QueryModule {
         val base = artifactPath(dir, "ndrift_stream")
         graft.streaming.StreamingDrift.init(s, base)
         val docs = t(s, dir, "documents")
-        val live = docs.where(col("doc_id") % 2 === 1)
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-        for (i <- 0L until 3L)
+        for ((slice, i) <- Tables.thirds(docs, "doc_id").zipWithIndex)
           graft.streaming.StreamingDrift.foldNumeric(s, base,
-            live.where(col("doc_id") >= i * maxId / 3 &&
-              col("doc_id") < (i + 1) * maxId / 3),
+            slice.where(col("doc_id") % 2 === 1),
             "n_chars", binWidth = 64L, batchId = i)
         graft.streaming.StreamingDrift.reportNumeric(s, base,
           docs.where(col("doc_id") % 2 === 0), "n_chars", binWidth = 64L)
       },
-      Some("""WITH a AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
-             |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
-             |    count(*)::BIGINT AS n_a
-             |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-             |b AS (SELECT ((CASE WHEN n_chars < 0 THEN -1 ELSE 1
-             |      END) * (abs(n_chars) // 64))::BIGINT AS bin,
-             |    count(*)::BIGINT AS n_b
-             |  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-             |j AS (SELECT bin, coalesce(n_a, 0) AS n_a,
-             |    coalesce(n_b, 0) AS n_b
-             |  FROM a FULL OUTER JOIN b USING (bin)),
-             |t AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb
-             |      FROM j)
-             |SELECT bin, n_a, n_b,
-             |  (n_a * 1000000 // greatest(ta, 1))::BIGINT AS share_a_ppm,
-             |  (n_b * 1000000 // greatest(tb, 1))::BIGINT AS share_b_ppm,
-             |  abs(n_a * 1000000 // greatest(ta, 1)
-             |    - n_b * 1000000 // greatest(tb, 1))::BIGINT AS gap_ppm
-             |FROM j CROSS JOIN t""".stripMargin)),
+      Some(numericDriftOracle)),
 
     // ---- blocking-quality metrics for BOTH edit-distance blockers:
     // reduction ratio + pair completeness over the same bounded slice
@@ -576,23 +562,7 @@ object Warehouse extends QueryModule {
             col("c_name").as("canonical_name")), Seq("entity_id"))
           .select(col("c_custkey"), col("entity_id"), col("canonical_name"))
       },
-      Some("""WITH RECURSIVE c AS (
-             |  SELECT c_custkey, c_name FROM customer WHERE c_custkey % 7 = 0),
-             |p AS (SELECT a.c_custkey AS doc_a, b.c_custkey AS doc_b
-             |  FROM c a JOIN c b ON a.c_custkey < b.c_custkey
-             |  WHERE levenshtein(a.c_name, b.c_name) <= 2),
-             |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-             |      UNION ALL SELECT doc_b, doc_a FROM p),
-             |walk(id, lab) AS (
-             |  SELECT a, a FROM e
-             |  UNION
-             |  SELECT e.a, walk.lab FROM e JOIN walk ON walk.id = e.b),
-             |comp AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id),
-             |g AS (SELECT c.c_custkey,
-             |    coalesce(comp.cluster_id, c.c_custkey) AS entity_id
-             |  FROM c LEFT JOIN comp ON c.c_custkey = comp.id)
-             |SELECT g.c_custkey, g.entity_id, cn.c_name AS canonical_name
-             |FROM g JOIN c cn ON cn.c_custkey = g.entity_id""".stripMargin)),
+      Some(entityResolutionOracle)),
 
     // ---- STREAMING entity resolution twin: the same corpus folded in
     // three custkey-hash micro-batches through the incremental artifact
@@ -615,23 +585,7 @@ object Warehouse extends QueryModule {
           .select(col("id").as("c_custkey"), col("entity_id"),
             col("canonical_name"))
       },
-      Some("""WITH RECURSIVE c AS (
-             |  SELECT c_custkey, c_name FROM customer WHERE c_custkey % 7 = 0),
-             |p AS (SELECT a.c_custkey AS doc_a, b.c_custkey AS doc_b
-             |  FROM c a JOIN c b ON a.c_custkey < b.c_custkey
-             |  WHERE levenshtein(a.c_name, b.c_name) <= 2),
-             |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-             |      UNION ALL SELECT doc_b, doc_a FROM p),
-             |walk(id, lab) AS (
-             |  SELECT a, a FROM e
-             |  UNION
-             |  SELECT e.a, walk.lab FROM e JOIN walk ON walk.id = e.b),
-             |comp AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id),
-             |g AS (SELECT c.c_custkey,
-             |    coalesce(comp.cluster_id, c.c_custkey) AS entity_id
-             |  FROM c LEFT JOIN comp ON c.c_custkey = comp.id)
-             |SELECT g.c_custkey, g.entity_id, cn.c_name AS canonical_name
-             |FROM g JOIN c cn ON cn.c_custkey = g.entity_id""".stripMargin)),
+      Some(entityResolutionOracle)),
 
     // ---- survivorship / golden record: q_entity_resolution's clusters
     //      collapsed to ONE record per entity under explicit rules —

@@ -12,22 +12,18 @@ import org.apache.spark.sql.SparkSession
   * the batch side nothing right-sizes this at runtime (guide §2: partition
   * counts must follow the data, not a constant tuned elsewhere).
   *
-  * State-store parallelism is therefore a STATE-volume parameter, not a
-  * core-count parameter: size it to expected state bytes / target
-  * per-store size via `spark.graft.streaming.statePartitions`. The
-  * default, max(1, defaultParallelism / 8), keeps a fraction of the
-  * compute parallelism — enough stores that a growing key space spreads,
-  * without running cores-many near-empty state tasks per micro-batch
-  * (measured at sf0.1 / local[32]: q_twap_stream's stateful stages ran
-  * 32 tasks of ~1.2 s state-store lifecycle each on KB of state; at 4
-  * partitions the same stages run ~0.17 s tasks).
+  * State-store parallelism is therefore set apart from the batch shuffle
+  * width: max(1, defaultParallelism / 8) keeps a fraction of the compute
+  * parallelism — enough stores that a growing key space spreads, without
+  * running cores-many near-empty state tasks per micro-batch (measured at
+  * sf0.1 / local[32]: q_twap_stream's stateful stages ran 32 tasks of
+  * ~1.2 s state-store lifecycle each on KB of state; at 4 partitions the
+  * same stages run ~0.17 s tasks).
   */
 object StreamConf {
 
   def statePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .flatMap(_.trim.toIntOption).filter(_ >= 1)
-      .getOrElse(math.max(1, spark.sparkContext.defaultParallelism / 8))
+    math.max(1, spark.sparkContext.defaultParallelism / 8)
 
   /** Run `body` (a streaming query's full start→drain→stop lifecycle)
     * with `spark.sql.shuffle.partitions` set to [[statePartitions]],

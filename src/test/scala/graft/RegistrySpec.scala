@@ -20,6 +20,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("every streamed twin q_x_stream carries q_x's oracle verbatim " +
+      "(a stream is correct when it returns what its batch query returns)") {
+    val qs = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql
+    val pairs = qs.toSeq.sorted.filter(_.endsWith("_stream"))
+      .map(n => n -> n.stripSuffix("_stream")).filter(p => qs(p._2))
+    assert(pairs.size >= 19, s"streamed twins with a registered batch query: $pairs")
+    val off = pairs.filter { case (stream, batch) =>
+      !oracles.contains(batch) || oracles.get(stream) != oracles.get(batch) }
+    assert(off.isEmpty, s"streamed twins without their batch query's oracle: $off")
+  }
+
   test("registry is large and mostly oracled (the coverage floor " +
       "cannot silently regress)") {
     val n = SparkEntry.queries.size

@@ -8,6 +8,14 @@ class StreamingDedupSpec extends SparkSpec {
 
   private val base = (1 to 40).map(i => s"tok$i").mkString(" ")
 
+  /** RocksDB-backed streaming state, for `spark.sql.streaming.stateStore.
+    * providerClass`: the default HDFS-backed store keeps every key of
+    * every stateful operator on the executor heap, while RocksDB spills
+    * to local disk with bounded memory. It measured slower on the traffic
+    * monitor's tiny state, so no session sets it by default. */
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   test("a near-identical later document is flagged against the first arrival") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -96,7 +104,7 @@ class StreamingDedupSpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     // provider is read at query start; scope it to this test
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      graft.GraftSession.RocksDbProvider)
+      RocksDbProvider)
     try {
       val in = MemoryStream[(Long, String)]
       val q = StreamingDedup.nearDupCandidates(in.toDF().toDF("doc_id", "text"))
